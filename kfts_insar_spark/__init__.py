@@ -18,6 +18,12 @@ Layout
 - sources/       snapshot table (Iceberg-semantics over Parquet), readers
 - plans/         relational query builders mirroring SURVEY.md §2 operators
 - streaming/     structured-streaming ingest + stateful gap-fill
+- zipcache.py    cheap per-task import-cache invalidation in Python workers
 """
 
+from .zipcache import install as _install_zipcache
+
 __version__ = "0.1.0"
+
+# Runs in every Python worker that unpickles an engine UDF (see zipcache).
+_install_zipcache()

@@ -555,7 +555,7 @@ def decode_ints_lockstep(datas: list[bytes], ns: np.ndarray) -> np.ndarray:
     # Fixed-width fields need no per-index walk at all: delta j of stream c
     # sits at bit 70 + j*w_c, so EVERY delta of every stream gathers in one
     # call (the previous per-point-index loop paid ~10 numpy dispatches per
-    # grid index). Sliced so the (points, width) gather temp stays bounded.
+    # grid index); its temporaries are O(total points), in one shot.
     cnt = np.maximum(ns - 1, 0)
     P = int(cnt.sum())
     d = np.zeros((C, max(max_n, 1)), dtype=np.int64)

@@ -271,7 +271,7 @@ def kalman_direct_batch(
         C = Cbuf[:, :n]
         np.einsum("l,bln->bn", b, P[:, :L_live, :n], out=C)  # cov(new, state)
         v_new = np.einsum("l,blm,m->b", b, P[:, :L_live, :L_live], b) + cfg.add_err
-        np.matmul(X[:, :L_live], b, out=X[:, n])
+        np.einsum("bl,l->b", X[:, :L_live], b, out=X[:, n])
         if cfg.m_err:
             dl = np.arange(L_live)
             P[:, dl, dl] += cfg.m_err

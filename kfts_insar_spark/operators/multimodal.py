@@ -456,6 +456,7 @@ def frame_sample(
                 pdf["doc_id"], pdf["payload"], pdf["duration_ms"]
             ):
                 buf = bytes(payload)
+                row_start = len(out_doc)  # rollback point for this row
                 # Samples map to source frames through the stream's native
                 # interval (duration / frame count) — every_ms ≠ the native
                 # spacing skips or repeats frames, exactly like ffmpeg -r
@@ -529,13 +530,12 @@ def frame_sample(
                                 max(1, dur // n_total) if dur > 0 else stride
                             )
                             k = 0
-                            # drop anything emitted for this doc so far
-                            while out_doc and out_doc[-1] == doc_id:
-                                for lst in (
-                                    out_doc, out_idx, out_ts, out_pay,
-                                    out_w, out_h, segs, sizes,
-                                ):
-                                    lst.pop()
+                            # drop anything emitted for this row so far
+                            for lst in (
+                                out_doc, out_idx, out_ts, out_pay,
+                                out_w, out_h, segs, sizes,
+                            ):
+                                del lst[row_start:]
                             continue
                         raise
                     out_doc.append(doc_id)

@@ -13,6 +13,9 @@ Reference analogue: the MPI rank split in /root/reference/kf/readinput.py:166-21
 from __future__ import annotations
 
 import os
+import re
+import shutil
+import subprocess
 
 from pyspark.sql import SparkSession
 
@@ -42,25 +45,50 @@ public class NoPermLocalFileSystem extends RawLocalFileSystem {
         // no-op: rely on the process umask (no native lib -> the default
         // implementation forks a `chmod` shell process per path)
     }
+
+    // lets `java --dry-run` load (and not run) this class as a probe
+    public static void main(String[] args) {}
 }
 """
+
+
+def _spark_java() -> str | None:
+    """The java binary spark-submit launches (same rule as spark-class)."""
+    home = os.environ.get("JAVA_HOME")
+    return os.path.join(home, "bin", "java") if home else shutil.which("java")
+
+
+def _java_major(java: str) -> int:
+    out = subprocess.run(
+        [java, "-version"], check=True, capture_output=True, text=True, timeout=60
+    ).stderr
+    major, minor = re.search(r'version "(\d+)(?:\.(\d+))?', out).groups()
+    return int(minor) if major == "1" else int(major)  # "1.8.0" → 8
 
 
 def _no_chmod_fs() -> tuple[str, str | None]:
     """(fs.file.impl class name, extra driver classpath or None).
 
-    Compiles the subclass once into a cached jar; any failure (no javac,
-    no hadoop jar, read-only cache) falls back to the stock
-    RawLocalFileSystem, which is correct but pays the chmod forks."""
+    Compiles the subclass once into a cached jar, targeting the major
+    version of the JVM Spark will run, and probe-loads it in that JVM
+    before it is cached: a class file that compiles but cannot load would
+    otherwise fail at the first file:// access and break every local
+    write. Any failure (no JDK, no hadoop jar, read-only cache, probe
+    failure) falls back to the stock RawLocalFileSystem, which is correct
+    but pays the chmod forks."""
     import glob
     import hashlib
-    import shutil
-    import subprocess
     import tempfile
+
+    from pyspark.find_spark_home import _find_spark_home
 
     fallback = ("org.apache.hadoop.fs.RawLocalFileSystem", None)
     try:
-        tag = hashlib.md5(_NOCHMOD_SRC.encode()).hexdigest()[:10]
+        java = _spark_java()
+        if java is None:
+            return fallback
+        release = _java_major(java)
+        tag = hashlib.md5(f"{_NOCHMOD_SRC}{release}".encode()).hexdigest()[:10]
         cache = os.path.join(
             os.path.expanduser("~"), ".cache", "kfts_insar_spark"
         )
@@ -70,15 +98,8 @@ def _no_chmod_fs() -> tuple[str, str | None]:
             jartool = shutil.which("jar")
             if javac is None or jartool is None:
                 return fallback
-            import pyspark
-
-            cps = glob.glob(
-                os.path.join(
-                    os.path.dirname(pyspark.__file__),
-                    "jars",
-                    "hadoop-client-api-*.jar",
-                )
-            )
+            spark_jars = os.path.join(_find_spark_home(), "jars")
+            cps = glob.glob(os.path.join(spark_jars, "hadoop-client-api-*.jar"))
             if not cps:
                 return fallback
             os.makedirs(cache, exist_ok=True)
@@ -88,7 +109,7 @@ def _no_chmod_fs() -> tuple[str, str | None]:
                 with open(src, "w") as f:
                     f.write(_NOCHMOD_SRC)
                 subprocess.run(
-                    [javac, "-cp", cps[0], src],
+                    [javac, "--release", str(release), "-cp", cps[0], src],
                     check=True,
                     capture_output=True,
                     timeout=120,
@@ -96,6 +117,15 @@ def _no_chmod_fs() -> tuple[str, str | None]:
                 tmp_jar = os.path.join(td, "nochmod.jar")
                 subprocess.run(
                     [jartool, "cf", tmp_jar, "-C", td, "kfts"],
+                    check=True,
+                    capture_output=True,
+                    timeout=120,
+                )
+                subprocess.run(
+                    [
+                        java, "-cp", os.pathsep.join([tmp_jar, cps[0]]),
+                        "--dry-run", "kfts.NoPermLocalFileSystem",
+                    ],
                     check=True,
                     capture_output=True,
                     timeout=120,

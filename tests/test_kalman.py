@@ -64,6 +64,19 @@ def test_batch_kernel_matches_dense_oracle():
         np.testing.assert_allclose(batch["m"][b], ora["m"], rtol=1e-9, atol=1e-9)
 
 
+def test_batch_output_independent_of_batch_size():
+    """Each doc's result is bit-identical however the docs are batched: cold
+    and resumed runs batch docs differently, so a reduction whose summation
+    order depends on the row count (a BLAS gemv) drifts them apart."""
+    _, y, _, _ = make_series(64)
+    full = kalman_direct_batch(y, T, CFG)
+    for size in (1, 3, 7, 16, 33):
+        parts = [kalman_direct_batch(y[i : i + size], T, CFG) for i in range(0, 64, size)]
+        for key in ("phase", "std", "innov", "m", "P"):
+            got = np.concatenate([p[key] for p in parts])
+            assert got.tobytes() == full[key].tobytes(), (size, key)
+
+
 def test_recovers_truth_and_params():
     """Prediction/update correctness: recovered phases track truth; final
     params close to generating params (the functional-model fit check)."""

@@ -332,3 +332,35 @@ def test_frame_sample_long_stream_uniform_and_ragged(spark):
     assert list(g["frame_idx"]) == [0, 1, 2]
     shapes = [decode_ppm(bytes(p))[0].shape for p in g["payload"]]
     assert shapes == [(h, w, 3), (h // 2, w // 2, 3), (h, w, 3)]
+
+
+def test_frame_sample_misfire_keeps_earlier_row_of_same_doc(spark):
+    """A fast-path misfire rolls back only the frames of the row being
+    decoded: an earlier row with the same doc_id in the same batch keeps
+    its frames."""
+    import pandas as pd
+
+    from kfts_insar_spark.operators.multimodal import MEDIA_SCHEMA
+
+    def frame(h, w, j=0):
+        return encode_ppm(np.full((h, w, 3), j, dtype=np.uint8))
+
+    good = b"".join(frame(4, 8, j) for j in range(3))
+    # frame 0 (107 B) tiles the 214 B payload, but offset 107 holds a 4x2
+    # frame: the sampled-frame check fails and the row re-decodes by walking
+    misfire = frame(4, 8) + frame(2, 4) + frame(2, 4) + frame(2, 2) + frame(1, 1)
+    assert len(misfire) == 2 * len(frame(4, 8))
+    meta = {"width": 8, "height": 4, "n_channels": 3}
+    pdf = pd.DataFrame(
+        {
+            "doc_id": [7, 7],
+            "payload": [good, misfire],
+            "media_type": ["video/x-ppm-stream"] * 2,
+            "meta": [{**meta, "duration_ms": 3000}, {**meta, "duration_ms": 5000}],
+        }
+    )
+    video = spark.createDataFrame(pdf, schema=MEDIA_SCHEMA).coalesce(1)
+    out = frame_sample(video, every_ms=1000, max_frames=4).toPandas()
+    shapes = [decode_ppm(bytes(p))[0].shape[:2] for p in out["payload"]]
+    assert list(out["frame_idx"]) == [0, 1, 2, 0, 1, 2, 3]
+    assert shapes == [(4, 8)] * 4 + [(2, 4), (2, 4), (2, 2)]
