@@ -333,7 +333,7 @@ def main() -> None:
         return td
 
     def tiers(td):
-        pipe = TierPipeline(td, salt_buckets=CPUS, run_gapfill=False)
+        pipe = TierPipeline(td, run_gapfill=False)
         res = pipe.run(spark, sequences(spark, n_docs, partitions=CPUS * 2))
         return sum(res["rows"].values())
 
@@ -349,9 +349,7 @@ def main() -> None:
     kf_dirs = iter(tiers_dirs)
 
     def pipeline_kf(td):
-        pipe = TierPipeline(
-            td, salt_buckets=CPUS, run_gapfill=True, kf_shards=CPUS
-        )
+        pipe = TierPipeline(td, run_gapfill=True, kf_shards=CPUS)
         pipe.run(spark, sequences(spark, n_docs, partitions=CPUS * 2))
         kf_series_box[0] = sum(
             e.get("rows", 0) for e in pipe.kf_state.last_commit_files
@@ -366,7 +364,7 @@ def main() -> None:
             return next(kf_dirs)
         except StopIteration:
             td = mk_tiers_dir()
-            TierPipeline(td, salt_buckets=CPUS, run_gapfill=False).run(
+            TierPipeline(td, run_gapfill=False).run(
                 spark, sequences(spark, n_docs, partitions=CPUS * 2)
             )
             return td
@@ -397,14 +395,12 @@ def main() -> None:
     def mk_incr_dir():
         td = tempfile.mkdtemp(prefix="bench_incr_")
         incr_dirs.append(td)
-        setup = TierPipeline(td, salt_buckets=CPUS, run_gapfill=True, kf_shards=CPUS)
+        setup = TierPipeline(td, run_gapfill=True, kf_shards=CPUS)
         setup.run(spark, seq_all.filter(F.col("ingest_es") <= F.lit(split_es)))
         return td
 
     def pipeline_incr(td):
-        pipe = TierPipeline(
-            td, salt_buckets=CPUS, run_gapfill=True, kf_shards=CPUS
-        )
+        pipe = TierPipeline(td, run_gapfill=True, kf_shards=CPUS)
         res = pipe.run(spark, seq_all)
         return res["rows"].get("gapfilled", 0)
 
@@ -412,9 +408,7 @@ def main() -> None:
     # fixed floor every resume pays — property reads, heal checks, the
     # empty-increment probe. incr − noop is the data-proportional part.
     def pipeline_noop(td):
-        pipe = TierPipeline(
-            td, salt_buckets=CPUS, run_gapfill=True, kf_shards=CPUS
-        )
+        pipe = TierPipeline(td, run_gapfill=True, kf_shards=CPUS)
         res = pipe.run(spark, seq_all)
         assert res["status"] == "noop", res
         return 0
@@ -437,9 +431,7 @@ def main() -> None:
             try:
                 td = mk_incr_dir()
                 for probe in ("q_pipeline_incr", "q_pipeline_noop"):
-                    pipe = TierPipeline(
-                        td, salt_buckets=CPUS, run_gapfill=True, kf_shards=CPUS
-                    )
+                    pipe = TierPipeline(td, run_gapfill=True, kf_shards=CPUS)
                     t0 = time.perf_counter()
                     pipe.run(spark, seq_all)
                     stage_breakdown[probe] = dict(
@@ -467,7 +459,7 @@ def main() -> None:
         return td
 
     def tiers_bulk(td):
-        pipe = TierPipeline(td, salt_buckets=CPUS, run_gapfill=False)
+        pipe = TierPipeline(td, run_gapfill=False)
         res = pipe.run(
             spark, sequences(spark, bulk_docs, partitions=CPUS * 4)
         )
@@ -497,7 +489,7 @@ def main() -> None:
     def compress():
         seq = sequences(spark, n_docs, partitions=CPUS * 2)
         r = (
-            compress_tier(rollup_raw(seq, salt_buckets=CPUS))
+            compress_tier(rollup_raw(seq))
             .agg(
                 F.count(F.lit(1)).alias("n"),
                 F.sum(
@@ -526,8 +518,7 @@ def main() -> None:
             rollup_raw(
                 sequences(
                     spark, n_docs * 10, docs_per_batch=1, partitions=CPUS * 2
-                ),
-                salt_buckets=CPUS,
+                )
             ),
             chunk_seconds=6 * 3600,
         ).write.mode("overwrite").parquet(decode_cache)

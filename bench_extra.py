@@ -72,9 +72,7 @@ def main() -> None:
     def staged_run(name: str, docs: int, gap: bool, parts: int):
         td = tempfile.mkdtemp(prefix=f"bx_{name}_")
         try:
-            pipe = TierPipeline(
-                td, salt_buckets=CPUS, run_gapfill=gap, kf_shards=CPUS
-            )
+            pipe = TierPipeline(td, run_gapfill=gap, kf_shards=CPUS)
             t0 = time.perf_counter()
             pipe.run(spark, sequences(spark, docs, partitions=parts))
             total = round(time.perf_counter() - t0, 3)
@@ -93,9 +91,9 @@ def main() -> None:
         split_es = int(seq_all.approxQuantile("ingest_es", [0.9], 0)[0])
         td = tempfile.mkdtemp(prefix="bx_incr_")
         try:
-            setup = TierPipeline(td, salt_buckets=CPUS, run_gapfill=True, kf_shards=CPUS)
+            setup = TierPipeline(td, run_gapfill=True, kf_shards=CPUS)
             setup.run(spark, seq_all.filter(F.col("ingest_es") <= F.lit(split_es)))
-            pipe = TierPipeline(td, salt_buckets=CPUS, run_gapfill=True, kf_shards=CPUS)
+            pipe = TierPipeline(td, run_gapfill=True, kf_shards=CPUS)
             t0 = time.perf_counter()
             pipe.run(spark, seq_all)
             out["incr"] = dict(
@@ -115,12 +113,9 @@ def main() -> None:
         from kfts_insar_spark.operators.compress import compress_tier
 
         t0 = time.perf_counter()
-        noop(rollup_raw(seq, salt_buckets=CPUS, with_max_ingest=True))
-        p["rollup_salted_noop_10x"] = round(time.perf_counter() - t0, 3)
-        t0 = time.perf_counter()
-        noop(rollup_raw(seq, salt_buckets=0, with_max_ingest=True))
+        noop(rollup_raw(seq, with_max_ingest=True))
         p["rollup_plain_noop_10x"] = round(time.perf_counter() - t0, 3)
-        raw = rollup_raw(seq, salt_buckets=CPUS).persist()
+        raw = rollup_raw(seq).persist()
         raw.count()
         t0 = time.perf_counter()
         noop(compress_tier(raw))
@@ -203,8 +198,7 @@ def main() -> None:
 
             compress_tier(
                 rollup_raw(
-                    sequences(spark, n_docs * 10, docs_per_batch=1, partitions=CPUS * 2),
-                    salt_buckets=CPUS,
+                    sequences(spark, n_docs * 10, docs_per_batch=1, partitions=CPUS * 2)
                 ),
                 chunk_seconds=6 * 3600,
             ).write.mode("overwrite").parquet(decode_cache)

@@ -35,7 +35,6 @@ def main(argv: list[str] | None = None) -> int:
     pp.add_argument("--input", help="parquet path of the sequences table")
     pp.add_argument("--n-docs", type=int, default=20000, help="synthetic size")
     pp.add_argument("--base", required=True, help="tier tables base dir")
-    pp.add_argument("--salt", type=int, default=16)
 
     kp = sub.add_parser("kalman", help="run the gap-fill kernel on a series")
     kp.add_argument("--input", help="parquet path of wide series")
@@ -80,7 +79,7 @@ def main(argv: list[str] | None = None) -> int:
         seq = (
             spark.read.parquet(args.input) if args.input else sequences(spark, args.n_docs)
         )
-        pipe = TierPipeline(args.base, salt_buckets=args.salt)
+        pipe = TierPipeline(args.base)
         res = pipe.run(spark, seq)
         print(json.dumps(res))
     elif args.cmd == "kalman":
@@ -122,10 +121,12 @@ def main(argv: list[str] | None = None) -> int:
             )
         )
     elif args.cmd == "quality":
+        import dataclasses
+
         import numpy as np
         from pyspark.sql import functions as F
 
-        from .operators.kalman import kalman_fit_flags
+        from .operators.kalman import kalman_gapfill_wide, to_wide
         from .operators.rollup import DAY_SECONDS, RAW_SECONDS
         from .pipeline import TierPipeline
 
@@ -144,15 +145,20 @@ def main(argv: list[str] | None = None) -> int:
         step = ((F.col("bucket_es") - F.lit(lo)) / RAW_SECONDS).cast("int")
         # series rows past the committed grid (ingested after the last
         # gap-fill commit, or the crash window between the series and
-        # state publishes) would scatter out of the kernel's dense
-        # buffer — clamp to [0, m) like the kernel's own grid
+        # state publishes) lie outside the kernel's grid — clamp to [0, m)
         long = ser.select(
             F.concat_ws("/", "source", "shard").alias("doc_id"),
             step.alias("step"),
-            (step * F.lit(RAW_SECONDS / DAY_SECONDS)).alias("t"),
-            F.col("sum_tok").cast("double").alias("value"),
+            F.col("sum_tok").alias("value"),
         ).filter((F.col("step") >= 0) & (F.col("step") < F.lit(m)))
-        flags = kalman_fit_flags(long, t_grid, pipe.kf_cfg)
+        # this command IS the quality gate: enable it with the reference's
+        # eps_interf default when the pipeline config leaves it off
+        cfg = pipe.kf_cfg
+        if cfg.check_eps is None:
+            cfg = dataclasses.replace(cfg, check_eps=10.0)
+        flags = kalman_gapfill_wide(to_wide(long), t_grid, cfg).select(
+            "doc_id", "fit_flag", "fit_max"
+        )
         bad = flags.filter("fit_flag")
         print(
             json.dumps(

@@ -4,13 +4,14 @@ the analytics kernel (SURVEY.md §2.5 W1-W3, §2.10).
 Re-expresses the reference's per-pixel recursion
 (/root/reference/kf/KF_class.py: predict :251-267, update :269-307,
 state compaction ``reduce_sizes_m_P`` :337-378, main loop ``kf`` :468-580)
-as a **batch-vectorized numpy kernel inside applyInPandas**: docs are grouped
-into hash buckets (whole groups guaranteed by applyInPandas), pivoted to a
-(B docs × M steps) matrix, and the recursion runs once per *step* with all
-B docs advanced simultaneously via batched linear algebra. This works because
-the state-size evolution (grow by one phase per step, compact to the last
-``t_sep`` phases once ``k >= t_sep``) depends only on k, never on the data —
-so every doc in the batch shares matrix shapes at every step.
+as a **batch-vectorized numpy kernel inside one mapInArrow operator**: each
+doc arrives as one row (dense values or sparse steps/vals arrays), a batch of
+rows becomes a (B docs × M steps) matrix, and the recursion runs once per
+*step* with all B docs advanced simultaneously via batched linear algebra.
+This works because the state-size evolution (grow by one phase per step,
+compact to the last ``t_sep`` phases once ``k >= t_sep``) depends only on k,
+never on the data — so every doc in the batch shares matrix shapes at every
+step.
 
 Semantics preserved from the reference:
 - state = [L model params | trailing phases], first phase pinned to 0
@@ -36,9 +37,16 @@ Two kernels:
   kf/KF_class.py:182-248): exact reference semantics per doc, used by the
   reconstruction golden tests.
 
-Scale notes: one shuffle on the doc-hash bucket; state is O((L+t_sep)²) per
-doc (reference bound: kfts.py:413, t_sep ≤ 10) → ~2 KB/doc; Arrow batches of
-~10⁴ docs × 10² steps keep the Python-side work per task in vectorized numpy.
+Spark execution: :func:`kalman_gapfill_wide` is the one adapter over the
+batch kernel (cold start, resume from state, fit flags); :func:`to_wide`
+builds its input from long (doc_id, step, value) rows and
+:func:`explode_kf_output` turns its arrays back into long rows.
+:func:`kalman_pairs` runs the per-doc pairs kernel.
+
+Scale notes: no shuffle beyond whatever built the doc-wide rows; state is
+O((L+t_sep)²) per doc (reference bound: kfts.py:413, t_sep ≤ 10) → ~2 KB/doc;
+kernel batches of ~10³ docs keep the Python-side work per task in vectorized
+numpy.
 """
 
 from __future__ import annotations
@@ -58,6 +66,7 @@ from ..functions.basis import (
     param_schedule,
     resolve_model,
 )
+from ..schema import KF_OUTPUT
 
 
 def _arrival_steps(model: Model, t: np.ndarray, dt: float) -> np.ndarray:
@@ -71,7 +80,6 @@ def _arrival_steps(model: Model, t: np.ndarray, dt: float) -> np.ndarray:
             te, wd = ev
             arr[j] = int(np.searchsorted(t, te - dt - wd, side="left"))
     return arr
-from ..schema import KF_OUTPUT, KF_STATE
 
 
 @dataclass(frozen=True)
@@ -743,347 +751,180 @@ def kalman_pairs_doc(
 
 
 # --------------------------------------------------------------------------
-# Spark operator: groupBy(doc-hash bucket).applyInPandas, kernel vectorized
-# across all docs in the bucket. No per-row Python anywhere.
+# Spark operator: ONE mapInArrow adapter over doc-wide rows. Long-form series
+# reach it through to_wide(); explode_kf_output() turns its arrays back into
+# KF_OUTPUT rows JVM-side. No shuffle beyond whatever built the wide rows,
+# and no per-row Python anywhere.
 # --------------------------------------------------------------------------
-def _fast_pivot(pdf: pd.DataFrame, M: int) -> tuple[np.ndarray, np.ndarray]:
-    """(doc_id, step, value) long → (docs, (B, M) value matrix with NaN
-    gaps). np.unique + fancy indexing: ~10× faster than pandas pivot_table,
-    which dominated per-group time in profiling."""
-    docs, codes = np.unique(pdf["doc_id"].to_numpy(), return_inverse=True)
-    values = np.full((len(docs), M), np.nan)
-    steps = pdf["step"].to_numpy(np.int64)
-    v = pdf["value"].to_numpy(np.float64, na_value=np.nan)
-    values[codes, steps] = v
-    return docs, values
+KF_WIDE_OUTPUT = (
+    "doc_id string, emit0 int, phase array<double>, std array<double>, "
+    "innov array<double>, gap array<boolean>, fit_flag boolean, fit_max double"
+)
+KF_WIDE_STATE = (
+    KF_WIDE_OUTPUT + ", k_done int, idx0 int, m array<double>, P array<double>"
+)
 
 
-def kalman_gapfill(
-    series: DataFrame,
-    t_grid: np.ndarray,
-    cfg: KFConfig | None = None,
-    num_buckets: int = 128,
-    emit_state: bool = False,
-) -> DataFrame:
-    """series(doc_id, step, t, value) → KF_OUTPUT rows (+ optionally state).
-
-    ``num_buckets`` sizes the shuffle groups: each applyInPandas call gets
-    ~n_docs/num_buckets whole docs and runs the batch kernel once. On a
-    cluster, set num_buckets ≈ 2-4× total cores (same rule the reference's
-    MPI split uses for rank count, kf/readinput.py:166-212).
-    """
-    cfg = cfg or KFConfig()
-    t_grid = np.asarray(t_grid, dtype=np.float64)
-    M = len(t_grid)
-    out_schema = KF_STATE if emit_state else KF_OUTPUT
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        docs, values = _fast_pivot(pdf, M)
-        res = kalman_direct_batch(values, t_grid, cfg)
-        B = len(docs)
-        if emit_state:
-            return pd.DataFrame(
-                {
-                    "doc_id": docs,
-                    "k_done": np.full(B, res["k_done"], dtype=np.int32),
-                    "idx0": np.full(B, res["idx0"], dtype=np.int32),
-                    "m": list(res["m"]),
-                    "P": list(res["P"].reshape(B, -1)),
-                }
+def to_wide(long: DataFrame) -> DataFrame:
+    """(doc_id, step, value) long rows → one sparse row per doc:
+    (doc_id, steps array<int>, vals array<double>), sorted by step; NULL
+    values are gaps. The adapter densifies it with an O(n) numpy scatter —
+    a JVM-side dense build via per-position lookups is O(n²) per series
+    (measured as the gap-fill stage's entire cost on a 4.5k-step grid)."""
+    ent = F.array_sort(
+        F.collect_list(
+            F.struct(
+                F.col("step").cast("int").alias("step"),
+                F.col("value").cast("double").alias("value"),
             )
-        return pd.DataFrame(
-            {
-                "doc_id": np.repeat(docs, M),
-                "step": np.tile(np.arange(M, dtype=np.int32), B),
-                "t": np.tile(t_grid, B),
-                "phase": res["phase"].ravel(),
-                "std": res["std"].ravel(),
-                "innov": res["innov"].ravel(),
-                "gap_filled": res["gap"].ravel(),
-            }
         )
-
-    bucketed = series.withColumn(
-        "_b", F.pmod(F.xxhash64("doc_id"), F.lit(num_buckets))
     )
-    return bucketed.groupBy("_b").applyInPandas(run, schema=out_schema)
-
-
-def kalman_fit_flags(
-    series: DataFrame,
-    t_grid: np.ndarray,
-    cfg: KFConfig | None = None,
-    num_buckets: int = 128,
-) -> DataFrame:
-    """Per-doc in-loop quality gate (reference ``check_fit``,
-    kf/KF_class.py:319-333): (doc_id, n_obs, fit_flag, fit_max) where
-    fit_flag is True iff at ANY update step the |trailing mean| of the
-    covariance-weighted post-fit residual over the last cfg.check_win
-    observed steps exceeded cfg.check_eps, and fit_max is the worst such
-    trailing mean — the engine's per-series misfit signal (the reference
-    prints a warning per offending step instead).
-
-    Same distribution shape as kalman_gapfill: doc-hash buckets → one
-    batch-kernel run per group, per-doc scalar output (rows = docs)."""
-    import dataclasses
-
-    cfg = cfg or KFConfig()
-    if cfg.check_eps is None:
-        # this wrapper IS the quality gate — enable it with the
-        # reference's eps_interf default when the caller didn't choose
-        cfg = dataclasses.replace(cfg, check_eps=10.0)
-    t_grid = np.asarray(t_grid, dtype=np.float64)
-    M = len(t_grid)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        docs, values = _fast_pivot(pdf, M)
-        res = kalman_direct_batch(values, t_grid, cfg)
-        return pd.DataFrame(
-            {
-                "doc_id": docs,
-                "n_obs": np.isfinite(values[:, 1:]).sum(axis=1).astype(np.int64),
-                "fit_flag": res["fit_flag"],
-                "fit_max": res["fit_max"],
-            }
+    return (
+        long.groupBy("doc_id")
+        .agg(ent.alias("_e"))
+        .select(
+            "doc_id",
+            F.transform(F.col("_e"), lambda s: s["step"]).alias("steps"),
+            F.transform(F.col("_e"), lambda s: s["value"]).alias("vals"),
         )
-
-    bucketed = series.withColumn(
-        "_b", F.pmod(F.xxhash64("doc_id"), F.lit(num_buckets))
     )
-    return bucketed.groupBy("_b").applyInPandas(
-        run, schema="doc_id string, n_obs long, fit_flag boolean, fit_max double"
-    )
-
-
-def kalman_gapfill_aligned(
-    series: DataFrame,
-    t_grid: np.ndarray,
-    cfg: KFConfig | None = None,
-    emit_state: bool = False,
-) -> DataFrame:
-    """Shuffle-free KF over doc-aligned input — the 100 TB fast path.
-
-    When the input table is written bucketed/sorted by doc_id (Iceberg
-    ``bucket(doc_id)`` partitioning — rows of one doc never straddle a file/
-    partition boundary), the grouped-map shuffle in :func:`kalman_gapfill` is
-    pure overhead: mapInPandas processes each partition's docs in place.
-    Decomposition measured at sf-bench scale showed the shuffle+Arrow feed
-    alone costs more than the entire kernel, and *degrades* with core count —
-    this path removes it.
-
-    Arrow batches may split a doc across consecutive batches within a
-    partition; a carry buffer re-attaches the head of the next batch.
-    Requires: series sorted by (doc_id, step) within partitions, docs not
-    straddling partitions.
-    """
-    cfg = cfg or KFConfig()
-    t_grid = np.asarray(t_grid, dtype=np.float64)
-    M = len(t_grid)
-    out_schema = KF_STATE if emit_state else KF_OUTPUT
-
-    def emit(docs: np.ndarray, values: np.ndarray) -> pd.DataFrame:
-        res = kalman_direct_batch(values, t_grid, cfg)
-        B = len(docs)
-        if emit_state:
-            return pd.DataFrame(
-                {
-                    "doc_id": docs,
-                    "k_done": np.full(B, res["k_done"], dtype=np.int32),
-                    "idx0": np.full(B, res["idx0"], dtype=np.int32),
-                    "m": list(res["m"]),
-                    "P": list(res["P"].reshape(B, -1)),
-                }
-            )
-        return pd.DataFrame(
-            {
-                "doc_id": np.repeat(docs, M),
-                "step": np.tile(np.arange(M, dtype=np.int32), B),
-                "t": np.tile(t_grid, B),
-                "phase": res["phase"].ravel(),
-                "std": res["std"].ravel(),
-                "innov": res["innov"].ravel(),
-                "gap_filled": res["gap"].ravel(),
-            }
-        )
-
-    # Accumulate Arrow batches before invoking the kernel: the default
-    # 20k-row batch holds only ~200 docs, and the kernel's fixed per-call
-    # cost (92 steps × numpy dispatch) then dominates — measured 4-5× slower
-    # than B≈2000 batches.
-    min_batch_rows = 200_000
-
-    def run(batches):
-        buf: list[pd.DataFrame] = []
-        buffered = 0
-        for pdf in batches:
-            buf.append(pdf)
-            buffered += len(pdf)
-            if buffered < min_batch_rows:
-                continue
-            whole = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-            ids = whole["doc_id"].to_numpy()
-            # hold back the (possibly incomplete) trailing doc
-            cut = np.searchsorted(ids, ids[-1])  # ids sorted within partition
-            buf, buffered = [whole.iloc[cut:]], len(whole) - cut
-            head = whole.iloc[:cut]
-            if len(head):
-                docs, values = _fast_pivot(head, M)
-                yield emit(docs, values)
-        if buffered:
-            whole = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-            if len(whole):
-                docs, values = _fast_pivot(whole, M)
-                yield emit(docs, values)
-
-    return series.mapInPandas(run, schema=out_schema)
 
 
 def kalman_gapfill_wide(
     series_wide: DataFrame,
     t_grid: np.ndarray,
     cfg: KFConfig | None = None,
-    emit_state: bool = False,
-    wide_output: bool = True,
+    with_state: bool = False,
     min_batch_docs: int = 1000,
 ) -> DataFrame:
-    """KF over the wide layout (doc_id, values: array<double>) — the hot
-    path at scale. No shuffle, and the Arrow exchange moves one row per DOC
-    instead of one per (doc, step): measured ~10× cheaper than the long
-    layout, whose per-row JVM serialization cost did not scale with cores.
+    """The Spark execution of :func:`kalman_direct_batch`: mapInArrow over
+    one row per doc.
 
-    ``wide_output=True`` returns (doc_id, phase[], std[], innov[], gap[]);
-    call :func:`explode_kf_output` for the long KF_OUTPUT view (JVM-side
-    posexplode — cheap). NULL array elements are gaps.
+    Input: ``doc_id`` plus either dense ``values array<double>`` (one
+    element per grid step) or sparse ``steps array<int>, vals
+    array<double>`` (see :func:`to_wide`); NULL elements and NULL arrays
+    are gaps. Optional ``k_done, idx0, m, P`` resume a doc from a committed
+    state snapshot (reference update mode, ``restart_from_file``
+    kf/KF_class.py:70-116); rows whose state is NULL cold-start from the
+    grid origin. Resumed rows run one kernel batch per (k_done, idx0, state
+    width) stratum: streaming micro-batches leave per-doc progress, and the
+    batch kernel needs uniform shapes.
+
+    Output: ``doc_id, emit0, phase[], std[], innov[], gap[], fit_flag,
+    fit_max`` — the arrays cover steps [emit0, M): a resumed doc re-emits
+    only [idx0_prev, M) (earlier steps were published by earlier runs), a
+    cold doc the full grid; innov is NaN at steps without an observation.
+    ``with_state`` appends the resumable ``k_done, idx0, m, P`` from the
+    same kernel run. A step outside [0, M) or a dense row whose length is
+    not M raises ``ValueError`` naming the doc.
+
+    The Arrow exchange moves one row per doc, not one per (doc, step):
+    measured ~10× cheaper than the long layout, whose per-row JVM
+    serialization did not scale with cores.
     """
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
     cfg = cfg or KFConfig()
     t_grid = np.asarray(t_grid, dtype=np.float64)
     M = len(t_grid)
-    if emit_state:
-        out_schema = KF_STATE
-    elif wide_output:
-        out_schema = (
-            "doc_id string, phase array<double>, std array<double>, "
-            "innov array<double>, gap array<boolean>"
-        )
-    else:
-        out_schema = KF_OUTPUT
+    sparse = "steps" in series_wide.columns
+    has_state = "k_done" in series_wide.columns
 
-    def emit(docs: np.ndarray, values: np.ndarray) -> pd.DataFrame:
-        res = kalman_direct_batch(values, t_grid, cfg)
-        B = len(docs)
-        if emit_state:
-            return pd.DataFrame(
-                {
-                    "doc_id": docs,
-                    "k_done": np.full(B, res["k_done"], dtype=np.int32),
-                    "idx0": np.full(B, res["idx0"], dtype=np.int32),
-                    "m": list(res["m"]),
-                    "P": list(res["P"].reshape(B, -1)),
-                }
-            )
-        if wide_output:
-            return pd.DataFrame(
-                {
-                    "doc_id": docs,
-                    "phase": list(res["phase"]),
-                    "std": list(res["std"]),
-                    "innov": list(res["innov"]),
-                    "gap": list(res["gap"]),
-                }
-            )
-        return pd.DataFrame(
-            {
-                "doc_id": np.repeat(docs, M),
-                "step": np.tile(np.arange(M, dtype=np.int32), B),
-                "t": np.tile(t_grid, B),
-                "phase": res["phase"].ravel(),
-                "std": res["std"].ravel(),
-                "innov": res["innov"].ravel(),
-                "gap_filled": res["gap"].ravel(),
-            }
-        )
+    def flat(col) -> np.ndarray:
+        # list elements → one numpy buffer (NULL → NaN); NULL lists skipped
+        return col.flatten().to_numpy(zero_copy_only=False)
 
-    if emit_state or not wide_output:
-        # pandas path (small outputs / long view)
-        def run_pd(batches):
-            buf_docs: list[np.ndarray] = []
-            buf_vals: list[np.ndarray] = []
-            buffered = 0
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                buf_docs.append(pdf["doc_id"].to_numpy())
-                buf_vals.append(_stack_values(pdf["values"].to_numpy(), M))
-                buffered += len(pdf)
-                if buffered >= min_batch_docs:
-                    yield emit(np.concatenate(buf_docs), np.vstack(buf_vals))
-                    buf_docs, buf_vals, buffered = [], [], 0
-            if buffered:
-                yield emit(np.concatenate(buf_docs), np.vstack(buf_vals))
+    def lists(mat: np.ndarray) -> "pa.ListArray":
+        B, W = mat.shape
+        offs = pa.array(np.arange(0, (B + 1) * W, W, dtype=np.int32))
+        return pa.ListArray.from_arrays(offs, pa.array(mat.ravel()))
 
-        return series_wide.mapInPandas(run_pd, schema=out_schema)
-
-    # Arrow-native path: zero-copy in (list offsets + flat buffer → reshape)
-    # and vectorized out (flat numpy → ListArray). pandas list-column
-    # conversion is per-element and was the residual non-scaling cost.
-    import pyarrow as pa
-
-    out_pa = pa.schema(
-        [
-            pa.field("doc_id", pa.string()),
-            pa.field("phase", pa.list_(pa.float64())),
-            pa.field("std", pa.list_(pa.float64())),
-            pa.field("innov", pa.list_(pa.float64())),
-            pa.field("gap", pa.list_(pa.bool_())),
-        ]
-    )
-
-    def to_matrix(col: "pa.ChunkedArray | pa.Array") -> np.ndarray:
-        arr = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
-        if isinstance(arr, pa.ListArray):
-            offs = arr.offsets.to_numpy()
-            widths = np.diff(offs)
-            flat = arr.flatten().to_numpy(zero_copy_only=False)
-            if (widths == M).all() and len(flat) == len(arr) * M:
-                return flat.reshape(len(arr), M)
-        # ragged fallback
-        vals = np.full((len(arr), M), np.nan)
-        for i, a in enumerate(arr.to_pylist()):
-            if a is not None:
-                aa = np.asarray(
-                    [np.nan if x is None else x for x in a], dtype=np.float64
+    def densify(rb: "pa.RecordBatch") -> np.ndarray:
+        B = rb.num_rows
+        values = np.full((B, M), np.nan)
+        if sparse:
+            steps = rb.column("steps")
+            lens = pc.list_value_length(steps).fill_null(0).to_numpy()
+            row = np.repeat(np.arange(B), lens)
+            k = flat(steps).astype(np.int64)
+            bad = np.flatnonzero((k < 0) | (k >= M))
+            if len(bad):
+                i = bad[0]
+                doc = rb.column("doc_id")[int(row[i])].as_py()
+                raise ValueError(
+                    f"doc {doc!r}: step {k[i]} lies outside the grid [0, {M})"
                 )
-                vals[i, : len(aa)] = aa
-        return vals
+            values[row, k] = flat(rb.column("vals"))
+        else:
+            col = rb.column("values")
+            lens = pc.list_value_length(col).fill_null(M).to_numpy()
+            bad = np.flatnonzero(lens != M)
+            if len(bad):
+                doc = rb.column("doc_id")[int(bad[0])].as_py()
+                raise ValueError(
+                    f"doc {doc!r}: {lens[bad[0]]} values for a {M}-step grid"
+                )
+            valid = col.is_valid().to_numpy(zero_copy_only=False)
+            values[valid] = flat(col).reshape(-1, M)
+        return values
 
-    def run_arrow(batches):
-        buf: list[pa.RecordBatch] = []
+    def emit(docs, values: np.ndarray, init: dict | None) -> "pa.RecordBatch":
+        res = kalman_direct_batch(values, t_grid, cfg, init=init)
+        B = len(values)
+        e0 = int(init["idx0"]) if init is not None else 0
+        cols = {
+            "doc_id": docs,
+            "emit0": pa.array(np.full(B, e0, dtype=np.int32)),
+            "phase": lists(res["phase"][:, e0:]),
+            "std": lists(res["std"][:, e0:]),
+            "innov": lists(res["innov"][:, e0:]),
+            "gap": lists(res["gap"][:, e0:]),
+            "fit_flag": pa.array(res["fit_flag"]),
+            "fit_max": pa.array(res["fit_max"]),
+        }
+        if with_state:
+            cols["k_done"] = pa.array(np.full(B, res["k_done"], dtype=np.int32))
+            cols["idx0"] = pa.array(np.full(B, res["idx0"], dtype=np.int32))
+            cols["m"] = lists(res["m"])
+            cols["P"] = lists(res["P"].reshape(B, -1))
+        return pa.RecordBatch.from_pydict(cols)
+
+    def kernel(rb: "pa.RecordBatch"):
+        values = densify(rb)
+        docs = rb.column("doc_id")
+        resumed = (
+            rb.column("k_done").is_valid().to_numpy(zero_copy_only=False)
+            if has_state
+            else np.zeros(rb.num_rows, dtype=bool)
+        )
+        cold = np.flatnonzero(~resumed)
+        if len(cold):
+            yield emit(docs.take(cold), values[cold], None)
+        if not resumed.any():
+            return
+        rows = np.flatnonzero(resumed)
+        keys = np.column_stack(
+            [
+                rb.column("k_done").to_numpy(zero_copy_only=False)[rows],
+                rb.column("idx0").to_numpy(zero_copy_only=False)[rows],
+                pc.list_value_length(rb.column("m")).to_numpy(zero_copy_only=False)[rows],
+            ]
+        ).astype(np.int64)
+        strata, inv = np.unique(keys, axis=0, return_inverse=True)
+        for j, (k_done, idx0, n) in enumerate(strata):
+            sel = rows[inv.ravel() == j]
+            init = {
+                "X": flat(rb.column("m").take(sel)).reshape(len(sel), n),
+                "P": flat(rb.column("P").take(sel)).reshape(len(sel), n, n),
+                "idx0": int(idx0),
+                "k_done": int(k_done),
+            }
+            yield emit(docs.take(sel), values[sel], init)
+
+    def run(batches):
+        buf: list = []
         buffered = 0
-
-        def emit_slice(tbl: "pa.Table"):
-            docs = tbl.column("doc_id")
-            values = to_matrix(tbl.column("values"))
-            res = kalman_direct_batch(values, t_grid, cfg)
-            B = len(values)
-            offs = pa.array(
-                np.arange(0, (B + 1) * M, M, dtype=np.int32)
-            )
-
-            def lst(flat, typ):
-                return pa.ListArray.from_arrays(offs, pa.array(flat, type=typ))
-
-            return pa.RecordBatch.from_arrays(
-                [
-                    docs.combine_chunks()
-                    if isinstance(docs, pa.ChunkedArray)
-                    else docs,
-                    lst(res["phase"].ravel(), pa.float64()),
-                    lst(res["std"].ravel(), pa.float64()),
-                    lst(res["innov"].ravel(), pa.float64()),
-                    lst(res["gap"].ravel(), pa.bool_()),
-                ],
-                schema=out_pa,
-            )
 
         def flush():
             # kernel batches are sized to min_batch_docs, not to whatever
@@ -1093,9 +934,9 @@ def kalman_gapfill_wide(
             # (B sweep: 1.35/1.49/1.56/1.43/1.28 M pts/s/core at
             # B=250/500/1000/2000/4000). Docs are independent in the batch
             # axis, so the split is value-exact.
-            tbl = pa.Table.from_batches(buf)
-            for s in range(0, tbl.num_rows, min_batch_docs):
-                yield emit_slice(tbl.slice(s, min_batch_docs))
+            rb = pa.Table.from_batches(buf).combine_chunks().to_batches()[0]
+            for s in range(0, rb.num_rows, min_batch_docs):
+                yield from kernel(rb.slice(s, min_batch_docs))
 
         for rb in batches:
             if rb.num_rows == 0:
@@ -1109,160 +950,8 @@ def kalman_gapfill_wide(
             yield from flush()
 
     return series_wide.mapInArrow(
-        run_arrow,
-        schema=(
-            "doc_id string, phase array<double>, std array<double>, "
-            "innov array<double>, gap array<boolean>"
-        ),
+        run, schema=KF_WIDE_STATE if with_state else KF_WIDE_OUTPUT
     )
-
-
-KF_WIDE_STATE = (
-    "doc_id string, emit0 int, phase array<double>, std array<double>, "
-    "innov array<double>, gap array<boolean>, "
-    "k_done int, idx0 int, m array<double>, P array<double>"
-)
-
-
-def kalman_gapfill_combined(
-    series_wide: DataFrame,
-    t_grid: np.ndarray,
-    cfg: KFConfig | None = None,
-    min_batch_docs: int = 2000,
-) -> DataFrame:
-    """ONE kernel execution per doc emitting BOTH the gap-filled output
-    arrays and the resumable state — the pipeline previously ran the kernel
-    twice per run (once for output, once with emit_state=True), doubling its
-    most expensive stage.
-
-    Input: (doc_id, values array<double>[, k_done, idx0, m, P][, p0]) — OR
-    the sparse layout (doc_id, steps array<int>, vals array<double>) for
-    series with gaps: densifying inside the kernel runner is O(n) numpy
-    scatter, whereas building the dense array JVM-side with per-position
-    map lookups is O(n²) per series (measured as the stage's entire cost
-    at a 4.5k-step grid). Rows whose state columns are NULL (or absent)
-    cold-start from the grid origin — honouring an optional per-doc ``p0``
-    prior-variance array (the earthquake patch); rows with state resume,
-    stratified by (k_done, idx0, state width) exactly like
-    :func:`kalman_resume`. No shuffle beyond whatever join produced the
-    input — mapInPandas over doc-wide rows.
-    """
-    cfg = cfg or KFConfig()
-    t_grid = np.asarray(t_grid, dtype=np.float64)
-    M = len(t_grid)
-    has_state = "k_done" in series_wide.columns
-    sparse = "steps" in series_wide.columns
-
-    def emit(
-        docs: np.ndarray,
-        values: np.ndarray,
-        init: dict | None,
-        p0: np.ndarray | None = None,
-    ) -> pd.DataFrame:
-        res = kalman_direct_batch(values, t_grid, cfg, init=init, p0_diag=p0)
-        B = len(docs)
-        # Emit only the window this run actually produced: a resumed doc
-        # re-emits [idx0_prev, M) — steps before idx0_prev were published
-        # by earlier runs and carry NaN here. Slicing keeps the per-run
-        # Arrow transfer and the downstream explode O(increment + overlap)
-        # instead of O(total grid history); `emit0` lets the exploder
-        # recover absolute step indices (cold start → 0, full grid).
-        e0 = int(init["idx0"]) if init is not None else 0
-        return pd.DataFrame(
-            {
-                "doc_id": docs,
-                "emit0": np.full(B, e0, dtype=np.int32),
-                "phase": list(res["phase"][:, e0:]),
-                "std": list(res["std"][:, e0:]),
-                "innov": list(res["innov"][:, e0:]),
-                "gap": list(res["gap"][:, e0:]),
-                "k_done": np.full(B, res["k_done"], dtype=np.int32),
-                "idx0": np.full(B, res["idx0"], dtype=np.int32),
-                "m": list(res["m"]),
-                "P": list(res["P"].reshape(B, -1)),
-            }
-        )
-
-    def flush(whole: pd.DataFrame) -> pd.DataFrame:
-        whole = whole.reset_index(drop=True)
-        docs_all = whole["doc_id"].to_numpy()
-        if sparse:
-            values_all = np.full((len(whole), M), np.nan)
-            rows_steps = whole["steps"].to_numpy()
-            rows_vals = whole["vals"].to_numpy()
-            # NULL arrays (state-only rows from the outer join) = no new data
-            lens = [0 if s is None else len(s) for s in rows_steps]
-            ridx = np.repeat(np.arange(len(whole)), lens)
-            if len(ridx):
-                values_all[
-                    ridx,
-                    np.concatenate(
-                        [s for s in rows_steps if s is not None and len(s)]
-                    ).astype(np.int64),
-                ] = np.concatenate(
-                    [v for v in rows_vals if v is not None and len(v)]
-                )
-        else:
-            values_all = _stack_values(whole["values"].to_numpy(), M)
-        notna = (
-            whole["k_done"].notna().to_numpy()
-            if has_state
-            else np.zeros(len(whole), dtype=bool)
-        )
-        outs: list[pd.DataFrame] = []
-        if (~notna).any():
-            sel = np.flatnonzero(~notna)
-            p0 = None
-            if "p0" in whole.columns:
-                p0v = whole["p0"].to_numpy()[sel]
-                if all(v is not None for v in p0v):
-                    p0 = np.vstack(p0v)
-            outs.append(emit(docs_all[sel], values_all[sel], None, p0))
-        if notna.any():
-            st = whole[notna]
-            strata = st.groupby(
-                [
-                    st["k_done"].astype(int),
-                    st["idx0"].astype(int),
-                    st["m"].map(len),
-                ],
-                sort=False,
-            )
-            for (k_done, idx0, n), g in strata:
-                sel = g.index.to_numpy()
-                init = {
-                    "X": np.vstack(g["m"].to_numpy()),
-                    "P": np.vstack(g["P"].to_numpy()).reshape(len(g), n, n),
-                    "idx0": int(idx0),
-                    "k_done": int(k_done),
-                }
-                outs.append(emit(docs_all[sel], values_all[sel], init))
-        return pd.concat(outs, ignore_index=True) if len(outs) > 1 else outs[0]
-
-    def run(batches):
-        buf: list[pd.DataFrame] = []
-        buffered = 0
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            buf.append(pdf)
-            buffered += len(pdf)
-            if buffered >= min_batch_docs:
-                yield flush(pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0])
-                buf, buffered = [], 0
-        if buffered:
-            yield flush(pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0])
-
-    return series_wide.mapInPandas(run, schema=KF_WIDE_STATE)
-
-
-def _stack_values(col: np.ndarray, M: int) -> np.ndarray:
-    """list-of-arrays column → (B, M) float matrix (None → NaN)."""
-    vals = np.full((len(col), M), np.nan)
-    for i, arr in enumerate(col):
-        a = np.asarray(arr, dtype=np.float64)
-        vals[i, : len(a)] = a
-    return vals
 
 
 def kalman_pairs(
@@ -1315,9 +1004,10 @@ def kalman_pairs(
 def explode_kf_output(
     wide: DataFrame, t_grid: np.ndarray, with_t: bool = True
 ) -> DataFrame:
-    """(doc_id, phase[], std[], innov[], gap[]) → long KF_OUTPUT rows,
-    entirely JVM-side. The epoch axis joins in from a broadcast (step, t)
-    grid table — an inline array literal here costs a full array
+    """Adapter output (doc_id, emit0, phase[], std[], innov[], gap[]) → long
+    KF_OUTPUT rows, entirely JVM-side; emit0 is the absolute step of each
+    row's first array element. The epoch axis joins in from a broadcast
+    (step, t) grid table — an inline array literal here costs a full array
     construction per OUTPUT row (measured: it WAS the explode stage's
     entire cost on long grids).
 
@@ -1326,141 +1016,27 @@ def explode_kf_output(
     index and never stores t): every emitted step lies in [0, M) by
     construction, so the inner join never filters — removing it removes a
     45k-row broadcast build plus one hash probe per output row per run."""
-    # emit0 = absolute step of each row's first array element (the combined
-    # kernel slices a resumed doc's output to its emit window); wide frames
-    # without it (full-grid emitters like kalman_gapfill_wide) start at 0
-    e0 = F.col("emit0") if "emit0" in wide.columns else F.lit(0)
     long = wide.select(
         "doc_id",
-        e0.alias("_e0"),
+        "emit0",
         F.posexplode(F.arrays_zip("phase", "std", "innov", "gap")).alias(
             "pos", "z"
         ),
     ).select(
         "doc_id",
-        (F.col("pos") + F.col("_e0")).cast("int").alias("step"),
+        (F.col("pos") + F.col("emit0")).cast("int").alias("step"),
         F.col("z.phase").alias("phase"),
         F.col("z.std").alias("std"),
-        F.col("z.innov").alias("innov"),
+        # KF_OUTPUT carries NULL where a step had no innovation
+        F.nanvl(F.col("z.innov"), F.lit(None).cast("double")).alias("innov"),
         F.col("z.gap").alias("gap_filled"),
     )
     if not with_t:
-        return long.select(
-            "doc_id", "step", "phase", "std", "innov", "gap_filled"
-        )
+        return long
     t_vals = [float(t) for t in np.asarray(t_grid)]
     grid_df = wide.sparkSession.createDataFrame(
         list(enumerate(t_vals)), "step int, t double"
     )
     return long.join(F.broadcast(grid_df), "step").select(
         "doc_id", "step", "t", "phase", "std", "innov", "gap_filled"
-    )
-
-
-def kalman_resume(
-    series: DataFrame,
-    state: DataFrame,
-    t_grid: np.ndarray,
-    cfg: KFConfig | None = None,
-    num_buckets: int = 128,
-    emit_state: bool = False,
-) -> DataFrame:
-    """Update mode: continue each doc's recursion from a committed state
-    snapshot over an extended time grid (reference entry point 2,
-    SURVEY.md §3.2; kfts.py:252-330 + restart_from_file).
-
-    ``series`` must cover the full grid's NEW steps (earlier steps may be
-    absent); ``state`` is the KF_STATE output of the previous run. Cogrouped
-    by the same doc-hash bucket so whole docs meet their state in one
-    Arrow batch.
-    """
-    cfg = cfg or KFConfig()
-    t_grid = np.asarray(t_grid, dtype=np.float64)
-    M = len(t_grid)
-    out_schema = KF_STATE if emit_state else KF_OUTPUT
-
-    def emit(docs: np.ndarray, res: dict) -> pd.DataFrame:
-        B = len(docs)
-        if emit_state:
-            return pd.DataFrame(
-                {
-                    "doc_id": docs,
-                    "k_done": np.full(B, res["k_done"], dtype=np.int32),
-                    "idx0": np.full(B, res["idx0"], dtype=np.int32),
-                    "m": list(res["m"]),
-                    "P": list(res["P"].reshape(B, -1)),
-                }
-            )
-        out = pd.DataFrame(
-            {
-                "doc_id": np.repeat(docs, M),
-                "step": np.tile(np.arange(M, dtype=np.int32), B),
-                "t": np.tile(t_grid, B),
-                "phase": res["phase"].ravel(),
-                "std": res["std"].ravel(),
-                "innov": res["innov"].ravel(),
-                "gap_filled": res["gap"].ravel(),
-            }
-        )
-        # drop steps archived by the PREVIOUS run (they carry NaN here)
-        return out[np.isfinite(out["phase"].to_numpy())]
-
-    def run(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(columns=[f.name for f in out_schema.fields])
-        ldocs, lvalues = (
-            _fast_pivot(left, M) if len(left) else (np.array([], dtype=object), None)
-        )
-        pos = {d: i for i, d in enumerate(ldocs)}
-        frames: list[pd.DataFrame] = []
-
-        # Streaming micro-batches advance each doc to its OWN k_done — the
-        # batch kernel needs uniform shapes, so partition the state snapshot
-        # by (k_done, idx0, state width) and run one batch per stratum
-        # (single stratum for batch-produced snapshots → one kernel call).
-        state_docs: set = set()
-        if not right.empty:
-            right = right.sort_values("doc_id")
-            strata = right.groupby(
-                [
-                    right["k_done"].astype(int),
-                    right["idx0"].astype(int),
-                    right["m"].map(len),
-                ],
-                sort=False,
-            )
-            for (k_done, idx0, n), g in strata:
-                docs = g["doc_id"].to_numpy()
-                state_docs.update(docs)
-                Bm = np.vstack(g["m"].to_numpy())
-                Pm = np.vstack(g["P"].to_numpy()).reshape(len(docs), n, n)
-                values = np.full((len(docs), M), np.nan)
-                sel = np.array([pos.get(d, -1) for d in docs])
-                hit = sel >= 0
-                if hit.any():
-                    values[hit] = lvalues[sel[hit]]
-                res = kalman_direct_batch(
-                    values,
-                    t_grid,
-                    cfg,
-                    init={"X": Bm, "P": Pm, "idx0": int(idx0), "k_done": int(k_done)},
-                )
-                frames.append(emit(docs, res))
-
-        # Cold start: docs first observed after the snapshot was taken have
-        # no state row — run the full recursion from scratch so new series
-        # enter the gapfilled tier instead of being dropped.
-        cold = np.array([d for d in ldocs if d not in state_docs], dtype=object)
-        if len(cold):
-            sel = np.array([pos[d] for d in cold])
-            res = kalman_direct_batch(lvalues[sel], t_grid, cfg)
-            frames.append(emit(cold, res))
-
-        if not frames:
-            return empty
-        return pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-
-    sb = series.withColumn("_b", F.pmod(F.xxhash64("doc_id"), F.lit(num_buckets)))
-    st = state.withColumn("_b", F.pmod(F.xxhash64("doc_id"), F.lit(num_buckets)))
-    return sb.groupBy("_b").cogroup(st.groupBy("_b")).applyInPandas(
-        run, schema=out_schema
     )

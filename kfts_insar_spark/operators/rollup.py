@@ -18,11 +18,10 @@ cascade(raw→1h→1d) == direct(base→1d) row-for-row (FIXTURES.md F4).
 
 Scale notes (100 TB / 10^12 rows):
 - one wide shuffle on (source, bucket) for the raw tier; `source` has ~5
-  values → heavily skewed keys, so the raw rollup groups on a SALTED key
-  first and merges partials (two-stage agg). See `rollup_raw`.
-- Spark already does map-side partial aggregation (HashAggregate partial →
-  final), which absorbs most skew for algebraic aggs; the explicit salt stage
-  matters when per-key cardinality within a task still overflows the hash map.
+  values → heavily skewed keys. The raw rollup is a single groupBy: Spark's
+  map-side partial aggregation (HashAggregate partial → final) already sends
+  at most one partial row per hot key per map task to its reducer, which is
+  the skew treatment for algebraic aggs. See `rollup_raw`.
 """
 
 from __future__ import annotations
@@ -51,15 +50,8 @@ def bucket(es_col, width: int):
     return (F.floor(F.col(es_col) / F.lit(width)) * F.lit(width)).cast("long")
 
 
-def rollup_raw(
-    seq: DataFrame, salt_buckets: int = 0, with_max_ingest: bool = False
-) -> DataFrame:
-    """Base table → raw (300 s) tier.
-
-    With ``salt_buckets > 0`` the aggregation runs in two stages over
-    (source, bucket, salt) then (source, bucket) — the explicit skew treatment
-    demanded by BASELINE.json north_rule ("hash on doc_id with salting for
-    skewed sources"). Salt derives from doc_id hash → deterministic.
+def rollup_raw(seq: DataFrame, with_max_ingest: bool = False) -> DataFrame:
+    """Base table → raw (300 s) tier, one groupBy on (source, bucket).
 
     ``with_max_ingest`` adds ``max_ies`` (the newest ingest_es inside the
     bucket). The pipeline derives its watermark from this column's parquet
@@ -83,15 +75,13 @@ def rollup_raw(
     # partial keyed by (source, bucket) within each input task (the task is
     # the deterministic "salt") and a final merge after one exchange, so a
     # hot key contributes at most one partial row per map task to its
-    # reducer. The previous explicit salt column (pmod(xxhash64(doc_id)))
-    # materialized that partial level a second time: at bulk-bench scale the
+    # reducer. An explicit salt column (pmod(xxhash64(doc_id))) would
+    # materialize that partial level a second time: at bulk-bench scale the
     # (source, bucket, salt) key had ~as many groups as input rows, so the
     # first exchange carried ~10x the bytes of the partial-row exchange and
-    # the whole rollup ran 2x slower (bench_extra `parts`, 20M docs: 6.1 s
-    # salted vs 3.2 s single-stage) while adding no skew protection the
-    # partial stage doesn't already provide. ``salt_buckets`` is kept for
-    # API stability; both values produce the identical result set (pinned
-    # by the seq_rollup_raw_salted oracle and test_synth_rollup).
+    # the whole rollup ran 2x slower (20M docs: 6.1 s salted vs 3.2 s
+    # single-stage) while adding no skew protection the partial stage
+    # doesn't already provide.
     out = base.groupBy("source", "bucket_es").agg(*aggs)
     return out.select(*cols)
 
@@ -121,12 +111,11 @@ def rollup_series_partial(
     (sum_tok, n_docs per (source, shard, bucket)), or merge over ``shard``
     with :func:`merge_shard_partials` to get the raw tier exactly.
 
-    The shard key doubles as the skew salt (same deterministic doc-hash
-    the salted :func:`rollup_raw` uses), so the raw tier derived from
-    these partials IS the two-stage salted aggregation — the base table
-    is scanned once instead of once per tier (at 100 TB the base scan is
-    the dominant ingest cost; everything downstream of the partials is
-    tier-sized)."""
+    The raw tier derived from these partials is a two-stage aggregation
+    over the deterministic doc-hash shard, equal to :func:`rollup_raw` row
+    for row — the base table is scanned once instead of once per tier (at
+    100 TB the base scan is the dominant ingest cost; everything downstream
+    of the partials is tier-sized)."""
     aggs = _aggs()
     if with_max_ingest:
         aggs = aggs + [F.max("ingest_es").cast("long").alias("max_ies")]
@@ -146,7 +135,7 @@ def rollup_series_partial(
 def merge_shard_partials(partial: DataFrame, with_max_ingest: bool = False) -> DataFrame:
     """(source, shard, bucket) partials → the raw tier rows (exact: all
     tier aggregates are algebraic, so the shard merge is the final stage
-    of the salted two-stage aggregation)."""
+    of the two-stage aggregation)."""
     merge = [
         F.sum("sum_tok").cast("long").alias("sum_tok"),
         F.sum("n_docs").cast("long").alias("n_docs"),

@@ -36,7 +36,8 @@ from .operators.compress import CODEC_FORMAT, compress_tier
 from .operators.kalman import (
     KFConfig,
     explode_kf_output,
-    kalman_gapfill_combined,
+    kalman_gapfill_wide,
+    to_wide,
 )
 from .operators.rollup import (
     DAY_SECONDS,
@@ -54,6 +55,41 @@ from .sources.snapshot import SnapshotTable
 
 def _pday(col: str = "bucket_es"):
     return F.date_format(F.timestamp_seconds(F.col(col)), "yyyy-MM-dd").alias("pday")
+
+
+def _subseries_wide(series: DataFrame, lo: int) -> DataFrame:
+    """Series-tier rows at/after the grid origin ``lo`` → one sparse kernel
+    input row per (source, shard) sub-series, doc_id = "source/shard"."""
+    step = ((F.col("bucket_es") - F.lit(lo)) / RAW_SECONDS).cast("int")
+    return to_wide(
+        series.filter(F.col("bucket_es") >= F.lit(lo)).select(
+            F.concat_ws("/", "source", "shard").alias("doc_id"),
+            step.alias("step"),
+            F.col("sum_tok").alias("value"),
+        )
+    )
+
+
+def _gap_rows(kf_out: DataFrame, t_grid, lo: int) -> DataFrame:
+    """Kernel output → gap-tier rows (source, shard, bucket_es, phase, std,
+    innov, gap_filled, pday). The adapter emits only the steps this run
+    produced, and the explode turns a missing innovation into NULL."""
+    src_shard = F.split(F.col("doc_id"), "/")
+    return (
+        explode_kf_output(kf_out, t_grid, with_t=False)
+        .select(
+            F.element_at(src_shard, 1).alias("source"),
+            F.element_at(src_shard, 2).cast("int").alias("shard"),
+            (F.lit(lo) + F.col("step").cast("long") * F.lit(RAW_SECONDS)).alias(
+                "bucket_es"
+            ),
+            "phase",
+            "std",
+            "innov",
+            "gap_filled",
+        )
+        .withColumn("pday", _pday())
+    )
 
 
 def _write_tasks(spark: SparkSession, n_parts: int | None = None) -> int:
@@ -94,7 +130,6 @@ class TierPipeline:
     def __init__(
         self,
         base_dir: str,
-        salt_buckets: int = 0,
         kf_cfg: KFConfig = DEFAULT_KF_CFG,
         run_gapfill: bool = True,
         kf_shards: int = 32,
@@ -111,7 +146,6 @@ class TierPipeline:
         self.gap = SnapshotTable(os.path.join(base_dir, "tier_gapfilled"))
         self.kf_state = SnapshotTable(os.path.join(base_dir, "kf_state"))
         self.log = CheckpointLog(os.path.join(base_dir, "checkpoint.jsonl"))
-        self.salt_buckets = salt_buckets
         self.kf_cfg = kf_cfg
         self.run_gapfill = run_gapfill
         self.kf_shards = kf_shards
@@ -159,8 +193,8 @@ class TierPipeline:
         # exactly once (the write), never again for metrics.
         fresh = seq.filter(F.col("ingest_es") > F.lit(wm))
         # With the KF stage on, the shard-level partials serve BOTH ingest
-        # tiers from ONE base scan: raw = shard merge (exactly the salted
-        # two-stage aggregation — shard is the same doc-hash salt), series =
+        # tiers from ONE base scan: raw = shard merge (a two-stage
+        # aggregation over the doc-hash shard, equal to rollup_raw), series =
         # the partials themselves. The partials are persisted, so the two
         # commits read the SAME materialized increment — no second scan and
         # no window for a live source to diverge the tiers.
@@ -182,9 +216,7 @@ class TierPipeline:
                 ).localCheckpoint(eager=False)
                 raw_inc = merge_shard_partials(partial, with_max_ingest=True)
             else:
-                raw_inc = rollup_raw(
-                    fresh, salt_buckets=self.salt_buckets, with_max_ingest=True
-                )
+                raw_inc = rollup_raw(fresh, with_max_ingest=True)
             # checkpoint the merged increment: the raw write materializes it
             # and the 1h/compressed derivation then reads THESE blocks
             # instead of re-scanning the parquet files the commit just wrote
@@ -514,7 +546,7 @@ class TierPipeline:
         """Gap-fill the (source, shard) sub-series with the Kalman kernel.
 
         Scale shape (the round-1 review's top perf fix): per-(source, shard)
-        doc-wide rows → ONE mapInPandas kernel execution emitting output AND
+        doc-wide rows → ONE mapInArrow kernel execution emitting output AND
         resumable state together (persisted, so the two tier writes share
         it), grid bounds from a single min/max action, parallelism
         5 × kf_shards instead of 5.
@@ -585,27 +617,7 @@ class TierPipeline:
                 else self.series.read(spark)
             )
 
-        # doc-wide SPARSE layout: one row per sub-series with sorted
-        # (steps, vals) arrays — densified by O(n) numpy scatter inside the
-        # kernel runner. (A JVM-side dense build via map lookups is O(n²)
-        # per series: measured as the entire stage cost on long grids.)
-        step = ((F.col("bucket_es") - F.lit(lo)) / RAW_SECONDS).cast("int")
-        ent = F.array_sort(F.collect_list(F.struct(F.col("step"), F.col("value"))))
-        wide = (
-            scan.filter(F.col("bucket_es") >= F.lit(lo))
-            .select(
-                F.concat_ws("/", "source", "shard").alias("doc_id"),
-                step.alias("step"),
-                F.col("sum_tok").cast("double").alias("value"),
-            )
-            .groupBy("doc_id")
-            .agg(ent.alias("_e"))
-            .select(
-                "doc_id",
-                F.transform(F.col("_e"), lambda s: s["step"]).alias("steps"),
-                F.transform(F.col("_e"), lambda s: s["value"]).alias("vals"),
-            )
-        )
+        wide = _subseries_wide(scan, lo)
         if prev is not None:
             # FULL outer: a sub-series with state but no rows inside the
             # incremental window must still resume (gap-forecast to the new
@@ -614,10 +626,12 @@ class TierPipeline:
             wide = wide.join(prev, "doc_id", "full")
 
         self.stage_sec["kf_meta"] = round(time.perf_counter() - _t_meta, 4)
-        combined = kalman_gapfill_combined(wide, t_grid, self.kf_cfg).persist()
+        combined = kalman_gapfill_wide(
+            wide, t_grid, self.kf_cfg, with_state=True
+        ).persist()
         if os.environ.get("SPARK_GRAFT_STAGE_TIMINGS"):
             # probe mode: force the kernel job into its own section (the
-            # incremental scan + doc-wide groupBy + mapInPandas kernel +
+            # incremental scan + doc-wide groupBy + mapInArrow kernel +
             # persist). Default runs leave `combined` lazy so the state
             # write overlaps the output explode/stitch — don't enable this
             # on headline timings.
@@ -649,30 +663,7 @@ class TierPipeline:
                 2,  # coalesce: tiny table — one file beats 32 footer reads
             )
             _t_out = time.perf_counter()
-            out = explode_kf_output(combined, t_grid, with_t=False)
-            src_shard = F.split(F.col("doc_id"), "/")
-            rows = (
-                out
-                # the kernel slices each doc's emit to [emit0, M) so archived
-                # steps never reach the explode; this filter is a residual
-                # guard against NaN/NULL phases (pandas→Arrow NULL trip)
-                .filter(F.col("phase").isNotNull() & ~F.isnan("phase"))
-                .select(
-                    F.element_at(src_shard, 1).alias("source"),
-                    F.element_at(src_shard, 2).cast("int").alias("shard"),
-                    (
-                        F.lit(lo) + F.col("step").cast("long") * F.lit(RAW_SECONDS)
-                    ).alias("bucket_es"),
-                    "phase",
-                    "std",
-                    # NaN (no update at this step) → NULL for the stitch
-                    F.when(F.isnan("innov"), F.lit(None)).otherwise(
-                        F.col("innov")
-                    ).alias("innov"),
-                    "gap_filled",
-                )
-                .withColumn("pday", _pday())
-            )
+            rows = _gap_rows(combined, t_grid, lo)
 
             # stitch: the resume re-emits the overlap window; affected day
             # partitions get (old rows before the window) ∪ (re-emitted
@@ -828,7 +819,7 @@ class TierPipeline:
         every raw bucket it touches. From the corrected documents this
         derives, in one pass over the (tiny) correction frame:
 
-        - the raw-tier corrections (shard-partial merge — the same salted
+        - the raw-tier corrections (shard-partial merge — the same
           two-stage aggregation as ingest) → :meth:`correct_raw` upserts
           them and recomputes the affected days' 1h/1d/compressed tiers;
         - the series-tier corrections at (source, shard, bucket) → upsert
@@ -937,47 +928,14 @@ class TierPipeline:
         hi = lo + m * RAW_SECONDS
         ser = (
             self.series.read(spark)
-            .withColumn("doc_id", F.concat_ws("/", "source", "shard"))
-            .filter(F.col("doc_id").isin(keys))
-            .filter((F.col("bucket_es") >= F.lit(lo)) & (F.col("bucket_es") < F.lit(hi)))
+            .filter(F.concat_ws("/", "source", "shard").isin(keys))
+            .filter(F.col("bucket_es") < F.lit(hi))
         )
-        step = ((F.col("bucket_es") - F.lit(lo)) / RAW_SECONDS).cast("int")
-        ent = F.array_sort(F.collect_list(F.struct(F.col("step"), F.col("value"))))
-        wide = (
-            ser.select(
-                "doc_id",
-                step.alias("step"),
-                F.col("sum_tok").cast("double").alias("value"),
-            )
-            .groupBy("doc_id")
-            .agg(ent.alias("_e"))
-            .select(
-                "doc_id",
-                F.transform(F.col("_e"), lambda s: s["step"]).alias("steps"),
-                F.transform(F.col("_e"), lambda s: s["value"]).alias("vals"),
-            )
-        )
-        combined = kalman_gapfill_combined(wide, t_grid, self.kf_cfg).persist()
+        combined = kalman_gapfill_wide(
+            _subseries_wide(ser, lo), t_grid, self.kf_cfg, with_state=True
+        ).persist()
         try:
-            out = explode_kf_output(combined, t_grid, with_t=False)
-            src_shard = F.split(F.col("doc_id"), "/")
-            rows = (
-                out.filter(F.col("phase").isNotNull() & ~F.isnan("phase"))
-                .select(
-                    F.element_at(src_shard, 1).alias("source"),
-                    F.element_at(src_shard, 2).cast("int").alias("shard"),
-                    (
-                        F.lit(lo) + F.col("step").cast("long") * F.lit(RAW_SECONDS)
-                    ).alias("bucket_es"),
-                    "phase",
-                    "std",
-                    F.when(F.isnan("innov"), F.lit(None)).otherwise(
-                        F.col("innov")
-                    ).alias("innov"),
-                    "gap_filled",
-                )
-                .withColumn("pday", _pday())
-            )
+            rows = _gap_rows(combined, t_grid, lo)
             sid = self.gap.upsert(
                 spark,
                 rows,

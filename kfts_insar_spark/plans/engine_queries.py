@@ -13,7 +13,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.compress import compress_tier, decompress_tier
-from ..operators.kalman import KFConfig, kalman_gapfill
+from ..operators.kalman import (
+    KFConfig,
+    explode_kf_output,
+    kalman_gapfill_wide,
+    to_wide,
+)
 from ..operators.rollup import (
     DAY_SECONDS,
     HOUR_SECONDS,
@@ -38,7 +43,7 @@ def q_seq_rollup_raw(spark, sf_dir):
 
 
 def q_seq_rollup_raw_salted(spark, sf_dir):
-    return rollup_raw(_seq(spark, sf_dir), salt_buckets=16)
+    return rollup_raw(_seq(spark, sf_dir))
 
 
 def q_seq_rollup_1h(spark, sf_dir):
@@ -178,7 +183,7 @@ def q_kf_gapfill_phases(spark, sf_dir):
     recomputation — per-source row (n_steps, n_mismatch) with n_steps
     SQL-derivable from the bucket grid and n_mismatch exactly 0."""
     ser, t, m = _kf_series(spark, sf_dir)
-    out = kalman_gapfill(ser, t, _KF_CFG, num_buckets=8)
+    out = explode_kf_output(kalman_gapfill_wide(to_wide(ser), t, _KF_CFG), t)
     ora = _kf_dense_oracle(ser, t)
     j = out.join(ora, ["doc_id", "step"], "inner")
     return j.groupBy("doc_id").agg(
@@ -200,7 +205,7 @@ def q_kf_innovation_stats(spark, sf_dir):
     checked against the in-query dense oracle and reported as a mismatch
     count (exactly 0)."""
     ser, t, m = _kf_series(spark, sf_dir)
-    out = kalman_gapfill(ser, t, _KF_CFG, num_buckets=8)
+    out = explode_kf_output(kalman_gapfill_wide(to_wide(ser), t, _KF_CFG), t)
     ora = _kf_dense_oracle(ser, t)
     j = out.join(ora, ["doc_id", "step"], "inner")
     per_doc = j.groupBy("doc_id").agg(
@@ -247,10 +252,16 @@ def q_kf_check_fit(spark, sf_dir):
     passes the smooth ones, so the gate is exercised in both directions."""
     import pandas as pd
 
-    from ..operators.kalman import kalman_direct_oracle, kalman_fit_flags
+    from ..operators.kalman import kalman_direct_oracle
 
     ser, t, m = _kf_series(spark, sf_dir)
-    flags = kalman_fit_flags(ser, t, _CHECK_CFG, num_buckets=8)
+    # n_obs = update steps with data = innovations present (NaN elsewhere)
+    flags = kalman_gapfill_wide(to_wide(ser), t, _CHECK_CFG).select(
+        "doc_id",
+        F.size(F.filter("innov", lambda x: ~F.isnan(x))).cast("long").alias("n_obs"),
+        "fit_flag",
+        "fit_max",
+    )
 
     M = len(t)
 
@@ -285,8 +296,6 @@ def q_kf_resume_consistency(spark, sf_dir):
     """Self-checking: |oneshot − (run+resume)| summed over every (doc, step)
     must be exactly 0 (reference update-mode test, split_data_4test.py).
     Oracle: the constant row (0 mismatches)."""
-    from ..operators.kalman import kalman_resume
-
     raw = rollup_raw(_seq(spark, sf_dir))
     lo, hi = raw.agg(F.min("bucket_es"), F.max("bucket_es")).first()
     m = int((hi - lo) // RAW_SECONDS) + 1
@@ -301,14 +310,15 @@ def q_kf_resume_consistency(spark, sf_dir):
         F.col("sum_tok").cast("double").alias("value"),
     )
     cfg = KFConfig(model=[("POLY", 1)], sig_y=5e4, sig_i=1e4, sig_a=1e7, t_sep=4)
-    one = kalman_gapfill(ser, t, cfg, num_buckets=4)
+    one = explode_kf_output(kalman_gapfill_wide(to_wide(ser), t, cfg), t)
     k_split = max(cfg.t_sep + 2, m // 2)
-    st = kalman_gapfill(
-        ser.filter(F.col("step") < k_split), t[:k_split], cfg, num_buckets=4,
-        emit_state=True,
-    )
-    upd = kalman_resume(
-        ser.filter(F.col("step") >= k_split), st, t, cfg, num_buckets=4
+    st = kalman_gapfill_wide(
+        to_wide(ser.filter(F.col("step") < k_split)), t[:k_split], cfg,
+        with_state=True,
+    ).select("doc_id", "k_done", "idx0", "m", "P")
+    new = to_wide(ser.filter(F.col("step") >= k_split))
+    upd = explode_kf_output(
+        kalman_gapfill_wide(new.join(st, "doc_id", "full"), t, cfg), t
     )
     j = one.alias("a").join(
         upd.alias("b"), ["doc_id", "step"], "inner"

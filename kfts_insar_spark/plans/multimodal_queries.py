@@ -82,7 +82,7 @@ SELECT doc_id,
        ROUND(s2::DOUBLE / n2, 6) AS mean_c2,
        ROUND(SQRT(GREATEST(sq::DOUBLE / n - (sa::DOUBLE / n) * (sa::DOUBLE / n),
                            0.0)), 6) AS std_all,
-       fpsum % {_FP_MOD} AS hist_fp
+       CAST(fpsum % {_FP_MOD} AS BIGINT) AS hist_fp
 FROM agg ORDER BY doc_id
 """
 

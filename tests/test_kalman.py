@@ -10,10 +10,12 @@ import pytest
 from kfts_insar_spark.functions.basis import basis_matrix, weighted_lsq
 from kfts_insar_spark.operators.kalman import (
     KFConfig,
+    explode_kf_output,
     kalman_direct_batch,
     kalman_direct_oracle,
-    kalman_gapfill,
+    kalman_gapfill_wide,
     kalman_pairs_doc,
+    to_wide,
 )
 
 MODEL = [("POLY", 1), ("SIN", 2 * np.pi), ("COS", 2 * np.pi), ("STEP", 1.5)]
@@ -46,6 +48,70 @@ def make_series(n_docs: int, seed: int = 46, gap_frac: float = 0.2):
 
 
 CFG = KFConfig(model=MODEL, sig_y=1.0, sig_i=0.5, sig_a=30.0, t_sep=4)
+
+STATE_COLS = ["doc_id", "k_done", "idx0", "m", "P"]
+
+
+def gapfill_long(series, t, cfg=CFG):
+    """Long (doc_id, step, value) rows → long KF_OUTPUT rows, the way every
+    long-form caller runs the kernel: to_wide → adapter → explode."""
+    return explode_kf_output(kalman_gapfill_wide(to_wide(series), t, cfg), t)
+
+
+def state_of(series, t, cfg=CFG):
+    """The resumable state snapshot after running ``series`` over ``t``."""
+    return kalman_gapfill_wide(to_wide(series), t, cfg, with_state=True).select(
+        *STATE_COLS
+    )
+
+
+def resume_long(series, state, t, cfg=CFG):
+    """Resume from ``state`` over the extended grid ``t``: docs with state
+    and no new rows still resume, docs without state cold-start."""
+    wide = to_wide(series).join(state, "doc_id", "full")
+    return explode_kf_output(kalman_gapfill_wide(wide, t, cfg), t)
+
+
+def wide_frame(spark, y, states, layout="sparse"):
+    """One adapter input row per row of ``y`` (NaN = gap; a row without
+    observations gets NULL data arrays). ``states[b]`` is a
+    kalman_direct_batch result whose row b resumes doc b, or None (NULL
+    state = cold start)."""
+    rows = []
+    for b, res in enumerate(states):
+        obs = np.flatnonzero(np.isfinite(y[b]))
+        if layout == "dense":
+            data = ([None if np.isnan(v) else float(v) for v in y[b]] if len(obs) else None,)
+        else:
+            data = (
+                ([int(k) for k in obs], [float(y[b, k]) for k in obs])
+                if len(obs)
+                else (None, None)
+            )
+        state = (
+            (None, None, None, None)
+            if res is None
+            else (
+                int(res["k_done"]),
+                int(res["idx0"]),
+                [float(v) for v in res["m"][b]],
+                [float(v) for v in res["P"][b].ravel()],
+            )
+        )
+        rows.append((f"d{b:03d}",) + data + state)
+    cols = (
+        "values array<double>"
+        if layout == "dense"
+        else "steps array<int>, vals array<double>"
+    )
+    return spark.createDataFrame(
+        rows,
+        f"doc_id string, {cols}, k_done int, idx0 int, m array<double>, P array<double>",
+    )
+
+
+def as_float(xs):
+    return np.array([np.nan if x is None else x for x in xs], dtype=np.float64)
 
 
 def test_batch_kernel_matches_dense_oracle():
@@ -131,7 +197,8 @@ def test_pairs_mode_matches_direct_on_adjacent_pairs():
 
 
 def test_spark_gapfill_matches_local_kernel(spark):
-    """applyInPandas wrapper == local batch kernel, doc for doc."""
+    """Long rows through to_wide → adapter → explode == local batch kernel,
+    doc for doc and step for step."""
     _, y, _, _ = make_series(12)
     B = y.shape[0]
     rows = []
@@ -141,7 +208,7 @@ def test_spark_gapfill_matches_local_kernel(spark):
     pdf = pd.DataFrame(rows, columns=["doc_id", "step", "t", "value"])
     sdf = spark.createDataFrame(pdf)
     out = (
-        kalman_gapfill(sdf, T, CFG, num_buckets=4)
+        gapfill_long(sdf, T)
         .toPandas()
         .sort_values(["doc_id", "step"])
         .reset_index(drop=True)
@@ -154,6 +221,81 @@ def test_spark_gapfill_matches_local_kernel(spark):
     assert bool(out["gap_filled"].sum()) and int(out["gap_filled"].sum()) == int(
         np.isnan(y[:, 1:]).sum()
     )
+
+
+@pytest.mark.parametrize("start", ["cold", "resumed", "state_only"])
+@pytest.mark.parametrize("layout", ["dense", "sparse"])
+def test_adapter_matches_batch_kernel(spark, layout, start):
+    """The mapInArrow adapter == kalman_direct_batch, doc for doc, for both
+    input layouts and every way a row can start: cold (NULL state), resumed
+    from a state snapshot with new data, or state-only (NULL data arrays,
+    the full outer join's right-only rows), which still re-emits its
+    overlap window and forecasts every new step."""
+    _, y, _, _ = make_series(5)
+    k_split = 60
+    prev = None
+    if start != "cold":
+        prev = kalman_direct_batch(y[:, :k_split], T[:k_split], CFG)
+        y = np.where(np.arange(M) >= k_split, y, np.nan)
+        if start == "state_only":
+            y[:] = np.nan
+    init = (
+        None
+        if prev is None
+        else {"X": prev["m"], "P": prev["P"], "idx0": prev["idx0"], "k_done": prev["k_done"]}
+    )
+    want = kalman_direct_batch(y, T, CFG, init=init)
+    e0 = 0 if prev is None else int(prev["idx0"])
+    wide = wide_frame(spark, y, [prev] * len(y), layout)
+    out = (
+        kalman_gapfill_wide(wide, T, CFG, with_state=True)
+        .toPandas()
+        .set_index("doc_id")
+        .sort_index()
+    )
+    assert list(out.index) == [f"d{b:03d}" for b in range(len(y))]
+    assert (out["emit0"] == e0).all()
+    for b, (_, r) in enumerate(out.iterrows()):
+        for key in ("phase", "std", "innov"):
+            np.testing.assert_allclose(
+                as_float(r[key]), want[key][b, e0:], rtol=1e-12
+            )
+        assert list(r["gap"]) == list(want["gap"][b, e0:])
+        np.testing.assert_allclose(as_float(r["m"]), want["m"][b], rtol=1e-12)
+        np.testing.assert_allclose(
+            as_float(r["P"]), want["P"][b].ravel(), rtol=1e-12
+        )
+        assert (r["k_done"], r["idx0"]) == (M, want["idx0"])
+        assert r["fit_flag"] == want["fit_flag"][b]
+    if start == "state_only":
+        assert want["gap"][:, k_split:].all()
+        assert np.isfinite(want["phase"][:, e0:]).all()
+
+
+def test_adapter_rejects_step_outside_grid(spark):
+    """A sparse step outside [0, M) fails loudly, naming the doc, instead
+    of wrapping into the last grid columns."""
+    from pyspark.errors import PythonException
+
+    wide = spark.createDataFrame(
+        [("d0", [0, 1], [0.0, 1.0]), ("d1", [0, -1], [0.0, 2.0])],
+        "doc_id string, steps array<int>, vals array<double>",
+    )
+    with pytest.raises(PythonException, match=r"doc 'd1': step -1 lies outside"):
+        kalman_gapfill_wide(wide, T, CFG).collect()
+
+
+def test_adapter_rejects_dense_row_of_wrong_length(spark):
+    """A dense values row shorter than the grid fails loudly, naming the
+    doc, instead of being padded with gaps."""
+    from pyspark.errors import PythonException
+
+    wide = spark.createDataFrame(
+        [("d0", [0.0] * M), ("d1", [0.0] * (M - 1))],
+        "doc_id string, values array<double>",
+    )
+    with pytest.raises(PythonException, match=rf"doc 'd1': {M - 1} values for a {M}-step grid"):
+        kalman_gapfill_wide(wide, T, CFG).collect()
 
 
 def test_resume_equals_oneshot_local():
@@ -181,8 +323,6 @@ def test_resume_equals_oneshot_local():
 
 
 def test_spark_resume_equals_oneshot(spark):
-    from kfts_insar_spark.operators.kalman import kalman_resume
-
     _, y, _, _ = make_series(8)
     B = y.shape[0]
     k_split = 55
@@ -199,23 +339,14 @@ def test_spark_resume_equals_oneshot(spark):
         )
 
     one = (
-        kalman_gapfill(to_sdf(y, T, range(M)), T, CFG, num_buckets=3)
+        gapfill_long(to_sdf(y, T, range(M)), T)
         .toPandas().sort_values(["doc_id", "step"]).reset_index(drop=True)
     )
-    st = kalman_gapfill(
-        to_sdf(y, T, range(k_split)), T[:k_split], CFG, num_buckets=3,
-        emit_state=True,
-    )
-    upd = (
-        kalman_resume(to_sdf(y, T, range(k_split, M)), st, T, CFG, num_buckets=3)
-        .toPandas()
-    )
+    st = state_of(to_sdf(y, T, range(k_split)), T[:k_split])
+    upd = resume_long(to_sdf(y, T, range(k_split, M)), st, T).toPandas()
     # stitch: updated steps replace, archived steps kept from nothing (they
     # were never emitted in this split-run — reconstruct from run1 output)
-    r1 = (
-        kalman_gapfill(to_sdf(y, T, range(k_split)), T[:k_split], CFG, num_buckets=3)
-        .toPandas()
-    )
+    r1 = gapfill_long(to_sdf(y, T, range(k_split)), T[:k_split]).toPandas()
     upd_keys = set(zip(upd.doc_id, upd.step))
     stitched = pd.concat(
         [upd, r1[~r1.apply(lambda r: (r.doc_id, r.step) in upd_keys, axis=1)]]
@@ -225,31 +356,6 @@ def test_spark_resume_equals_oneshot(spark):
     )
     np.testing.assert_allclose(
         stitched["std"].to_numpy(), one["std"].to_numpy(), rtol=0, atol=0
-    )
-
-
-def test_aligned_path_matches_grouped(spark):
-    """Shuffle-free mapInPandas path == grouped-map path on aligned input."""
-    from kfts_insar_spark.operators.kalman import kalman_gapfill_aligned
-    from kfts_insar_spark.synth import series as synth_series
-
-    ser = synth_series(spark, 64, 92, partitions=8)  # 64 % 8 == 0 → aligned
-    a = (
-        kalman_gapfill_aligned(ser, T, CFG)
-        .toPandas().sort_values(["doc_id", "step"]).reset_index(drop=True)
-    )
-    b = (
-        kalman_gapfill(ser, T, CFG, num_buckets=4)
-        .toPandas().sort_values(["doc_id", "step"]).reset_index(drop=True)
-    )
-    assert len(a) == len(b) == 64 * 92
-    # batch size differs between the two paths → BLAS blocking differs →
-    # last-ulp float differences; tolerance matches the oracle tests
-    np.testing.assert_allclose(
-        a.phase.to_numpy(), b.phase.to_numpy(), rtol=1e-9, atol=1e-9
-    )
-    np.testing.assert_allclose(
-        a["std"].to_numpy(), b["std"].to_numpy(), rtol=1e-9, atol=1e-9
     )
 
 
@@ -287,8 +393,6 @@ def test_resume_mixed_strata_and_cold_start(spark):
     state snapshot (heterogeneous strata), and brand-new docs have no state
     row at all — resume must handle both, matching the one-shot run exactly
     and cold-starting left-only docs instead of dropping them."""
-    from kfts_insar_spark.operators.kalman import kalman_resume
-
     _, y, _, _ = make_series(7)
     ka, kb = 50, 60
     docs_a = [f"d{b:03d}" for b in range(3)]
@@ -309,24 +413,19 @@ def test_resume_mixed_strata_and_cold_start(spark):
         )
 
     one = (
-        kalman_gapfill(to_sdf([f"d{b:03d}" for b in range(7)], range(M)), T, CFG,
-                       num_buckets=3)
+        gapfill_long(to_sdf([f"d{b:03d}" for b in range(7)], range(M)), T)
         .toPandas()
         .set_index(["doc_id", "step"])
         .sort_index()
     )
-    st_a = kalman_gapfill(
-        to_sdf(docs_a, range(ka)), T[:ka], CFG, num_buckets=3, emit_state=True
-    )
-    st_b = kalman_gapfill(
-        to_sdf(docs_b, range(kb)), T[:kb], CFG, num_buckets=3, emit_state=True
-    )
+    st_a = state_of(to_sdf(docs_a, range(ka)), T[:ka])
+    st_b = state_of(to_sdf(docs_b, range(kb)), T[:kb])
     new = (
         to_sdf(docs_a, range(ka, M))
         .unionByName(to_sdf(docs_b, range(kb, M)))
         .unionByName(to_sdf([cold], range(M)))
     )
-    upd = kalman_resume(new, st_a.unionByName(st_b), T, CFG, num_buckets=3).toPandas()
+    upd = resume_long(new, st_a.unionByName(st_b), T).toPandas()
 
     # the cold doc gets its FULL series (cold start), not dropped
     assert (upd.doc_id == cold).sum() == M
@@ -443,76 +542,6 @@ def test_earthquake_prior_p0_pins_far_docs():
         np.testing.assert_allclose(res["m"][b], ora["m"], rtol=1e-7, atol=1e-9)
 
 
-def test_combined_sparse_resumes_state_only_rows(spark):
-    """kalman_gapfill_combined, sparse layout: a sub-series with committed
-    state but NO rows in the incremental window (NULL steps/vals from the
-    outer join) must still resume — re-emitting its overlap window and
-    forecasting the extended grid — and a cold row must start fresh."""
-    from kfts_insar_spark.operators.kalman import kalman_gapfill_combined
-
-    _, y, _, _ = make_series(3)
-    k_split = 60
-    r1 = kalman_direct_batch(y[:, :k_split], T[:k_split], CFG)
-    rows = []
-    # doc 0: state + new data; doc 1: state only; doc 2: cold with data
-    for b, with_state, with_data in ((0, True, True), (1, True, False), (2, False, True)):
-        steps = vals = None
-        if with_data:
-            ks = [k for k in range((k_split if with_state else 0), M)
-                  if np.isfinite(y[b, k])]
-            steps = [int(k) for k in ks]
-            vals = [float(y[b, k]) for k in ks]
-        st = (
-            (int(r1["k_done"]), int(r1["idx0"]),
-             [float(v) for v in r1["m"][b]],
-             [float(v) for v in r1["P"][b].ravel()])
-            if with_state
-            else (None, None, None, None)
-        )
-        rows.append((f"d{b:03d}", steps, vals) + st)
-    wide = spark.createDataFrame(
-        rows,
-        "doc_id string, steps array<int>, vals array<double>, "
-        "k_done int, idx0 int, m array<double>, P array<double>",
-    )
-    out = (
-        kalman_gapfill_combined(wide, T, CFG)
-        .toPandas()
-        .set_index("doc_id")
-        .sort_index()
-    )
-    assert set(out.index) == {"d000", "d001", "d002"}
-    # resumed docs emit only their window [idx0_prev, M); cold docs the
-    # full grid — emit0 records each row's absolute start step
-    e0 = int(r1["idx0"])
-    assert int(out.loc["d001", "emit0"]) == e0
-    assert int(out.loc["d000", "emit0"]) == e0
-    assert int(out.loc["d002", "emit0"]) == 0
-    # doc 1 (state-only): overlap re-emitted + pure forecasts to the end
-    p1 = np.asarray(out.loc["d001", "phase"], dtype=np.float64)
-    assert len(p1) == M - e0
-    assert np.isfinite(p1).all()
-    g1 = np.asarray(out.loc["d001", "gap"])
-    assert all(bool(v) for v in g1[k_split - e0:])  # every new step forecast
-    assert out.loc["d001", "k_done"] == M
-    # doc 0 matches a direct resume; doc 2 matches a cold full run
-    y0 = y.copy()
-    r2 = kalman_direct_batch(
-        y0[0:1], T, CFG,
-        init={"X": r1["m"][0:1], "P": r1["P"][0:1],
-              "idx0": r1["idx0"], "k_done": r1["k_done"]},
-    )
-    np.testing.assert_allclose(
-        np.asarray(out.loc["d000", "phase"], dtype=np.float64)[k_split - e0:],
-        r2["phase"][0][k_split:], rtol=1e-12,
-    )
-    cold = kalman_direct_batch(y[2:3], T, CFG)
-    np.testing.assert_allclose(
-        np.asarray(out.loc["d002", "phase"], dtype=np.float64),
-        cold["phase"][0], rtol=1e-12,
-    )
-
-
 # ---------------------------------------------------------------- check_fit
 def test_check_fit_flags_misfit_series():
     """The in-loop quality gate (reference check_fit, kf/KF_class.py:319-333):
@@ -551,12 +580,7 @@ def test_check_fit_gap_steps_do_not_update_window(spark):
     """Gap (forecast-only) steps carry no residual: a gappy series and its
     dense restriction produce identical flags (the trailing window skips
     unobserved steps, like the reference which only checks inside update)."""
-    from kfts_insar_spark.operators.kalman import (
-        KFConfig,
-        kalman_direct_batch,
-        kalman_fit_flags,
-    )
-    import pandas as pd
+    from pyspark.sql import functions as F
 
     M = 40
     T = np.arange(M) / 365.25
@@ -579,7 +603,14 @@ def test_check_fit_gap_steps_do_not_update_window(spark):
         pd.DataFrame(rows, columns=["doc_id", "step", "t", "value"])
     )
     got = (
-        kalman_fit_flags(ser, T, cfg, num_buckets=2)
+        kalman_gapfill_wide(to_wide(ser), T, cfg)
+        .select(
+            "doc_id",
+            # update steps with data = innovations present (NaN elsewhere)
+            F.size(F.filter("innov", lambda x: ~F.isnan(x))).alias("n_obs"),
+            "fit_flag",
+            "fit_max",
+        )
         .toPandas()
         .set_index("doc_id")
         .sort_index()
@@ -688,53 +719,11 @@ def test_liseg_three_segment_handoff_non_chained():
     np.testing.assert_allclose(res["m"][0], ora["m"], rtol=1e-9)
 
 
-def test_explode_handles_frames_without_emit0(spark):
-    """explode_kf_output must serve BOTH producers: the combined kernel
-    (emit0-sliced arrays) and kalman_gapfill_wide (full-grid arrays, no
-    emit0 column -> implicit 0). Exploding the wide path's cold output
-    must cover every grid step with the right t values and match the
-    kernel's array contents position-for-position."""
-    import pandas as pd
-
-    from kfts_insar_spark.operators.kalman import (
-        explode_kf_output,
-        kalman_direct_batch,
-        kalman_gapfill_wide,
-    )
-
-    _, y, _, _ = make_series(3)
-    wide = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "doc_id": [f"d{b}" for b in range(3)],
-                "values": [
-                    [None if not np.isfinite(v) else float(v) for v in y[b]]
-                    for b in range(3)
-                ],
-            }
-        )
-    )
-    out = explode_kf_output(
-        kalman_gapfill_wide(wide, T, CFG), T
-    ).toPandas()
-    assert len(out) == 3 * M
-    g = out[out.doc_id == "d1"].sort_values("step")
-    assert list(g["step"]) == list(range(M))
-    np.testing.assert_allclose(g["t"].to_numpy(), T, rtol=1e-12)
-    ref = kalman_direct_batch(y[1:2], T, CFG)
-    np.testing.assert_allclose(
-        g["phase"].to_numpy(), ref["phase"][0], rtol=1e-9
-    )
-
-
 def test_wide_kernel_batch_slicing_is_value_invariant(spark):
-    """The Arrow-path kernel slices its buffered input to min_batch_docs
-    (cache sizing); docs are independent along the batch axis, so any
-    slicing must yield identical results."""
-    from kfts_insar_spark.operators.kalman import (
-        KFConfig,
-        kalman_gapfill_wide,
-    )
+    """The adapter slices its buffered input to min_batch_docs (cache
+    sizing) and each slice into state strata; docs are independent along
+    the batch axis, so any slicing must yield identical results — for cold
+    rows and for rows resuming from mixed (k_done, idx0) strata."""
     from kfts_insar_spark.synth import series_wide
 
     t = np.arange(30) * 12.0 / 365.25
@@ -755,3 +744,25 @@ def test_wide_kernel_batch_slicing_is_value_invariant(spark):
         )
 
     assert rows(7) == rows(1000)
+
+    # resumed rows from two snapshots (k_done 50 and 60) next to cold rows
+    _, y, _, _ = make_series(12)
+    ra = kalman_direct_batch(y[:, :50], T[:50], CFG)
+    rb = kalman_direct_batch(y[:, :60], T[:60], CFG)
+    y[:4, :50] = np.nan
+    y[4:8, :60] = np.nan
+    resumed = wide_frame(spark, y, [ra] * 4 + [rb] * 4 + [None] * 4).coalesce(1)
+
+    def state_rows(mbd):
+        out = kalman_gapfill_wide(
+            resumed, T, CFG, with_state=True, min_batch_docs=mbd
+        ).collect()
+        return sorted(
+            (r.doc_id, r.emit0, canon(r.phase), canon(r.std), canon(r.innov),
+             tuple(r.gap), tuple(r.m), tuple(r.P))
+            for r in out
+        )
+
+    got = state_rows(3)
+    assert {r[1] for r in got} == {0, int(ra["idx0"]), int(rb["idx0"])}
+    assert got == state_rows(1000)

@@ -69,11 +69,15 @@ def test_streaming_to_batch_handover(spark, tmp_path):
     resume at any micro-batch boundary. Docs stream at DIFFERENT rates (so
     the state store holds heterogeneous per-doc k_done/idx0 — the round-1
     resume bug scenario), the state is read back via Spark's statestore
-    reader, and kalman_resume continues each doc to the full grid, matching
-    the one-shot batch run."""
+    reader, and the Kalman adapter resumes each doc to the full grid,
+    matching the one-shot batch run."""
     from pyspark.sql import functions as F
 
-    from kfts_insar_spark.operators.kalman import kalman_resume
+    from kfts_insar_spark.operators.kalman import (
+        explode_kf_output,
+        kalman_gapfill_wide,
+        to_wide,
+    )
 
     _, y, _, _ = make_series(5)
     B = y.shape[0]
@@ -126,7 +130,8 @@ def test_streaming_to_batch_handover(spark, tmp_path):
     rest = spark.createDataFrame(
         rows_for(lambda b: range(cut[b], M))
     ).selectExpr("doc_id", "cast(step as int) step", "t", "value")
-    upd = kalman_resume(rest, st, T, CFG, num_buckets=3).toPandas()
+    wide = to_wide(rest).join(st, "doc_id", "full")
+    upd = explode_kf_output(kalman_gapfill_wide(wide, T, CFG), T).toPandas()
 
     one = kalman_direct_batch(y, T, CFG)
     for _, r in upd.iterrows():

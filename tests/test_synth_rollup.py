@@ -67,9 +67,3 @@ def test_tiers_match_oracle_and_cascade(seq):
     # cascade == direct
     hd = sorted(tuple(r) for r in rollup_direct(seq, HOUR_SECONDS).collect())
     assert sorted(tuple(r) for r in h1.collect()) == hd
-
-
-def test_salted_rollup_equals_unsalted(seq):
-    a = sorted(tuple(r) for r in rollup_raw(seq, salt_buckets=16).collect())
-    b = sorted(tuple(r) for r in rollup_raw(seq).collect())
-    assert a == b

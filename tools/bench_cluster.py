@@ -210,13 +210,7 @@ def driver(cores_max: int, pkg_root: str | None = None) -> None:
 
     def job_tiers():
         seq = spark.read.parquet(f"{INPUT_DIR}/seqmeta")
-        # salt FIXED across levels: salting with cores_max would give the
-        # 4N level 4x the partial-agg groups — a different job, not the
-        # same job at higher parallelism
-        rollup_cascade(
-            rollup_raw(seq, salt_buckets=int(os.environ.get("SCALE_SALT", "32"))),
-            HOUR_SECONDS,
-        ).count()
+        rollup_cascade(rollup_raw(seq), HOUR_SECONDS).count()
 
     def job_compress():
         raw = spark.read.parquet(f"{INPUT_DIR}/raw")

@@ -23,7 +23,7 @@ Protocol:
 Jobs:
 - kalman:   read wide series → mapInArrow KF gap-fill (cache-resident
             batches) → count
-- tiers:    read sequences → salted raw rollup → 1h cascade → count
+- tiers:    read sequences → raw rollup → 1h cascade → count
 - compress: read raw tier rows → Gorilla pack per (source, 6h chunk)
 - fingerprint: read sequences → higher-order array fold → sum
 
@@ -129,12 +129,7 @@ def child(cores: int) -> None:
 
     def job_tiers():
         seq = spark.read.parquet(f"{INPUT_DIR}/seqmeta")
-        # salt FIXED across levels (identical job; salting with `cores`
-        # gave the higher level 4x the partial-agg groups)
-        rollup_cascade(
-            rollup_raw(seq, salt_buckets=int(os.environ.get("SCALE_SALT", "32"))),
-            HOUR_SECONDS,
-        ).count()
+        rollup_cascade(rollup_raw(seq), HOUR_SECONDS).count()
 
     def job_compress():
         raw = spark.read.parquet(f"{INPUT_DIR}/raw")

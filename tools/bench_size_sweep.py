@@ -10,7 +10,7 @@ grows. Size efficiency = T(1×) / (T(4×) / 4): 1.0 means perfectly linear
 cost; > 1 means the 4× run is MORE efficient per row (fixed costs
 amortizing — expected at these sizes); < 0.8 would flag super-linear cost.
 
-Jobs mirror bench_scaling: kalman wide KF, salted tier rollup + cascade,
+Jobs mirror bench_scaling: kalman wide KF, tier rollup + cascade,
 Gorilla compress, HOF fingerprint. Inputs materialized untimed; one warm
 run then min of SIZE_TRIALS per point, all at local[32] in one JVM per
 size (fresh JVMs would only re-pay JIT identically at both points).
@@ -113,7 +113,7 @@ def child(mult: int) -> None:
 
     def job_tiers():
         seq = spark.read.parquet(f"{INPUT_DIR}/seqmeta_{mult}")
-        rollup_cascade(rollup_raw(seq, salt_buckets=CORES), HOUR_SECONDS).count()
+        rollup_cascade(rollup_raw(seq), HOUR_SECONDS).count()
 
     def job_compress():
         raw = spark.read.parquet(f"{INPUT_DIR}/raw_{mult}")
