@@ -419,15 +419,14 @@ def main() -> None:
         noop_dirs = iter(incr_dirs)
         timed("q_pipeline_noop", pipeline_noop, mk=lambda: next(noop_dirs))
         # --- one extra UNTIMED instrumented pass (fresh 90%-committed dir,
-        # sequential stages + forced kernel materialization) decomposing the
-        # resumed run into per-stage wall seconds — where incr's cost goes:
+        # forced kernel materialization) decomposing the resumed run into
+        # per-stage wall seconds — where incr's cost goes:
         # fixed floor (heal + property reads + manifest swaps) vs
         # data-proportional work (scans, kernel, writes). The probe changes
         # execution overlap, so its _total exceeds the headline
         # q_pipeline_incr; the stage split, not the total, is the payload.
         if _want("q_pipeline_incr"):
             os.environ["SPARK_GRAFT_STAGE_TIMINGS"] = "1"
-            os.environ["SPARK_GRAFT_SEQUENTIAL"] = "1"
             try:
                 td = mk_incr_dir()
                 for probe in ("q_pipeline_incr", "q_pipeline_noop"):
@@ -440,7 +439,6 @@ def main() -> None:
                     )
             finally:
                 os.environ.pop("SPARK_GRAFT_STAGE_TIMINGS", None)
-                os.environ.pop("SPARK_GRAFT_SEQUENTIAL", None)
     finally:
         for td in incr_dirs:
             shutil.rmtree(td, ignore_errors=True)

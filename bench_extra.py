@@ -38,7 +38,6 @@ def noop(df):
 def main() -> None:
     jobs = set(sys.argv[1:]) or {"tiers", "tiers_bulk", "kf"}
     os.environ["SPARK_GRAFT_STAGE_TIMINGS"] = "1"
-    os.environ["SPARK_GRAFT_SEQUENTIAL"] = "1"
 
     import shutil
     import tempfile

@@ -9,7 +9,8 @@ cascaded time-bucket rollups over the token-sequence table (SURVEY.md §2.4 A9):
 - 1 h tier:  derived FROM the raw tier (not from the base table) — at 100 TB the
   raw tier is ~3 orders of magnitude smaller than the base table, so cascading
   turns a full re-scan into a metadata-scale job (continuous-aggregate pattern)
-- 1 d tier:  derived from the 1 h tier, same reasoning.
+- 1 d tier:  derived from the raw tier too, same reasoning; the pipeline
+  cascades 1h and 1d side by side from the same affected raw days.
 
 All aggregates here are algebraic (sum/count/min/max decompose into partials),
 which is what makes the cascade EXACT, not approximate: sum of sums == sum,

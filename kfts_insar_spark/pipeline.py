@@ -18,14 +18,35 @@ Idempotency contract
 - the watermark advances only in the same commit that publishes the data, so
   a crash before commit re-processes the same slots into the same buckets.
 
+Run structure
+-------------
+A scheduled run costs in proportion to what changed:
+
+1. heal: bring tiers that a crashed run left behind raw's watermark up to it
+   (metadata reads only when nothing lags);
+2. probe: one emptiness check on the ingest rows past the watermark — a run
+   with no new data returns ``noop`` here, before any plan, checkpoint or
+   write is built;
+3. raw commit: one scan of the increment, aggregated and written in one job;
+4. concurrent chains: the derived tiers (1h, 1d and compressed side by side
+   from the same affected raw days), the series commit, and the KF gap-fill.
+   A resume feeds the kernel from the in-memory increment, so it does not
+   wait for the series commit; a cold run reads the committed series tier.
+
+The commit order stays raw → series → gap-filled → KF state (the gap commit
+waits for the series commit, the state publish for the gap commit), so a
+crash at any point leaves a prefix that the next run's heal completes.
+
 Tier tables partition by ``pday`` (UTC day string) — retention drops expired
 raw partitions via metadata-only deletes (SnapshotTable.drop_partitions).
 """
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -55,6 +76,19 @@ from .sources.snapshot import SnapshotTable
 
 def _pday(col: str = "bucket_es"):
     return F.date_format(F.timestamp_seconds(F.col(col)), "yyyy-MM-dd").alias("pday")
+
+
+def _day(es: int) -> str:
+    """The ``pday`` value of epoch second ``es`` (the session runs in UTC)."""
+    return dt.datetime.fromtimestamp(int(es), dt.timezone.utc).strftime("%Y-%m-%d")
+
+
+def _release(df: DataFrame) -> None:
+    """Free the blocks of a ``localCheckpoint`` frame. ``DataFrame.unpersist``
+    does not reach them: the checkpoint is an RDD under a LogicalRDD, not a
+    cached plan, so without this every run would leave its checkpoint
+    blocks in storage until a driver GC cleans them up."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def _subseries_wide(series: DataFrame, lo: int) -> DataFrame:
@@ -171,7 +205,13 @@ class TierPipeline:
 
     # ------------------------------------------------------------------ run
     def run(self, spark: SparkSession, seq: DataFrame) -> dict:
-        """Process all ingest batches newer than the committed watermark."""
+        """Process all ingest batches newer than the committed watermark.
+
+        Heal, then one emptiness probe (a run without new data returns
+        ``noop`` and writes nothing), then the raw commit, then the derived
+        tiers, the series commit and the KF gap-fill as concurrent chains;
+        the commit order stays raw → series → gap-filled → state (module
+        docstring, "Run structure")."""
         self.stage_sec = {}
         wm = int(self.raw.property("watermark_es", -1))
         # Heal first: a crash between the raw commit and the downstream
@@ -181,6 +221,15 @@ class TierPipeline:
         # permanently short of it.
         with self._stage("heal"):
             self._heal(spark, seq, wm)
+        fresh = seq.filter(F.col("ingest_es") > F.lit(wm))
+        # No-op exit on one emptiness probe, before any plan, checkpoint or
+        # write is built. Not a bounds read: rows that land after the probe
+        # go to the next run, and a non-empty increment still takes the
+        # single-scan write below. (A bounded source folds the two
+        # watermark filters into an empty plan and the probe runs no job.)
+        with self._stage("probe"):
+            if fresh.isEmpty():
+                return {"status": "noop", "watermark_es": wm}
         # ---- raw tier: append-only (each 300 s bucket is born complete).
         # ONE scan of the base table: the increment is aggregated and
         # written in the same job, and the new watermark derives from the
@@ -191,133 +240,116 @@ class TierPipeline:
         # data. Row counts / affected partitions for every stage likewise
         # come from the manifest metadata — each producing plan executes
         # exactly once (the write), never again for metrics.
-        fresh = seq.filter(F.col("ingest_es") > F.lit(wm))
+        #
         # With the KF stage on, the shard-level partials serve BOTH ingest
-        # tiers from ONE base scan: raw = shard merge (a two-stage
-        # aggregation over the doc-hash shard, equal to rollup_raw), series =
-        # the partials themselves. The partials are persisted, so the two
-        # commits read the SAME materialized increment — no second scan and
-        # no window for a live source to diverge the tiers.
-        with self._stage("ingest_raw"):
-            partial = None
-            if self.run_gapfill:
-                # localCheckpoint (not persist): the series commit re-reads
-                # this frame AFTER the raw commit fixed the watermark from
-                # its footer stats. A persisted frame can silently recompute
-                # from the live source on cache eviction, picking up rows
-                # past the committed watermark → double-counted KF input on
-                # the next run. A checkpoint truncates lineage: partitions
-                # either serve the materialization the raw commit saw, or
-                # the job FAILS (lost partitions are not recomputable) and
-                # the next run heals through the bounded fallback scan in
-                # _ingest_series.
-                partial = rollup_series_partial(
-                    fresh, self.kf_shards, with_max_ingest=True
-                ).localCheckpoint(eager=False)
-                raw_inc = merge_shard_partials(partial, with_max_ingest=True)
-            else:
-                raw_inc = rollup_raw(fresh, with_max_ingest=True)
-            # checkpoint the merged increment: the raw write materializes it
-            # and the 1h/compressed derivation then reads THESE blocks
-            # instead of re-scanning the parquet files the commit just wrote
-            # (one fewer tier scan per run; the prior-snapshot read below
-            # covers boundary days). Same lost-partition contract as
-            # `partial`: serve the materialization the commit saw, or fail.
-            prior_sid = self.raw.current_snapshot_id()
-            with self._stage("i_ckpt"):
-                raw_inc = raw_inc.withColumn("pday", _pday()).localCheckpoint(
+        # tiers and the KF resume from ONE base scan: raw = shard merge (a
+        # two-stage aggregation over the doc-hash shard, equal to
+        # rollup_raw), series = the partials themselves.
+        partial = raw_inc = None
+        try:
+            with self._stage("ingest_raw"):
+                if self.run_gapfill:
+                    # localCheckpoint (not persist): the series commit and
+                    # the KF resume read this frame AFTER the raw commit
+                    # fixed the watermark from its footer stats. A persisted
+                    # frame can silently recompute from the live source on
+                    # cache eviction, picking up rows past the committed
+                    # watermark → double-counted KF input on the next run. A
+                    # checkpoint truncates lineage: partitions either serve
+                    # the materialization the raw commit saw, or the job
+                    # FAILS (lost partitions are not recomputable) and the
+                    # next run heals through the bounded fallback scan in
+                    # _ingest_series.
+                    partial = rollup_series_partial(
+                        fresh, self.kf_shards, with_max_ingest=True
+                    ).localCheckpoint(eager=False)
+                    merged = merge_shard_partials(partial, with_max_ingest=True)
+                else:
+                    merged = rollup_raw(fresh, with_max_ingest=True)
+                # checkpoint the merged increment: the raw write materializes
+                # it and the derived tiers then read THESE blocks instead of
+                # re-scanning the parquet files the commit just wrote (the
+                # prior-snapshot read in _derive_tiers covers boundary
+                # days). Same lost-partition contract as `partial`.
+                prior_sid = self.raw.current_snapshot_id()
+                raw_inc = merged.withColumn("pday", _pday()).localCheckpoint(
                     eager=False
                 )
-            with self._stage("i_append"):
-                sid = self.raw.append(
-                    raw_inc,
-                partition_by=["pday"],
-                coalesce=_write_tasks(spark),  # optimize-write (scale-adaptive)
-                stats_cols=["max_ies"],
-                properties_fn=lambda entries: {
-                    "watermark_es": max(
-                        int(e["stats"]["max_ies"][1]) for e in entries
+                with self._stage("i_append"):
+                    sid = self.raw.append(
+                        raw_inc,
+                        partition_by=["pday"],
+                        coalesce=_write_tasks(spark),  # optimize-write
+                        stats_cols=["max_ies"],
+                        properties_fn=lambda entries: {
+                            "watermark_es": max(
+                                int(e["stats"]["max_ies"][1]) for e in entries
+                            )
+                        },
+                        # the probe saw rows; a source that lost them since
+                        # still must not commit an empty snapshot
+                        skip_if_empty=True,
                     )
-                },
-                skip_if_empty=True,
-            )
-            if sid is None:
-                if partial is not None:
-                    partial.unpersist()
-                raw_inc.unpersist()
-                return {"status": "noop", "watermark_es": wm}
-            with self._stage("i_post"):
+                if sid is None:
+                    return {"status": "noop", "watermark_es": wm}
                 new_wm = int(self.raw.property("watermark_es", wm))
                 n_raw = self.raw.last_commit_rows()
                 days = self.raw.last_commit_partitions("pday")
                 self.log.record(
                     "tier_raw", sid, new_wm, self.raw.manifest()["files"], n_raw
                 )
+            result = {
+                "status": "ok",
+                "watermark_es": new_wm,
+                "rows": {"raw": n_raw},
+                "snapshots": {"raw": sid},
+            }
+            # ---- after the raw commit, the remaining chains run as
+            # concurrent Spark jobs, so their per-stage fixed costs (plan
+            # compile + commit) and their compute overlap:
+            # (a) the derived tiers (1h/1d/compressed) from the checkpointed
+            #     raw increment + the prior raw snapshot;
+            # (b) the series commit from the checkpointed shard partials;
+            # (c) the KF gap-fill (north_star core; reference update mode).
+            #     With committed state at this increment's lower bound, the
+            #     kernel reads the same partials and starts at once — only
+            #     its gap commit waits for (b). A cold start reads the
+            #     committed series tier, so it waits for (b) first.
+            def timed(name, fn, *args, **kw):
+                with self._stage(name):
+                    return fn(*args, **kw)
 
-        result = {
-            "status": "ok",
-            "watermark_es": new_wm,
-            "rows": {"raw": n_raw},
-            "snapshots": {"raw": sid},
-        }
-
-        # ---- after the raw commit, two independent chains remain:
-        # (a) the derived tiers (1h/1d/compressed) read the checkpointed raw
-        #     increment + the prior raw snapshot;
-        # (b) the series commit (from the persisted shard partials) followed
-        #     by the KF gap-fill stage that reads it.
-        # Run the chains as concurrent Spark jobs so their per-stage fixed
-        # costs (plan compile + commit) and their compute overlap — the
-        # series ingest previously serialized between the raw commit and the
-        # fork, costing its full wall on the critical path. The KF stage is
-        # the north_star core (Kalman predict/update state drives gap-fill
-        # of missing acquisition slots; reference update mode = T1).
-        if self.run_gapfill and not os.environ.get("SPARK_GRAFT_SEQUENTIAL"):
-            from concurrent.futures import ThreadPoolExecutor
-
-            def _timed_tiers():
-                with self._stage("derive_tiers"):
-                    return self._derive_tiers(
-                        spark, days, new_wm, inc=raw_inc, prior_sid=prior_sid
-                    )
-
-            def _timed_series_gap():
-                with self._stage("ingest_series"):
-                    self._ingest_series(
-                        spark, seq, new_wm, partial=partial, wm_partial=wm
-                    )
-                partial.unpersist()
-                with self._stage("gapfill"):
-                    return self._run_gapfill(spark, new_wm)
-
-            with ThreadPoolExecutor(2) as ex:
-                f_tiers = ex.submit(_timed_tiers)
-                f_gap = ex.submit(_timed_series_gap)
-                drows, dsids = f_tiers.result()
-                gres = f_gap.result()
-            raw_inc.unpersist()
-            result["rows"]["gapfilled"] = gres["n_rows"]
-            result["snapshots"]["gapfilled"] = gres["snapshot_id"]
-        else:
-            if self.run_gapfill:
-                with self._stage("ingest_series"):
-                    self._ingest_series(
-                        spark, seq, new_wm, partial=partial, wm_partial=wm
-                    )
-                partial.unpersist()
-            with self._stage("derive_tiers"):
-                drows, dsids = self._derive_tiers(
-                    spark, days, new_wm, inc=raw_inc, prior_sid=prior_sid
+            with ThreadPoolExecutor(3) as ex:
+                f_tiers = ex.submit(
+                    timed, "derive_tiers", self._derive_tiers, spark, days,
+                    new_wm, inc=raw_inc, prior_sid=prior_sid,
                 )
-            raw_inc.unpersist()
-            if self.run_gapfill:
-                with self._stage("gapfill"):
-                    gres = self._run_gapfill(spark, new_wm)
-                result["rows"]["gapfilled"] = gres["n_rows"]
-                result["snapshots"]["gapfilled"] = gres["snapshot_id"]
-        result["rows"].update(drows)
-        result["snapshots"].update(dsids)
-        return result
+                if self.run_gapfill:
+                    resume = self.kf_state.property("grid_lo") is not None and (
+                        int(self.kf_state.property("watermark_es", -1)) == wm
+                    )
+                    f_series = ex.submit(
+                        timed, "ingest_series", self._ingest_series, spark,
+                        seq, new_wm, partial=partial, wm_partial=wm,
+                    )
+                    f_gap = ex.submit(
+                        timed, "gapfill", self._run_gapfill, spark, new_wm,
+                        obs=partial if resume else None, series_commit=f_series,
+                    )
+                    gres = f_gap.result()
+                    # a gap chain that returned early never read the series
+                    # commit's outcome: raise its failure here
+                    f_series.result()
+                    result["rows"]["gapfilled"] = gres["n_rows"]
+                    result["snapshots"]["gapfilled"] = gres["snapshot_id"]
+                drows, dsids = f_tiers.result()
+            result["rows"].update(drows)
+            result["snapshots"].update(dsids)
+            return result
+        finally:
+            for df in (partial, raw_inc):
+                if df is not None:
+                    _release(df)
 
     def _ingest_series(
         self,
@@ -389,12 +421,9 @@ class TierPipeline:
         frame equals the committed files) the committed raw tier is read.
         Affected-day reads use manifest-level FILE pruning (``where=``) —
         no full-tier scan, no per-day plan nodes."""
-        from concurrent.futures import ThreadPoolExecutor
-
         dayset = set(days)
         in_days = lambda p: p.get("pday") in dayset  # noqa: E731
-        # one frame of the affected raw days, shared by the 1h and
-        # compressed stages (and transitively the 1d stage via h_inc)
+        # one frame of the affected raw days, shared by all three tiers
         if inc is not None:
             raw_days = inc.filter(F.col("pday").isin(days)).select(*TIER_COLS)
             prior = (
@@ -411,41 +440,22 @@ class TierPipeline:
             )
         if os.environ.get("SPARK_GRAFT_STAGE_TIMINGS"):
             # probe mode only: materialize the shared frame in its own
-            # section so the concurrent 1h/compressed jobs don't race the
-            # cache fill (attribution, not a semantics change)
+            # section so the concurrent tier jobs don't race the cache fill
+            # (attribution, not a semantics change)
             with self._stage("t_raw_days"):
                 raw_days.count()
 
-        def run_1h_1d():
-            # ---- 1h: recompute affected days from committed raw, overwrite
-            h_inc = rollup_cascade(raw_days, HOUR_SECONDS).withColumn(
-                "pday", _pday()
-            ).persist()
-            try:
-                with self._stage("t_1h_write"):
-                    sid_h = self.h1.overwrite_partitions(
-                        h_inc, ["pday"], properties={"watermark_es": wm},
-                        coalesce=_write_tasks(spark, len(days)),
-                    )
-                n_h = self.h1.last_commit_rows()
-                files_h = self.h1.manifest()["files"]
-                # ---- 1d: cascade from the SAME recomputed 1h increment (it
-                # is exactly the affected days' 1h content — no re-read)
-                d_inc = rollup_cascade(
-                    h_inc.select(*TIER_COLS), DAY_SECONDS
-                ).withColumn("pday", _pday())
-                with self._stage("t_1d_write"):
-                    sid_d = self.d1.overwrite_partitions(
-                        d_inc, ["pday"], properties={"watermark_es": wm},
-                        coalesce=_write_tasks(spark, len(days)),
-                    )
-                n_d = self.d1.last_commit_rows()
-                files_d = self.d1.manifest()["files"]
-            finally:
-                h_inc.unpersist()
-            return sid_h, n_h, files_h, sid_d, n_d, files_d
+        def write(name, tbl, frame, props=None):
+            with self._stage(name):
+                sid = tbl.overwrite_partitions(
+                    frame.withColumn("pday", _pday()),
+                    ["pday"],
+                    properties={"watermark_es": wm, **(props or {})},
+                    coalesce=_write_tasks(spark, len(days)),
+                )
+            return sid, tbl.last_commit_rows(), tbl.manifest()["files"]
 
-        def run_compressed():
+        def write_compressed():
             # ---- compressed raw chunks for affected days (Gorilla).
             # codec_format is a TABLE-level property, so stamping v2 from a
             # partial-day overwrite would vouch for legacy partitions this
@@ -467,33 +477,29 @@ class TierPipeline:
                         "the whole tier from raw (expire/drop it, then "
                         "re-run) instead of resuming incrementally"
                     )
-            c_inc = compress_tier(raw_days).withColumn("pday", _pday())
-            with self._stage("t_comp_write"):
-                sid_c = self.comp.overwrite_partitions(
-                    c_inc,
-                    ["pday"],
-                    properties={"watermark_es": wm, "codec_format": CODEC_FORMAT},
-                    coalesce=_write_tasks(spark, len(days)),
-                )
-            return sid_c, self.comp.last_commit_rows(), self.comp.manifest()["files"]
+            return write(
+                "tiers_compressed", self.comp, compress_tier(raw_days),
+                {"codec_format": CODEC_FORMAT},
+            )
 
         try:
-            # the 1h→1d chain and the compressed tier are independent given
-            # the committed raw tier — run them as concurrent Spark jobs
-            # (different tables, no shared commit state); the per-stage plan
-            # compile + commit fixed costs overlap instead of serializing
-            def _timed_hd():
-                with self._stage("tiers_1h_1d"):
-                    return run_1h_1d()
-
-            def _timed_c():
-                with self._stage("tiers_compressed"):
-                    return run_compressed()
-
-            with ThreadPoolExecutor(2) as ex:
-                f_hd = ex.submit(_timed_hd)
-                f_c = ex.submit(_timed_c)
-                sid_h, n_h, files_h, sid_d, n_d, files_d = f_hd.result()
+            # 1h, 1d and compressed are independent given the affected raw
+            # days: the aggregates are algebraic, so 1d cascades straight
+            # from raw exactly as it would from 1h. The three run as
+            # concurrent Spark jobs (different tables, no shared commit
+            # state), so their plan compile + commit fixed costs overlap.
+            with ThreadPoolExecutor(3) as ex:
+                f_h = ex.submit(
+                    write, "tiers_1h", self.h1,
+                    rollup_cascade(raw_days, HOUR_SECONDS),
+                )
+                f_d = ex.submit(
+                    write, "tiers_1d", self.d1,
+                    rollup_cascade(raw_days, DAY_SECONDS),
+                )
+                f_c = ex.submit(write_compressed)
+                sid_h, n_h, files_h = f_h.result()
+                sid_d, n_d, files_d = f_d.result()
                 sid_c, n_c, files_c = f_c.result()
         finally:
             raw_days.unpersist()
@@ -542,41 +548,62 @@ class TierPipeline:
             if int(self.kf_state.property("watermark_es", -1)) < wm_raw:
                 self._run_gapfill(spark, wm_raw)
 
-    def _run_gapfill(self, spark: SparkSession, wm: int) -> dict:
+    def _run_gapfill(
+        self,
+        spark: SparkSession,
+        wm: int,
+        obs: DataFrame | None = None,
+        series_commit=None,
+    ) -> dict:
         """Gap-fill the (source, shard) sub-series with the Kalman kernel.
 
         Scale shape (the round-1 review's top perf fix): per-(source, shard)
         doc-wide rows → ONE mapInArrow kernel execution emitting output AND
         resumable state together (persisted, so the two tier writes share
-        it), grid bounds from a single min/max action, parallelism
-        5 × kf_shards instead of 5.
+        it), grid bounds from committed metadata, parallelism 5 × kf_shards
+        instead of 5.
+
+        ``obs`` holds the run's new series rows (the in-memory shard
+        partials) when the committed state sits at the increment's lower
+        bound. The kernel needs nothing else: a resumed doc's loop consumes
+        only steps at or after its ``k_done``, whose buckets lie past the
+        committed watermark (so all their rows are in this increment), and a
+        sub-series first seen in the increment has no earlier rows. Without
+        ``obs`` (cold start, heal) the committed series tier is read.
+        ``series_commit`` is the future of this run's series commit: the
+        tier read and the gap commit wait for it, so commits land raw →
+        series → gap → state.
         """
         import numpy as np
 
         _t_meta = time.perf_counter()
-        # existence from the manifest alone — building the full-table scan
-        # DataFrame costs a driver-side file-listing/py4j round trip that
-        # the resumed path (which reads only the pruned window below) never
-        # uses
-        m_series = self.series.manifest()
-        if m_series is None or not m_series["files"]:
-            return {"n_rows": 0, "snapshot_id": self.gap.current_snapshot_id()}
-        series_now = None
-        # grid bounds WITHOUT scanning the series history: hi is implied by
-        # the run watermark (bucket_es = bucket(ingest_es) and wm is the
-        # max ingest_es committed this run); lo is the committed grid
-        # origin. Only the very first run (no state yet) scans for the min —
-        # and even that min comes from the manifest's footer stats when
-        # every file carries them (zero Spark jobs).
         lo = self.kf_state.property("grid_lo")
-        if lo is None:
-            stats = [e.get("stats", {}).get("bucket_es") for e in m_series["files"]]
-            if all(s is not None for s in stats):
-                lo = min(int(s[0]) for s in stats)
-            else:
-                series_now = self.series.read(spark)
-                lo = series_now.agg(F.min("bucket_es")).first()[0]
+        series_now = None
+        if obs is None:
+            if series_commit is not None:
+                series_commit.result()
+            # existence from the manifest alone — building the full-table
+            # scan DataFrame costs a driver-side file-listing/py4j round trip
+            # that the resumed path (which reads only the pruned window
+            # below) never uses
+            m_series = self.series.manifest()
+            if m_series is None or not m_series["files"]:
+                return {"n_rows": 0, "snapshot_id": self.gap.current_snapshot_id()}
+            # lo is the committed grid origin; only the very first run (no
+            # state yet) derives it — from the manifest's footer stats when
+            # every file carries them (zero Spark jobs), else by a scan
+            if lo is None:
+                stats = [
+                    e.get("stats", {}).get("bucket_es") for e in m_series["files"]
+                ]
+                if all(s is not None for s in stats):
+                    lo = min(int(s[0]) for s in stats)
+                else:
+                    series_now = self.series.read(spark)
+                    lo = series_now.agg(F.min("bucket_es")).first()[0]
         lo = int(lo)
+        # hi is implied by the run watermark (bucket_es = bucket(ingest_es)
+        # and wm is the max ingest_es committed this run) — no history scan
         hi = (int(wm) // RAW_SECONDS) * RAW_SECONDS
         m = int((hi - lo) // RAW_SECONDS) + 1
         prev = self.kf_state.read(spark)
@@ -588,41 +615,33 @@ class TierPipeline:
         cover_min_step = (
             int(self.kf_state.property("idx0", 0)) if prev is not None else 0
         )
+        cover_min = lo + cover_min_step * RAW_SECONDS
 
-        # Incremental scan: with committed state, only steps inside the
-        # resume window matter (the kernel re-emits [idx0, k_done) from
-        # state and consumes >= k_done) — scanning the WHOLE series history
-        # every run would make the per-run cost grow with total history.
-        # A sub-series first appearing later (new source) has no earlier
-        # data by construction, so the bound is lossless for cold starts
-        # too. File-level pday pruning happens at the manifest.
-        if cover_min_step > 0:
-            cover_es = lo + cover_min_step * RAW_SECONDS
-            import datetime as dt
-
-            cut_day = dt.datetime.utcfromtimestamp(cover_es).strftime("%Y-%m-%d")
-            # two metadata pruning levels before the scan: partition (pday)
-            # and footer bucket_es max — a file whose newest bucket is
-            # older than the resume window never opens
+        if obs is not None:
+            scan = obs
+        elif cover_min_step > 0:
+            # Incremental tier scan: with committed state, only steps inside
+            # the resume window matter (the kernel re-emits [idx0, k_done)
+            # from state and consumes >= k_done) — scanning the WHOLE series
+            # history every run would make the per-run cost grow with total
+            # history. Two metadata pruning levels before the scan: partition
+            # (pday) and footer bucket_es max — a file whose newest bucket is
+            # older than the resume window never opens.
+            cut_day = _day(cover_min)
             scan = self.series.read(
                 spark,
                 where=lambda p: p.get("pday", "") >= cut_day,
                 stats_where=lambda s: "bucket_es" not in s
-                or int(s["bucket_es"][1]) >= int(cover_es),
-            ).filter(F.col("bucket_es") >= F.lit(int(cover_es)))
+                or int(s["bucket_es"][1]) >= cover_min,
+            ).filter(F.col("bucket_es") >= F.lit(cover_min))
         else:
-            scan = (
-                series_now
-                if series_now is not None
-                else self.series.read(spark)
-            )
+            scan = series_now if series_now is not None else self.series.read(spark)
 
         wide = _subseries_wide(scan, lo)
         if prev is not None:
-            # FULL outer: a sub-series with state but no rows inside the
-            # incremental window must still resume (gap-forecast to the new
-            # grid end and keep its state current), and a brand-new
-            # sub-series cold-starts
+            # FULL outer: a sub-series with state but no new rows must still
+            # resume (gap-forecast to the new grid end and keep its state
+            # current), and a brand-new sub-series cold-starts
             wide = wide.join(prev, "doc_id", "full")
 
         self.stage_sec["kf_meta"] = round(time.perf_counter() - _t_meta, 4)
@@ -631,13 +650,12 @@ class TierPipeline:
         ).persist()
         if os.environ.get("SPARK_GRAFT_STAGE_TIMINGS"):
             # probe mode: force the kernel job into its own section (the
-            # incremental scan + doc-wide groupBy + mapInArrow kernel +
-            # persist). Default runs leave `combined` lazy so the state
-            # write overlaps the output explode/stitch — don't enable this
-            # on headline timings.
+            # scan + doc-wide groupBy + mapInArrow kernel + persist).
+            # Default runs leave `combined` lazy so the state write overlaps
+            # the output explode/stitch — don't enable this on headline
+            # timings.
             with self._stage("kf_kernel"):
                 combined.count()
-        from concurrent.futures import ThreadPoolExecutor
 
         state_pool = ThreadPoolExecutor(1)
         try:
@@ -667,27 +685,30 @@ class TierPipeline:
 
             # stitch: the resume re-emits the overlap window; affected day
             # partitions get (old rows before the window) ∪ (re-emitted
-            # rows). Incremental-cost discipline: `rows` (∝ increment) is
-            # persisted once and the prior tier is read ONLY through
-            # manifest-level pday pruning — the full-history scans +
-            # duplicated explode subtree of the naive stitch were the
-            # resume run's dominant cost (measured 2.6 s of a 4.2 s stage).
-            cover_min = lo + cover_min_step * RAW_SECONDS
-            rows_cached = None
+            # rows). Incremental-cost discipline: the prior tier is read
+            # ONLY through manifest-level pday pruning — the full-history
+            # scans + duplicated explode subtree of the naive stitch were
+            # the resume run's dominant cost (measured 2.6 s of a 4.2 s
+            # stage).
             n_gap_parts = None
             if self.gap.manifest() is not None:
-                import datetime as dt
-
-                out_cols = rows.columns
-                rows = rows_cached = rows.persist()
+                # touched days from metadata-scale facts: each kernel row's
+                # arrays are dense over [emit0, m), so the rows cover every
+                # step from the smallest emit0 (0 when a sub-series
+                # cold-starts) to the grid end — one min over the
+                # ≤ sources × kf_shards persisted kernel rows, no explode
                 with self._stage("g_touched"):
+                    e0 = combined.agg(F.min("emit0")).first()[0]
+                touched = set()
+                if e0 is not None:
+                    first = lo + int(e0) * RAW_SECONDS
                     touched = {
-                        r.pday for r in rows.select("pday").distinct().collect()
+                        _day(d * DAY_SECONDS)
+                        for d in range(first // DAY_SECONDS, hi // DAY_SECONDS + 1)
                     }
                 n_gap_parts = len(touched)
-                cover_day = dt.datetime.utcfromtimestamp(
-                    int(cover_min)
-                ).strftime("%Y-%m-%d")
+                out_cols = rows.columns
+                cover_day = _day(cover_min)
                 # re-emitted overlap steps carry refined phase/std but not
                 # their historical innovation/gap flags (those belong to the
                 # step's original update) — stitch back from the prior tier.
@@ -720,13 +741,15 @@ class TierPipeline:
                     where=lambda p: p.get("pday", "") in touched,
                     # only files that can hold rows below the overlap window
                     stats_where=lambda s: "bucket_es" not in s
-                    or int(s["bucket_es"][0]) < int(cover_min),
+                    or int(s["bucket_es"][0]) < cover_min,
                 )
                 if keep_src is not None:
                     keep_old = keep_src.filter(
-                        F.col("bucket_es") < F.lit(int(cover_min))
+                        F.col("bucket_es") < F.lit(cover_min)
                     ).select(*out_cols)
                     rows = keep_old.unionByName(rows)
+            if series_commit is not None:
+                series_commit.result()  # series commit lands before gap commit
             with self._stage("g_write"):
                 sid = self.gap.overwrite_partitions(
                     rows,
@@ -736,8 +759,6 @@ class TierPipeline:
                     stats_cols=["bucket_es"],
                 )
             n_rows = self.gap.last_commit_rows()
-            if rows_cached is not None:
-                rows_cached.unpersist()
             self.stage_sec["kf_output"] = round(
                 time.perf_counter() - _t_out, 4
             )
@@ -1009,9 +1030,7 @@ class TierPipeline:
     def expire_raw_before(self, cutoff_es: int) -> int:
         """Retention: drop raw partitions strictly older than the cutoff day.
         Metadata-only delete; 1h/1d tiers keep the downsampled history."""
-        import datetime as dt
-
-        cut = dt.datetime.utcfromtimestamp(cutoff_es).strftime("%Y-%m-%d")
+        cut = _day(cutoff_es)
         return self.raw.drop_partitions(
             lambda p: p.get("pday", "") < cut,
             properties={"retention_cutoff": cut},

@@ -220,6 +220,10 @@ class SnapshotTable:
             "schema"
         )
         self._pending_schema = None
+        if parent_m and parent_m.get("schema") not in (None, schema):
+            parent_paths = {e["path"] for e in parent_m["files"]}
+            if any(e["path"] in parent_paths for e in files):
+                self._check_inherited_schema(parent_m["schema"], schema)
         manifest = {
             "snapshot_id": sid,
             "parent_id": parent,
@@ -261,6 +265,31 @@ class SnapshotTable:
             f.write(str(sid))
         os.replace(tmp, self._current_path)
         return sid
+
+    def _check_inherited_schema(self, old_json: str, new_json: str) -> None:
+        """:meth:`read` applies the newest manifest schema to every file, so
+        a commit that keeps earlier files must not drop or retype a column
+        they carry — those files would read NULL or mistyped values without
+        any error. Added columns (NULL-backfilled on old files) and
+        nullability changes (file scans read every column as nullable) are
+        allowed."""
+        from pyspark.sql.types import StructType
+
+        new = {f.name: f for f in StructType.fromJson(json.loads(new_json)).fields}
+        for f in StructType.fromJson(json.loads(old_json)).fields:
+            if f.name not in new:
+                raise ValueError(
+                    f"{self.path}: commit drops column {f.name!r} that files "
+                    "kept from earlier snapshots carry"
+                )
+            old_t = f.dataType.simpleString()
+            new_t = new[f.name].dataType.simpleString()
+            if old_t != new_t:
+                raise ValueError(
+                    f"{self.path}: commit retypes column {f.name!r} from "
+                    f"{old_t} to {new_t}; files kept from earlier snapshots "
+                    f"hold {old_t}"
+                )
 
     def _next_sid(self) -> tuple[int, int | None]:
         parent = self.current_snapshot_id()
@@ -674,7 +703,8 @@ class SnapshotTable:
             # write-time schema from the manifest: the scan skips driver-side
             # footer schema inference. Files from pre-widening commits (if
             # any) read exactly as they would under mergeSchema: absent
-            # columns backfill NULL.
+            # columns backfill NULL. A commit that would drop or retype a
+            # column older files carry is refused (_check_inherited_schema).
             from pyspark.sql.types import StructType
 
             reader = reader.schema(StructType.fromJson(json.loads(m["schema"])))

@@ -100,58 +100,6 @@ def sequences(
     )
 
 
-def series(
-    spark: SparkSession,
-    n_docs: int,
-    n_steps: int = 92,
-    seed: int = 46,
-    gap_pct: int = 20,
-    partitions: int | None = None,
-) -> DataFrame:
-    """Per-doc observation series with gaps (FIXTURES.md F2): the KFTS
-    synthetic-network analogue (92 epochs @ 12 days, signal model from
-    /root/reference/synthetic_data.py:19-36), generated entirely with
-    Catalyst expressions — scales to any n_docs with zero driver data.
-
-    value = m1·t + A·sin(2πt) + B·cos(2πt) + step·H(t−1.5) + pseudo-noise,
-    with per-doc params from the MINSTD hash chain; ~gap_pct% of (doc, step)
-    observations NULL (the gap-fill workload)."""
-    rng = (
-        spark.range(0, n_docs * n_steps, 1, partitions)
-        if partitions
-        else spark.range(n_docs * n_steps)
-    )
-    df = rng.select(
-        (F.col("id") / n_steps).cast("long").alias("i"),
-        (F.col("id") % n_steps).cast("int").alias("step"),
-    )
-    h1 = _lcg(df.i + F.lit(1 + seed))
-    h2 = _lcg(h1)
-    h3 = _lcg(h2)
-    hk = _lcg(df.i * F.lit(n_steps) + df.step + F.lit(7 + seed))
-    t = df.step.cast("double") * F.lit(12.0 / 365.25)
-    m1 = F.lit(5.0) + (h1 % 1000).cast("double") / 100.0  # velocity 5..15
-    amp_s = F.lit(2.0) + (h2 % 400).cast("double") / 100.0  # sin amp 2..6
-    amp_c = F.lit(2.0) + (h3 % 400).cast("double") / 100.0
-    step_amp = F.lit(10.0) + (h2 % 2000).cast("double") / 100.0
-    noise = ((hk % 2001).cast("double") - 1000.0) / 1000.0  # ±1 uniform-ish
-    two_pi = 6.283185307179586
-    val = (
-        m1 * t
-        + amp_s * F.sin(t * F.lit(two_pi))
-        + amp_c * F.cos(t * F.lit(two_pi))
-        + F.when(t >= 1.5, step_amp).otherwise(0.0)
-        + noise * 0.5
-    )
-    is_gap = (df.step > 0) & ((hk % 100) < gap_pct)
-    return df.select(
-        F.concat(F.lit("doc"), F.lpad(df.i.cast("string"), 8, "0")).alias("doc_id"),
-        df.step,
-        t.alias("t"),
-        F.when(is_gap, None).otherwise(val).alias("value"),
-    )
-
-
 def series_wide(
     spark: SparkSession,
     n_docs: int,
@@ -160,9 +108,15 @@ def series_wide(
     gap_pct: int = 20,
     partitions: int | None = None,
 ) -> DataFrame:
-    """Wide form of :func:`series`: ONE row per doc with
-    ``values: array<double>`` (NULL elements = gaps). Same generating model,
-    same hash chain per (doc, step).
+    """Per-doc observation series with gaps (FIXTURES.md F2): the KFTS
+    synthetic-network analogue (92 epochs @ 12 days, the signal model of
+    the reference's synthetic_data.py:19-36), generated entirely with
+    Catalyst expressions — scales to any n_docs with zero driver data.
+    ONE row per doc with ``values: array<double>``.
+
+    value = m1·t + A·sin(2πt) + B·cos(2πt) + step·H(t−1.5) + pseudo-noise,
+    with per-doc params from the MINSTD hash chain; ~gap_pct% of (doc, step)
+    observations NULL (the gap-fill workload).
 
     This is the hot-path layout (SURVEY.md §2.8 F12 — arrays stay arrays):
     the per-row PySpark Arrow exchange costs ~µs/row JVM-side and was

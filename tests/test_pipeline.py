@@ -825,3 +825,140 @@ def test_partial_overwrite_cannot_stamp_v2_over_legacy_partitions(
         assert days1 <= new_days, "v2 stamped but legacy days survived"
     except ValueError as e:
         assert "legacy streams" in str(e) or "codec_format" in str(e)
+
+
+def _state_rows(spark, pipe):
+    return sorted(
+        (r.doc_id, r.k_done, r.idx0, tuple(r.m), tuple(r.P))
+        for r in pipe.read_tier(spark, "state").collect()
+    )
+
+
+def test_new_subseries_in_resume_equals_oneshot(spark, tmp_path):
+    """A source that first appears after the split cold-starts inside a
+    resumed run: its sub-series emit the whole grid (back to days the
+    resumed sub-series do not touch) while the others resume from state.
+    Every tier and the state rows must equal the one-shot run."""
+    seq2 = sequences(spark, N, docs_per_batch=8)  # ≥ 2 UTC days of buckets
+    split = int(seq2.approxQuantile("ingest_es", [0.75], 0)[0])
+    first = seq2.agg(F.min("ingest_es")).first()[0]
+    # the resume window starts a UTC day after the data does, so the cold
+    # sub-series rewrite a day partition the resumed ones leave alone
+    assert split // 86400 > first // 86400
+    late = seq2.filter(~((F.col("source") == "wiki") & (F.col("ingest_es") <= split)))
+
+    one = TierPipeline(str(tmp_path / "one"), kf_shards=4)
+    assert one.run(spark, late)["status"] == "ok"
+
+    two = TierPipeline(str(tmp_path / "two"), kf_shards=4)
+    two.run(spark, late.filter(F.col("ingest_es") <= split))
+    assert not any(d.startswith("wiki/") for d, *_ in _state_rows(spark, two))
+    assert two.run(spark, late)["status"] == "ok"
+    assert any(d.startswith("wiki/") for d, *_ in _state_rows(spark, two))
+
+    for tier in ("raw", "1h", "1d", "series", "gapfilled"):
+        assert _tier_rows(spark, one, tier) == _tier_rows(spark, two, tier), tier
+    assert _state_rows(spark, one) == _state_rows(spark, two)
+
+
+def _table_files(pipe):
+    import os
+
+    out = {}
+    for t in (pipe.raw, pipe.h1, pipe.d1, pipe.comp, pipe.series, pipe.gap,
+              pipe.kf_state):
+        out[t.path] = (
+            sorted(os.listdir(os.path.join(t.path, "manifests"))),
+            sorted(os.listdir(os.path.join(t.path, "data"))),
+        )
+    return out
+
+
+@pytest.mark.parametrize("gapfill", [True, False], ids=["gapfill", "no_gapfill"])
+def test_noop_run_writes_nothing(spark, seq, tmp_path, gapfill):
+    """A run without new data exits on the emptiness probe: no manifest in
+    any of the seven tables, no data/<sid> dir, no checkpoint record, and
+    at most one Spark job."""
+    import os
+    import uuid
+
+    pipe = TierPipeline(str(tmp_path), run_gapfill=gapfill, kf_shards=4)
+    pipe.run(spark, seq)
+    files = _table_files(pipe)
+    log = os.path.join(str(tmp_path), "checkpoint.jsonl")
+    log_bytes = os.path.getsize(log)
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"noop-probe-{uuid.uuid4().hex}"
+    try:
+        sc.setJobGroup(group + "-control", "control")
+        seq.count()
+        sc.setJobGroup(group, "no-op run")
+        res = TierPipeline(str(tmp_path), run_gapfill=gapfill, kf_shards=4).run(
+            spark, seq
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert res == {"status": "noop", "watermark_es": pipe.raw.property("watermark_es")}
+    # the counter sees this thread's jobs (or the bound below is vacuous)
+    assert len(tracker.getJobIdsForGroup(group + "-control")) >= 1
+    assert len(tracker.getJobIdsForGroup(group)) <= 1
+    assert _table_files(pipe) == files
+    assert os.path.getsize(log) == log_bytes
+
+
+def test_runs_release_their_cached_blocks(spark, seq, tmp_path):
+    """Every RDD a run persists or checkpoints is released by the end of
+    the run — localCheckpoint frames included, which
+    DataFrame.unpersist() does not reach."""
+    seq.count()  # the fixture's own cache is not the pipeline's
+    jsc = spark.sparkContext._jsc
+
+    def cached():
+        return set(jsc.getPersistentRDDs().keySet().toArray())
+
+    before = cached()
+    pipe = TierPipeline(str(tmp_path), kf_shards=4)
+    for cut in seq.approxQuantile("ingest_es", [0.35, 0.7], 0):
+        assert pipe.run(spark, seq.filter(F.col("ingest_es") <= cut))["status"] == "ok"
+    assert pipe.run(spark, seq)["status"] == "ok"
+    assert pipe.run(spark, seq)["status"] == "noop"
+    assert cached() - before == set()
+
+
+def test_commit_refuses_dropped_or_retyped_column(spark, tmp_path):
+    """read() applies the newest manifest schema to every file, so a commit
+    that keeps earlier files must not drop or retype their columns; added
+    columns and nullability changes stay allowed, and a commit that keeps
+    no earlier file may change the schema freely."""
+    from kfts_insar_spark.sources.snapshot import SnapshotTable
+
+    t = SnapshotTable(str(tmp_path / "t"))
+    base = spark.range(4).selectExpr(
+        "id AS k", "id * 10 AS v", "CAST(id % 2 AS STRING) AS p"
+    )
+    sid0 = t.append(base, partition_by=["p"])
+    with pytest.raises(ValueError, match="drops column 'v'"):
+        t.append(base.drop("v"), partition_by=["p"])
+    with pytest.raises(ValueError, match="retypes column 'v' from bigint to string"):
+        t.append(base.withColumn("v", F.col("v").cast("string")), partition_by=["p"])
+    with pytest.raises(ValueError, match="'v'"):
+        # a partition overwrite keeps the other partition's files
+        t.overwrite_partitions(base.filter("p = '0'").drop("v"), ["p"])
+    assert t.current_snapshot_id() == sid0
+
+    # added column + nullable v: fine, old files backfill NULL
+    wider = spark.range(4, 6).selectExpr(
+        "id AS k", "IF(id > 4, id * 10, NULL) AS v", "0.5 AS q",
+        "CAST(id % 2 AS STRING) AS p",
+    )
+    t.append(wider, partition_by=["p"])
+    got = sorted((r.k, r.v, r.q) for r in t.read(spark).select("k", "v", "q").collect())
+    assert got == [(0, 0, None), (1, 10, None), (2, 20, None), (3, 30, None),
+                   (4, None, 0.5), (5, 50, 0.5)]
+
+    # full replacement: no earlier file survives, any schema is safe
+    t.overwrite_all(spark.range(2).selectExpr("CAST(id AS STRING) AS k"))
+    assert sorted(r.k for r in t.read(spark).collect()) == ["0", "1"]
