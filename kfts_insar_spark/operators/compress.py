@@ -6,39 +6,46 @@ batched; zero per-row Python. Chunk width defaults to 1 day of raw points
 (288 × 300 s), the same granularity the retention policy expires at, so
 dropping an expired chunk is a partition delete, never a rewrite.
 
-val_codec wire format (since round 4): 1 tag byte + stream.
+val_codec wire format: 1 tag byte + stream.
 
-- tag 0x01 — fixed-width zigzag-delta int stream: the chunk's values are
-  all exactly int64-representable (token SUMS are — they're sums of
-  integer counts carried in float64, exact below 2^53), so they are cast
-  to int64 and packed as v0 + per-chunk-width zigzag deltas
-  (:func:`~..functions.codec.encode_ints_chunked`). XOR-packing
+- tag 0x01 — fixed-width int stream: the chunk's values are all exactly
+  int64-representable (token SUMS are — they're sums of integer counts
+  carried in float64, exact below 2^53), so they are cast to int64 and
+  packed by :func:`~..functions.codec.encode_ints_chunked` as zigzag
+  deltas from v0 or, when cheaper, frame-of-reference offsets from the
+  chunk's min (the stream's first bit names the mode). XOR-packing
   near-integer doubles wastes ~3× the bits: two close integer doubles
   differ across most of the mantissa (~45 meaningful bits), while their
-  integer delta fits 10-20 bits. This is both the bytes/point win and the
-  scaling win — the compress stage was pinned to the host's DRAM-stream
-  ceiling (BENCH_CLUSTER.md), and this moves ~⅓ the bytes through the
-  packer; decode of this form is branch-free (no control-bit walk).
-- tag 0x00 — Gorilla XOR float stream (unchanged wire form after the tag),
-  used whenever any value in the chunk is fractional / NaN / ≥ 2^53
-  (e.g. the seq_gorilla_roundtrip_frac oracle's fractional values).
+  integer delta fits 10-20 bits. Decode is branch-free (no control-bit
+  walk).
+- tag 0x00 — Gorilla XOR float stream, used whenever any value in the
+  chunk is fractional / NaN / ≥ 2^53 (e.g. the seq_gorilla_roundtrip_frac
+  oracle's fractional values).
 
-ts_codec wire format (also since round 4): 1 tag byte + stream.
+ts_codec wire format: 1 tag byte + stream.
 
-- tag 0x00 — the delta-of-delta stream unchanged after the tag.
-- tag 0x02 — GCD-scaled dod: 4-byte big-endian g (> 1, the GCD of the
-  chunk's timestamp deltas), then the standard dod stream of the SCALED
-  series t0 + (ts − t0)/g. Bucket timestamps sit on a coarse grid
-  (300 s raw tier), so every delta — and every gap-induced dod — is a
-  multiple of the grid step; dividing by g moves dods from the 13/17-bit
-  buckets into the 8/10-bit ones (~0.80 → ~0.5 B/pt on gappy series).
-  Encode and decode are the UNCHANGED dod codec over the scaled series
-  plus one affine map per chunk.
+- tag 0x00 — the timestamp stream of the series as is.
+- tag 0x02 — GCD-scaled: 4-byte big-endian g (> 1, the GCD of the chunk's
+  timestamp deltas), then the timestamp stream of the SCALED series
+  t0 + (ts − t0)/g. Bucket timestamps sit on a coarse grid (300 s raw
+  tier), so the scaled series has unit steps.
+
+Either tag's stream is :func:`~..functions.codec.encode_timestamps_chunked`
+output, whose first bit names its mode: delta-of-delta, or — for a
+strictly increasing chunk whose bitmap costs no more bytes — a presence
+bitmap of one bit per unit step from t0 to t_last. A scaled day of the
+300 s grid is then 288 bits however its points fill it (1.7 and 2.8
+bits/pt on the perfbench tiers, against 4.6 and 6.6 for their scaled dod
+streams), and decodes with one scan over the set bits instead of a
+per-point lockstep walk.
 
 The tag is per CHUNK, so mixed tiers (integer sums next to fractional
 averages, regular next to irregular grids) pick the right codec row by
-row. Decode dispatches on the tag and runs each subset through its
-lockstep decoder.
+row; the stream modes sit inside the streams, so the tags (and any tool
+that classifies chunks by them) are the same as in format v2. Decode
+dispatches on the tag, runs each subset through its lockstep decoder, and
+raises ``ValueError`` naming the chunk's source and bucket_es when a
+stream is truncated or corrupt.
 """
 
 from __future__ import annotations
@@ -49,6 +56,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.codec import (
+    StreamError,
     decode_ints_lockstep,
     decode_timestamps_lockstep,
     decode_values_lockstep,
@@ -61,15 +69,20 @@ from ..schema import COMPRESSED_TIER
 CHUNK_SECONDS = 86400
 
 # Wire-format version of the per-chunk tagged codec streams. Bumped when the
-# byte layout changes (v2 = round-4 tagged streams; pre-round-4 untagged
-# streams have NO version property and are rejected at read time — an old
-# ts stream's first byte is 0x00, which would silently parse as tag 0 with
-# the whole stream shifted by one byte). Recorded in the compressed tier's
+# byte layout changes (v2 = tagged streams; v3 = a mode bit at the head of
+# every timestamp and int stream, for the bitmap and frame-of-reference
+# modes). Older tiers are rejected at read time: a v2 stream read as v3
+# would parse its first bit as a mode. Recorded in the compressed tier's
 # snapshot properties by the pipeline and checked by ``Pipeline.read_tier``.
-CODEC_FORMAT = 2
+CODEC_FORMAT = 3
 
-_TS_TAGS = frozenset({0x00, 0x02})
-_VAL_TAGS = frozenset({0x00, 0x01})
+# (column, tag byte) → lockstep decoder of the stream after the tag header
+_DECODERS = {
+    ("ts_codec", 0x00): decode_timestamps_lockstep,
+    ("ts_codec", 0x02): decode_timestamps_lockstep,
+    ("val_codec", 0x00): decode_values_lockstep,
+    ("val_codec", 0x01): decode_ints_lockstep,
+}
 
 
 def compress_tier(
@@ -114,31 +127,17 @@ def compress_tier(
         d[first] = 0
         g_c = np.gcd.reduceat(np.abs(d), starts)  # gcd(0, x) == x
         scaled_c = (g_c > 1) & (g_c < 2**32)  # g is a 4-byte field
-        ts_codecs: list[bytes] = [b""] * n_chunks
-        for want in (scaled_c, ~scaled_c):
-            if not want.any():
-                continue
-            pts = want[chunk_id]
-            sub_starts = np.concatenate(
-                [[0], np.cumsum(counts[want])[:-1]]
-            ).astype(np.int64)
-            sub_ts = ts[pts]
-            if want is scaled_c:
-                g_pt = g_c[chunk_id][pts]
-                t0_pt = ts[starts][chunk_id][pts]
-                sub_ts = t0_pt + (sub_ts - t0_pt) // g_pt
-            enc = encode_timestamps_chunked(sub_ts, sub_starts)
-            if want is scaled_c:
-                for j, c in zip(np.flatnonzero(want), enc):
-                    ts_codecs[j] = (
-                        b"\x02" + int(g_c[j]).to_bytes(4, "big") + c
-                    )
-            else:
-                for j, c in zip(np.flatnonzero(want), enc):
-                    ts_codecs[j] = b"\x00" + c
+        g_pt = np.where(scaled_c, g_c, 1)[chunk_id]
+        t0_pt = ts[starts][chunk_id]
+        enc = encode_timestamps_chunked(t0_pt + (ts - t0_pt) // g_pt, starts)
+        ts_codecs = [
+            (b"\x02" + int(g).to_bytes(4, "big") if sc else b"\x00") + c
+            for sc, g, c in zip(scaled_c, g_c, enc)
+        ]
 
-        # per-chunk codec choice: int dod (tag 0x01) when every value is
-        # exactly int64-representable, Gorilla XOR (tag 0x00) otherwise
+        # per-chunk codec choice: fixed-width ints (tag 0x01) when every
+        # value is exactly int64-representable, Gorilla XOR (tag 0x00)
+        # otherwise
         exact = (
             np.isfinite(vals)
             & (np.abs(vals) < 2.0**53)
@@ -204,62 +203,51 @@ def decompress_tier(comp: DataFrame, value_name: str = "value") -> DataFrame:
         ]
     )
 
+    def decoded(cols, col, ns, dtype):
+        """(chunks, max n) matrix of one codec column: each tag's rows go
+        through its lockstep decoder."""
+        streams = cols[col].to_pylist()
+        for c in streams:
+            if not c or (col, c[0]) not in _DECODERS:
+                raise ValueError(
+                    f"decompress_tier: unknown {col} tag byte {c[:1]!r} — "
+                    f"corrupt chunk or pre-v{CODEC_FORMAT} untagged stream "
+                    "(re-materialize the compressed tier)"
+                )
+        tags = np.array([c[0] for c in streams], dtype=np.int64)
+        mat = np.zeros((len(streams), int(ns.max(initial=0))), dtype=dtype)
+        for tag in np.unique(tags):
+            idx = np.flatnonzero(tags == tag)
+            scaled = (col, tag) == ("ts_codec", 0x02)
+            body = 5 if scaled else 1
+            try:
+                m = _DECODERS[col, tag]([streams[i][body:] for i in idx], ns[idx])
+            except StreamError as e:
+                i = int(idx[e.rows[0]])
+                raise ValueError(
+                    f"decompress_tier: {col} of chunk source="
+                    f"{cols['source'][i].as_py()!r} bucket_es="
+                    f"{cols['bucket_es'][i].as_py()} is truncated or corrupt"
+                ) from e
+            if scaled:
+                # undo the affine map: ts = t0 + (ts_s - t0)·g
+                g = np.array(
+                    [int.from_bytes(streams[i][1:5], "big") for i in idx],
+                    dtype=np.int64,
+                )
+                t0 = m[:, :1]
+                m = t0 + (m - t0) * g[:, None]
+            mat[idx, : m.shape[1]] = m
+        return mat
+
     def unpack(it):
         for rb in it:
             if rb.num_rows == 0:
                 continue
             cols = {n: rb.column(i) for i, n in enumerate(rb.schema.names)}
             ns = cols["n_points"].to_numpy().astype(np.int64)
-            tc = cols["ts_codec"].to_pylist()
-            for c in tc:
-                if not c or c[0] not in _TS_TAGS:
-                    raise ValueError(
-                        "decompress_tier: unknown ts_codec tag byte "
-                        f"{c[:1]!r} — corrupt chunk or pre-v{CODEC_FORMAT} "
-                        "untagged stream (re-materialize the compressed tier)"
-                    )
-            ttags = np.array([c[0] for c in tc], dtype=np.int64)
-            max_n = int(ns.max(initial=0))
-            ts_mat = np.zeros((len(tc), max(max_n, 1)), dtype=np.int64)
-            plain = np.flatnonzero(ttags == 0)
-            if len(plain):
-                m = decode_timestamps_lockstep(
-                    [tc[i][1:] for i in plain], ns[plain]
-                )
-                ts_mat[plain[:, None], np.arange(m.shape[1])[None, :]] = m
-            scl = np.flatnonzero(ttags == 2)
-            if len(scl):
-                g = np.array(
-                    [int.from_bytes(tc[i][1:5], "big") for i in scl],
-                    dtype=np.int64,
-                )
-                m = decode_timestamps_lockstep(
-                    [tc[i][5:] for i in scl], ns[scl]
-                )
-                # undo the affine map: ts = t0 + (ts_s - t0)·g
-                t0 = m[:, :1]
-                m = t0 + (m - t0) * g[:, None]
-                ts_mat[scl[:, None], np.arange(m.shape[1])[None, :]] = m
-            vc = cols["val_codec"].to_pylist()
-            for c in vc:
-                if not c or c[0] not in _VAL_TAGS:
-                    raise ValueError(
-                        "decompress_tier: unknown val_codec tag byte "
-                        f"{c[:1]!r} — corrupt chunk or pre-v{CODEC_FORMAT} "
-                        "untagged stream (re-materialize the compressed tier)"
-                    )
-            tags = np.array([c[0] for c in vc], dtype=np.int64)
-            v_mat = np.zeros(ts_mat.shape, dtype=np.float64)
-            gor = np.flatnonzero(tags == 0)
-            if len(gor):
-                m = decode_values_lockstep([vc[i][1:] for i in gor], ns[gor])
-                v_mat[gor[:, None], np.arange(m.shape[1])[None, :]] = m
-            ints = np.flatnonzero(tags == 1)
-            if len(ints):
-                m = decode_ints_lockstep(
-                    [vc[i][1:] for i in ints], ns[ints]
-                ).astype(np.float64)
-                v_mat[ints[:, None], np.arange(m.shape[1])[None, :]] = m
+            ts_mat = decoded(cols, "ts_codec", ns, np.int64)
+            v_mat = decoded(cols, "val_codec", ns, np.float64)
             mask = np.arange(ts_mat.shape[1])[None, :] < ns[:, None]
             ridx, cidx = np.nonzero(mask)
             # Arrow-native expansion: the source strings replicate through a

@@ -135,19 +135,15 @@ def _write_tasks(spark: SparkSession, n_parts: int | None = None) -> int:
     serialized multi-million-row tier writes onto 4 cores (measured as the
     single largest cost of the bulk ingest and the gap-fill output commit).
     Derived from the session's parallelism, not the local core count, so the
-    same code sizes itself on a cluster; override with
-    SPARK_GRAFT_WRITE_TASKS for deployments that want explicit control.
+    same code sizes itself on a cluster (set ``spark.default.parallelism``
+    to size it explicitly).
 
     ``n_parts`` (the number of partition values this write touches, when the
     caller knows it from commit metadata) clamps the task count: tasks
     beyond one-per-day are guaranteed empty, and a small resume increment
     paying ~30 no-op task launches per commit measurably regressed the
     incremental path (sf0.1 A/B 1.127 before this clamp)."""
-    env = os.environ.get("SPARK_GRAFT_WRITE_TASKS")
-    if env:
-        wt = max(1, int(env))
-    else:
-        wt = max(4, min(256, spark.sparkContext.defaultParallelism))
+    wt = max(4, min(256, spark.sparkContext.defaultParallelism))
     if n_parts is not None:
         wt = max(1, min(wt, int(n_parts)))
     return wt
@@ -457,12 +453,13 @@ class TierPipeline:
 
         def write_compressed():
             # ---- compressed raw chunks for affected days (Gorilla).
-            # codec_format is a TABLE-level property, so stamping v2 from a
-            # partial-day overwrite would vouch for legacy partitions this
-            # commit never rewrote (their untagged streams would then pass
-            # read_tier's gate and decode to garbage). Refuse unless the
-            # prior snapshot is already v2 or every prior partition is
-            # being overwritten right now (full re-materialization).
+            # codec_format is a TABLE-level property, so stamping the
+            # current version from a partial-day overwrite would vouch for
+            # older partitions this commit never rewrote (their streams
+            # would then pass read_tier's gate and decode to garbage).
+            # Refuse unless the prior snapshot already has this version or
+            # every prior partition is being overwritten right now (full
+            # re-materialization).
             prior_c = self.comp.manifest()
             if prior_c is not None and prior_c["files"]:
                 pf = prior_c.get("properties", {}).get("codec_format")
@@ -1059,8 +1056,8 @@ class TierPipeline:
                     raise ValueError(
                         f"compressed tier at {tbl.path} (snapshot "
                         f"{m.get('snapshot_id')}) has codec_format={fmt!r}, "
-                        f"engine expects v{CODEC_FORMAT}; pre-upgrade "
-                        "untagged chunks would decode to garbage — "
+                        f"engine expects v{CODEC_FORMAT}; chunks of another "
+                        "wire format would decode to garbage — "
                         "re-materialize the tier (re-run the pipeline over "
                         "the raw tier) before reading it"
                     )

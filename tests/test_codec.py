@@ -6,16 +6,16 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from kfts_insar_spark.functions.codec import (
+from kfts_insar_spark.operators.compress import compress_tier, decompress_tier
+from kfts_insar_spark.operators.rollup import rollup_raw
+from kfts_insar_spark.synth import sequences
+from tests.codec_oracle import (
     decode_timestamps,
     decode_values,
     encode_timestamps,
     encode_values,
     gorilla_roundtrip_ok,
 )
-from kfts_insar_spark.operators.compress import compress_tier, decompress_tier
-from kfts_insar_spark.operators.rollup import rollup_raw
-from kfts_insar_spark.synth import sequences
 
 CASES = [
     ("empty", np.empty(0, np.int64), np.empty(0, np.float64)),
@@ -82,10 +82,7 @@ def test_spark_compress_roundtrip(spark):
 
 @pytest.mark.parametrize("name,ts,vals", CASES, ids=[c[0] + "_vec" for c in CASES])
 def test_vectorized_encoders_roundtrip(name, ts, vals):
-    from kfts_insar_spark.functions.codec import (
-        encode_timestamps_vec,
-        encode_values_vec,
-    )
+    from tests.codec_oracle import encode_timestamps_vec, encode_values_vec
 
     n = len(ts)
     assert np.array_equal(decode_timestamps(encode_timestamps_vec(ts), n), ts)
@@ -101,10 +98,7 @@ def test_vectorized_encoders_roundtrip(name, ts, vals):
     st.lists(st.floats(allow_nan=True, allow_infinity=True, width=64), max_size=60),
 )
 def test_vectorized_roundtrip_property(ts, vals):
-    from kfts_insar_spark.functions.codec import (
-        encode_timestamps_vec,
-        encode_values_vec,
-    )
+    from tests.codec_oracle import encode_timestamps_vec, encode_values_vec
 
     n = min(len(ts), len(vals))
     ts = np.sort(np.asarray(ts[:n], dtype=np.int64))
@@ -144,10 +138,12 @@ def test_lockstep_decoders_match_scalar():
     import numpy as np
 
     from kfts_insar_spark.functions.codec import (
-        decode_timestamps,
         decode_timestamps_lockstep,
-        decode_values,
         decode_values_lockstep,
+    )
+    from tests.codec_oracle import (
+        decode_timestamps,
+        decode_values,
         encode_timestamps,
         encode_values,
     )
@@ -189,10 +185,8 @@ def test_pooled_chunk_layout_never_larger_than_explicit():
     """encode_values_chunked picks pooled-vs-explicit per chunk by exact
     bit cost, so its output can never exceed the explicit-only encoder
     (encode_values_vec) on the same chunks."""
-    from kfts_insar_spark.functions.codec import (
-        encode_values_chunked,
-        encode_values_vec,
-    )
+    from kfts_insar_spark.functions.codec import encode_values_chunked
+    from tests.codec_oracle import encode_values_vec
 
     rng = np.random.default_rng(11)
     vals = np.where(rng.random(4000) < 0.4, 42.0, rng.normal(0, 1e4, 4000))
@@ -449,6 +443,60 @@ def test_decompress_rejects_unknown_tag(spark):
             decompress_tier(spark.createDataFrame(bad)).collect()
 
 
+@pytest.fixture(scope="module")
+def three_family_tier(spark):
+    """One compressed day per stream mode: 'grid' (bitmap timestamps,
+    frame-of-reference ints), 'ramp' (dod timestamps, delta ints) and
+    'frac' (xor values)."""
+    import pandas as pd
+
+    rng = np.random.default_rng(3)
+    day = 1767225600
+    slots = np.sort(rng.choice(288, 150, replace=False))
+    rows = [("grid", day + 300 * int(k), float(rng.integers(1000, 1100))) for k in slots]
+    rows += [("ramp", day + 301 * k + k * k, float(5000 * k)) for k in range(60)]
+    rows += [("frac", day + 300 * k, float(rng.normal())) for k in range(60)]
+    df = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["source", "bucket_es", "sum_tok"])
+    )
+    comp = compress_tier(df).toPandas()
+    comp["ts_codec"] = comp["ts_codec"].map(bytes)
+    comp["val_codec"] = comp["val_codec"].map(bytes)
+    return comp.set_index("source", drop=False)
+
+
+@pytest.mark.parametrize(
+    "source,col,body,mode",
+    [
+        ("grid", "ts_codec", 5, 1),  # tag 0x02 + g, bitmap
+        ("ramp", "ts_codec", 1, 0),  # tag 0x00, delta-of-delta
+        ("grid", "val_codec", 1, 1),  # tag 0x01, frame of reference
+        ("ramp", "val_codec", 1, 0),  # tag 0x01, delta
+        ("frac", "val_codec", 1, None),  # tag 0x00, xor
+    ],
+    ids=["ts-bitmap", "ts-dod", "int-for", "int-delta", "xor"],
+)
+def test_decompress_rejects_truncated_stream(
+    spark, three_family_tier, source, col, body, mode
+):
+    """A stream cut to half its bytes must raise naming its chunk, never
+    decode the zero padding past its end as data (a cut ts stream used to
+    decode its tail as repeats of t0, a cut int stream as a constant)."""
+    good = three_family_tier
+    if mode is not None:
+        assert good.loc[source, col][body] >> 7 == mode
+    bad = good.reset_index(drop=True)
+    row = int(np.flatnonzero(bad["source"] == source)[0])
+    whole = bad.at[row, col]
+    bad.at[row, col] = whole[: len(whole) // 2]
+    with pytest.raises(
+        Exception,
+        match=f"{col} of chunk source='{source}' "
+        f"bucket_es={bad.at[row, 'bucket_es']} is truncated",
+    ):
+        decompress_tier(spark.createDataFrame(bad)).collect()
+
+
 def test_encode_ints_rejects_64bit_delta():
     """ADVICE r4 (low): the delta width lives in a 6-bit field; a delta
     needing 64 bits must raise instead of wrapping the width and
@@ -459,3 +507,165 @@ def test_encode_ints_rejects_64bit_delta():
         encode_ints_chunked(
             np.array([0, 2**62], np.int64), np.array([0], np.int64)
         )
+
+
+# ------------------------------------------------ v3 stream modes
+def _flat(chunks):
+    vals = np.concatenate([np.asarray(c, dtype=np.int64) for c in chunks])
+    starts = np.cumsum([0] + [len(c) for c in chunks[:-1]]).astype(np.int64)
+    return vals, starts, np.array([len(c) for c in chunks], dtype=np.int64)
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.lists(
+        st.tuples(
+            st.integers(-(2**40), 2**40),
+            st.lists(
+                st.integers(0, 3) | st.integers(1, 40) | st.integers(0, 2**33),
+                max_size=40,
+            ),
+        ),
+        min_size=1,
+        max_size=6,
+    )
+)
+def test_timestamp_modes_roundtrip_property(chunks):
+    """Batches mixing bitmap and dod chunks roundtrip through the lockstep
+    decoder and the scalar oracle; a chunk with a repeated timestamp must
+    pick dod (a bitmap holds each slot once)."""
+    from kfts_insar_spark.functions.codec import (
+        decode_timestamps_lockstep,
+        encode_timestamps_chunked,
+    )
+
+    chunks = [t0 + np.concatenate([[0], np.cumsum(steps)]) for t0, steps in chunks]
+    ts, starts, ns = _flat(chunks)
+    enc = encode_timestamps_chunked(ts, starts)
+    mat = decode_timestamps_lockstep(enc, ns)
+    for i, c in enumerate(chunks):
+        assert np.array_equal(mat[i, : ns[i]], c), i
+        assert np.array_equal(decode_timestamps(enc[i], ns[i]), c), i
+        if np.any(np.diff(c) == 0):
+            assert enc[i][0] >> 7 == 0, i
+
+
+def test_timestamp_modes_mixed_batch():
+    """One batch holding a bitmap chunk, a chunk with duplicates and a
+    chunk whose span is far too wide for a bitmap decodes exactly, each in
+    the mode its shape calls for."""
+    from kfts_insar_spark.functions.codec import (
+        decode_timestamps_lockstep,
+        encode_timestamps_chunked,
+    )
+
+    rng = np.random.default_rng(8)
+    chunks = [
+        np.sort(rng.choice(288, 120, replace=False)) + 10**9,
+        np.array([5, 6, 6, 7, 9]),
+        np.array([0, 2**40, 2**41, 2**62]),
+        np.array([-(2**63), -(2**62), 0, 2**62, 2**63 - 1]),
+        np.array([42]),
+    ]
+    ts, starts, ns = _flat(chunks)
+    enc = encode_timestamps_chunked(ts, starts)
+    assert [e[0] >> 7 for e in enc[:4]] == [1, 0, 0, 0]
+    mat = decode_timestamps_lockstep(enc, ns)
+    for i, c in enumerate(chunks):
+        assert np.array_equal(mat[i, : ns[i]], c), i
+
+
+def test_int_modes_roundtrip_property():
+    """Batches mixing frame-of-reference chunks (values in a narrow band)
+    and delta chunks (ramps) roundtrip through the lockstep decoder and the
+    scalar oracle."""
+    from kfts_insar_spark.functions.codec import (
+        decode_ints_lockstep,
+        encode_ints_chunked,
+    )
+    from tests.codec_oracle import decode_ints
+
+    band = st.tuples(
+        st.integers(-(2**52), 2**52), st.lists(st.integers(0, 5000), min_size=1, max_size=40)
+    ).map(lambda t: [t[0] + v for v in t[1]])
+    ramp = st.tuples(
+        st.integers(-(2**52), 2**52), st.lists(st.integers(-40, 400), max_size=40)
+    ).map(lambda t: list(t[0] + np.cumsum([0] + t[1])))
+
+    @settings(max_examples=200, deadline=None)
+    @given(st.lists(band | ramp, min_size=1, max_size=6))
+    def prop(chunks):
+        vals, starts, ns = _flat(chunks)
+        enc = encode_ints_chunked(vals, starts)
+        mat = decode_ints_lockstep(enc, ns)
+        for i, c in enumerate(chunks):
+            assert np.array_equal(mat[i, : ns[i]], c), i
+            assert np.array_equal(decode_ints(enc[i], ns[i]), c), i
+
+    prop()
+
+
+def test_mode_pick_never_larger_than_single_mode():
+    """The per-chunk pick is by exact byte cost, so a chunk's stream is
+    never longer than the dod-only (timestamps) or delta-only (ints)
+    encoding of the same chunk."""
+    from kfts_insar_spark.functions.codec import (
+        encode_ints_chunked,
+        encode_timestamps_chunked,
+    )
+    from tests.codec_oracle import (
+        decode_ints,
+        encode_ints_delta,
+        encode_timestamps_vec,
+    )
+
+    rng = np.random.default_rng(12)
+    ts_chunks, int_chunks = [], []
+    for fill in np.linspace(0.02, 1.0, 25):
+        slots = np.sort(rng.choice(288, max(1, int(288 * fill)), replace=False))
+        ts_chunks.append(slots + 10**6)
+        ts_chunks.append(np.cumsum(rng.integers(0, 3 + int(40 * fill), len(slots))))
+        int_chunks.append(rng.integers(0, 1 + int(10**5 * fill), len(slots)))
+        int_chunks.append(np.cumsum(rng.integers(-50, 50 + int(900 * fill), len(slots))))
+    ts, starts, ns = _flat(ts_chunks)
+    for c, e in zip(ts_chunks, encode_timestamps_chunked(ts, starts)):
+        assert len(e) <= len(encode_timestamps_vec(c))
+        assert np.array_equal(decode_timestamps(e, len(c)), c)
+    vals, starts, ns = _flat(int_chunks)
+    enc = encode_ints_chunked(vals, starts)
+    for c, e in zip(int_chunks, enc):
+        assert len(e) <= len(encode_ints_delta(c))
+        assert np.array_equal(decode_ints(e, len(c)), c)
+    assert {e[0] >> 7 for e in enc} == {0, 1}  # both int modes exercised
+
+
+def test_compress_tier_grid_chunks_pick_bitmap(spark):
+    """Days of the 300 s grid at fill 0.2-0.9 keep tag 0x02 (GCD-scaled)
+    and pick the bitmap mode, at under 3 bits/pt for half-full days, and
+    roundtrip exactly."""
+    import pandas as pd
+
+    rng = np.random.default_rng(4)
+    day = 1767225600
+    rows = []
+    fills = (0.2, 0.4, 0.5, 0.6, 0.8, 0.9)
+    for fill in fills:
+        for k in np.sort(rng.choice(288, int(288 * fill), replace=False)):
+            rows.append((f"fill{fill}", day + 300 * int(k), float(k)))
+    df = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["source", "bucket_es", "sum_tok"])
+    )
+    comp = compress_tier(df)
+    got = {
+        r.source: (bytes(r.ts_codec), r.n_points)
+        for r in comp.select("source", "ts_codec", "n_points").collect()
+    }
+    for fill in fills:
+        ts, n = got[f"fill{fill}"]
+        assert ts[0] == 2 and ts[5] >> 7 == 1, fill
+    ts, n = got["fill0.5"]
+    assert 8 * len(ts) / n < 3.0
+    back = sorted(
+        (r.source, r.bucket_es, r.value) for r in decompress_tier(comp).collect()
+    )
+    assert back == sorted(rows)
