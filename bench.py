@@ -25,7 +25,9 @@ Each query reports the MIN of $SPARK_GRAFT_BENCH_REPEATS (default 2) timed
 runs — this host shows 3-4× one-sided hypervisor stalls minute-to-minute
 (BENCH_SCALING.md), and the min is the reproducible engine cost. Stateful
 pipeline queries get a fresh table dir per run (never a warm noop).
-Run tools/bench_scaling.py for the N-vs-4N-cores scaling evidence.
+For the per-stage split of a pipeline run, trace it with
+`perfbench/run.py --trace 1`; BENCH_SCALING.md holds the N-vs-4N-cores
+scaling evidence.
 
 Measurement-protocol additions (round 4 — the r3 verdict's top item):
 
@@ -413,32 +415,10 @@ def main() -> None:
         assert res["status"] == "noop", res
         return 0
 
-    stage_breakdown: dict = {}
     try:
         timed("q_pipeline_incr", pipeline_incr, mk=mk_incr_dir)
         noop_dirs = iter(incr_dirs)
         timed("q_pipeline_noop", pipeline_noop, mk=lambda: next(noop_dirs))
-        # --- one extra UNTIMED instrumented pass (fresh 90%-committed dir,
-        # forced kernel materialization) decomposing the resumed run into
-        # per-stage wall seconds — where incr's cost goes:
-        # fixed floor (heal + property reads + manifest swaps) vs
-        # data-proportional work (scans, kernel, writes). The probe changes
-        # execution overlap, so its _total exceeds the headline
-        # q_pipeline_incr; the stage split, not the total, is the payload.
-        if _want("q_pipeline_incr"):
-            os.environ["SPARK_GRAFT_STAGE_TIMINGS"] = "1"
-            try:
-                td = mk_incr_dir()
-                for probe in ("q_pipeline_incr", "q_pipeline_noop"):
-                    pipe = TierPipeline(td, run_gapfill=True, kf_shards=CPUS)
-                    t0 = time.perf_counter()
-                    pipe.run(spark, seq_all)
-                    stage_breakdown[probe] = dict(
-                        sorted(pipe.stage_sec.items()),
-                        _total=round(time.perf_counter() - t0, 3),
-                    )
-            finally:
-                os.environ.pop("SPARK_GRAFT_STAGE_TIMINGS", None)
     finally:
         for td in incr_dirs:
             shutil.rmtree(td, ignore_errors=True)
@@ -692,8 +672,6 @@ def main() -> None:
     )
     if ab_block is not None:
         result["ab_vs_prev"] = ab_block
-    if stage_breakdown:
-        result["stage_breakdown"] = stage_breakdown
     spark.stop()
     print(json.dumps(result))
 

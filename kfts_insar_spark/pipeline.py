@@ -37,6 +37,11 @@ The commit order stays raw → series → gap-filled → KF state (the gap commi
 waits for the series commit, the state publish for the gap commit), so a
 crash at any point leaves a prefix that the next run's heal completes.
 
+The pipeline keeps no timers and has no probe mode: a run executes the same
+way whether or not it is measured. For the per-stage split, trace a run
+from outside (``perfbench/run.py --trace 1`` wraps the engine calls in spans
+and reads the Spark event log).
+
 Tier tables partition by ``pday`` (UTC day string) — retention drops expired
 raw partitions via metadata-only deletes (SnapshotTable.drop_partitions).
 """
@@ -45,9 +50,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
-import time
 from concurrent.futures import ThreadPoolExecutor
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -179,25 +182,6 @@ class TierPipeline:
         self.kf_cfg = kf_cfg
         self.run_gapfill = run_gapfill
         self.kf_shards = kf_shards
-        # wall-clock per named section of the last run() — concurrent
-        # sections (derive_tiers / gapfill overlap) each report their own
-        # wall span, so the sum can exceed the run's elapsed time. Driver
-        # sections that only BUILD lazy plans attribute their jobs to
-        # whichever later section triggers the action; set
-        # SPARK_GRAFT_STAGE_TIMINGS=1 to force-materialize the KF kernel
-        # inside its own section for clean attribution (changes the
-        # execution overlap — use on probe runs, not headline timings).
-        self.stage_sec: dict[str, float] = {}
-
-    @contextmanager
-    def _stage(self, name: str):
-        t0 = time.perf_counter()
-        try:
-            yield
-        finally:
-            self.stage_sec[name] = round(
-                self.stage_sec.get(name, 0.0) + time.perf_counter() - t0, 4
-            )
 
     # ------------------------------------------------------------------ run
     def run(self, spark: SparkSession, seq: DataFrame) -> dict:
@@ -208,24 +192,21 @@ class TierPipeline:
         tiers, the series commit and the KF gap-fill as concurrent chains;
         the commit order stays raw → series → gap-filled → state (module
         docstring, "Run structure")."""
-        self.stage_sec = {}
         wm = int(self.raw.property("watermark_es", -1))
         # Heal first: a crash between the raw commit and the downstream
         # commits leaves 1h/1d/compressed/gapfilled lagging raw's watermark;
         # without this the next run would treat the increment as already
         # processed (raw watermark advanced) and those tiers would stay
         # permanently short of it.
-        with self._stage("heal"):
-            self._heal(spark, seq, wm)
+        self._heal(spark, seq, wm)
         fresh = seq.filter(F.col("ingest_es") > F.lit(wm))
         # No-op exit on one emptiness probe, before any plan, checkpoint or
         # write is built. Not a bounds read: rows that land after the probe
         # go to the next run, and a non-empty increment still takes the
         # single-scan write below. (A bounded source folds the two
         # watermark filters into an empty plan and the probe runs no job.)
-        with self._stage("probe"):
-            if fresh.isEmpty():
-                return {"status": "noop", "watermark_es": wm}
+        if fresh.isEmpty():
+            return {"status": "noop", "watermark_es": wm}
         # ---- raw tier: append-only (each 300 s bucket is born complete).
         # ONE scan of the base table: the increment is aggregated and
         # written in the same job, and the new watermark derives from the
@@ -243,57 +224,51 @@ class TierPipeline:
         # rollup_raw), series = the partials themselves.
         partial = raw_inc = None
         try:
-            with self._stage("ingest_raw"):
-                if self.run_gapfill:
-                    # localCheckpoint (not persist): the series commit and
-                    # the KF resume read this frame AFTER the raw commit
-                    # fixed the watermark from its footer stats. A persisted
-                    # frame can silently recompute from the live source on
-                    # cache eviction, picking up rows past the committed
-                    # watermark → double-counted KF input on the next run. A
-                    # checkpoint truncates lineage: partitions either serve
-                    # the materialization the raw commit saw, or the job
-                    # FAILS (lost partitions are not recomputable) and the
-                    # next run heals through the bounded fallback scan in
-                    # _ingest_series.
-                    partial = rollup_series_partial(
-                        fresh, self.kf_shards, with_max_ingest=True
-                    ).localCheckpoint(eager=False)
-                    merged = merge_shard_partials(partial, with_max_ingest=True)
-                else:
-                    merged = rollup_raw(fresh, with_max_ingest=True)
-                # checkpoint the merged increment: the raw write materializes
-                # it and the derived tiers then read THESE blocks instead of
-                # re-scanning the parquet files the commit just wrote (the
-                # prior-snapshot read in _derive_tiers covers boundary
-                # days). Same lost-partition contract as `partial`.
-                prior_sid = self.raw.current_snapshot_id()
-                raw_inc = merged.withColumn("pday", _pday()).localCheckpoint(
-                    eager=False
-                )
-                with self._stage("i_append"):
-                    sid = self.raw.append(
-                        raw_inc,
-                        partition_by=["pday"],
-                        coalesce=_write_tasks(spark),  # optimize-write
-                        stats_cols=["max_ies"],
-                        properties_fn=lambda entries: {
-                            "watermark_es": max(
-                                int(e["stats"]["max_ies"][1]) for e in entries
-                            )
-                        },
-                        # the probe saw rows; a source that lost them since
-                        # still must not commit an empty snapshot
-                        skip_if_empty=True,
-                    )
-                if sid is None:
-                    return {"status": "noop", "watermark_es": wm}
-                new_wm = int(self.raw.property("watermark_es", wm))
-                n_raw = self.raw.last_commit_rows()
-                days = self.raw.last_commit_partitions("pday")
-                self.log.record(
-                    "tier_raw", sid, new_wm, self.raw.manifest()["files"], n_raw
-                )
+            if self.run_gapfill:
+                # localCheckpoint (not persist): the series commit and
+                # the KF resume read this frame AFTER the raw commit
+                # fixed the watermark from its footer stats. A persisted
+                # frame can silently recompute from the live source on
+                # cache eviction, picking up rows past the committed
+                # watermark → double-counted KF input on the next run. A
+                # checkpoint truncates lineage: partitions either serve
+                # the materialization the raw commit saw, or the job
+                # FAILS (lost partitions are not recomputable) and the
+                # next run heals through the bounded fallback scan in
+                # _ingest_series.
+                partial = rollup_series_partial(
+                    fresh, self.kf_shards, with_max_ingest=True
+                ).localCheckpoint(eager=False)
+                merged = merge_shard_partials(partial, with_max_ingest=True)
+            else:
+                merged = rollup_raw(fresh, with_max_ingest=True)
+            # checkpoint the merged increment: the raw write materializes
+            # it and the derived tiers then read THESE blocks instead of
+            # re-scanning the parquet files the commit just wrote (the
+            # prior-snapshot read in _derive_tiers covers boundary
+            # days). Same lost-partition contract as `partial`.
+            prior_sid = self.raw.current_snapshot_id()
+            raw_inc = merged.withColumn("pday", _pday()).localCheckpoint(eager=False)
+            sid = self.raw.append(
+                raw_inc,
+                partition_by=["pday"],
+                coalesce=_write_tasks(spark),  # optimize-write
+                stats_cols=["max_ies"],
+                properties_fn=lambda entries: {
+                    "watermark_es": max(int(e["stats"]["max_ies"][1]) for e in entries)
+                },
+                # the probe saw rows; a source that lost them since still
+                # must not commit an empty snapshot
+                skip_if_empty=True,
+            )
+            if sid is None:
+                return {"status": "noop", "watermark_es": wm}
+            new_wm = int(self.raw.property("watermark_es", wm))
+            n_raw = self.raw.last_commit_rows()
+            days = self.raw.last_commit_partitions("pday")
+            self.log.record(
+                "tier_raw", sid, new_wm, self.raw.manifest()["files"], n_raw
+            )
             result = {
                 "status": "ok",
                 "watermark_es": new_wm,
@@ -311,25 +286,21 @@ class TierPipeline:
             #     kernel reads the same partials and starts at once — only
             #     its gap commit waits for (b). A cold start reads the
             #     committed series tier, so it waits for (b) first.
-            def timed(name, fn, *args, **kw):
-                with self._stage(name):
-                    return fn(*args, **kw)
-
             with ThreadPoolExecutor(3) as ex:
                 f_tiers = ex.submit(
-                    timed, "derive_tiers", self._derive_tiers, spark, days,
-                    new_wm, inc=raw_inc, prior_sid=prior_sid,
+                    self._derive_tiers, spark, days, new_wm,
+                    inc=raw_inc, prior_sid=prior_sid,
                 )
                 if self.run_gapfill:
                     resume = self.kf_state.property("grid_lo") is not None and (
                         int(self.kf_state.property("watermark_es", -1)) == wm
                     )
                     f_series = ex.submit(
-                        timed, "ingest_series", self._ingest_series, spark,
-                        seq, new_wm, partial=partial, wm_partial=wm,
+                        self._ingest_series, spark, seq, new_wm,
+                        partial=partial, wm_partial=wm,
                     )
                     f_gap = ex.submit(
-                        timed, "gapfill", self._run_gapfill, spark, new_wm,
+                        self._run_gapfill, spark, new_wm,
                         obs=partial if resume else None, series_commit=f_series,
                     )
                     gres = f_gap.result()
@@ -434,21 +405,14 @@ class TierPipeline:
             raw_days = (
                 self.raw.read(spark, where=in_days).select(*TIER_COLS).persist()
             )
-        if os.environ.get("SPARK_GRAFT_STAGE_TIMINGS"):
-            # probe mode only: materialize the shared frame in its own
-            # section so the concurrent tier jobs don't race the cache fill
-            # (attribution, not a semantics change)
-            with self._stage("t_raw_days"):
-                raw_days.count()
 
-        def write(name, tbl, frame, props=None):
-            with self._stage(name):
-                sid = tbl.overwrite_partitions(
-                    frame.withColumn("pday", _pday()),
-                    ["pday"],
-                    properties={"watermark_es": wm, **(props or {})},
-                    coalesce=_write_tasks(spark, len(days)),
-                )
+        def write(tbl, frame, props=None):
+            sid = tbl.overwrite_partitions(
+                frame.withColumn("pday", _pday()),
+                ["pday"],
+                properties={"watermark_es": wm, **(props or {})},
+                coalesce=_write_tasks(spark, len(days)),
+            )
             return sid, tbl.last_commit_rows(), tbl.manifest()["files"]
 
         def write_compressed():
@@ -475,8 +439,7 @@ class TierPipeline:
                         "re-run) instead of resuming incrementally"
                     )
             return write(
-                "tiers_compressed", self.comp, compress_tier(raw_days),
-                {"codec_format": CODEC_FORMAT},
+                self.comp, compress_tier(raw_days), {"codec_format": CODEC_FORMAT}
             )
 
         try:
@@ -486,14 +449,8 @@ class TierPipeline:
             # concurrent Spark jobs (different tables, no shared commit
             # state), so their plan compile + commit fixed costs overlap.
             with ThreadPoolExecutor(3) as ex:
-                f_h = ex.submit(
-                    write, "tiers_1h", self.h1,
-                    rollup_cascade(raw_days, HOUR_SECONDS),
-                )
-                f_d = ex.submit(
-                    write, "tiers_1d", self.d1,
-                    rollup_cascade(raw_days, DAY_SECONDS),
-                )
+                f_h = ex.submit(write, self.h1, rollup_cascade(raw_days, HOUR_SECONDS))
+                f_d = ex.submit(write, self.d1, rollup_cascade(raw_days, DAY_SECONDS))
                 f_c = ex.submit(write_compressed)
                 sid_h, n_h, files_h = f_h.result()
                 sid_d, n_d, files_d = f_d.result()
@@ -573,7 +530,6 @@ class TierPipeline:
         """
         import numpy as np
 
-        _t_meta = time.perf_counter()
         lo = self.kf_state.property("grid_lo")
         series_now = None
         if obs is None:
@@ -606,7 +562,6 @@ class TierPipeline:
         prev = self.kf_state.read(spark)
         k_done_prev = int(self.kf_state.property("k_done", 0))
         if prev is not None and m <= k_done_prev:
-            self.stage_sec["kf_meta"] = round(time.perf_counter() - _t_meta, 4)
             return {"n_rows": 0, "snapshot_id": self.gap.current_snapshot_id()}
         t_grid = np.arange(m) * (RAW_SECONDS / DAY_SECONDS)
         cover_min_step = (
@@ -641,18 +596,9 @@ class TierPipeline:
             # current), and a brand-new sub-series cold-starts
             wide = wide.join(prev, "doc_id", "full")
 
-        self.stage_sec["kf_meta"] = round(time.perf_counter() - _t_meta, 4)
         combined = kalman_gapfill_wide(
             wide, t_grid, self.kf_cfg, with_state=True
         ).persist()
-        if os.environ.get("SPARK_GRAFT_STAGE_TIMINGS"):
-            # probe mode: force the kernel job into its own section (the
-            # scan + doc-wide groupBy + mapInArrow kernel + persist).
-            # Default runs leave `combined` lazy so the state write overlaps
-            # the output explode/stitch — don't enable this on headline
-            # timings.
-            with self._stage("kf_kernel"):
-                combined.count()
 
         state_pool = ThreadPoolExecutor(1)
         try:
@@ -677,7 +623,6 @@ class TierPipeline:
                 None,  # partition_by
                 2,  # coalesce: tiny table — one file beats 32 footer reads
             )
-            _t_out = time.perf_counter()
             rows = _gap_rows(combined, t_grid, lo)
 
             # stitch: the resume re-emits the overlap window; affected day
@@ -694,8 +639,7 @@ class TierPipeline:
                 # step from the smallest emit0 (0 when a sub-series
                 # cold-starts) to the grid end — one min over the
                 # ≤ sources × kf_shards persisted kernel rows, no explode
-                with self._stage("g_touched"):
-                    e0 = combined.agg(F.min("emit0")).first()[0]
+                e0 = combined.agg(F.min("emit0")).first()[0]
                 touched = set()
                 if e0 is not None:
                     first = lo + int(e0) * RAW_SECONDS
@@ -747,31 +691,26 @@ class TierPipeline:
                     rows = keep_old.unionByName(rows)
             if series_commit is not None:
                 series_commit.result()  # series commit lands before gap commit
-            with self._stage("g_write"):
-                sid = self.gap.overwrite_partitions(
-                    rows,
-                    ["pday"],
-                    properties={"watermark_es": wm},
-                    coalesce=_write_tasks(spark, n_gap_parts),
-                    stats_cols=["bucket_es"],
-                )
-            n_rows = self.gap.last_commit_rows()
-            self.stage_sec["kf_output"] = round(
-                time.perf_counter() - _t_out, 4
+            sid = self.gap.overwrite_partitions(
+                rows,
+                ["pday"],
+                properties={"watermark_es": wm},
+                coalesce=_write_tasks(spark, n_gap_parts),
+                stats_cols=["bucket_es"],
             )
+            n_rows = self.gap.last_commit_rows()
             # the state's idx0 is uniform across docs (grid-determined): L
             # kept params + last t_sep phases → idx0 = m − t_sep.
             # Gap commit has landed — NOW publish the staged state.
-            with self._stage("kf_state_commit"):
-                self.kf_state.commit_staged(
-                    f_state.result(),
-                    properties={
-                        "grid_lo": lo,
-                        "k_done": m,
-                        "idx0": max(0, m - self.kf_cfg.t_sep),
-                        "watermark_es": wm,
-                    },
-                )
+            self.kf_state.commit_staged(
+                f_state.result(),
+                properties={
+                    "grid_lo": lo,
+                    "k_done": m,
+                    "idx0": max(0, m - self.kf_cfg.t_sep),
+                    "watermark_es": wm,
+                },
+            )
         finally:
             state_pool.shutdown(wait=True)
             combined.unpersist()

@@ -50,7 +50,6 @@ class SnapshotTable:
         # are long-lived objects, manifests can be large.
         self._manifest_cache: dict[int, dict] = {}
         self._cache_lock = threading.Lock()
-        self._pending_schema: str | None = None
 
     # ------------------------------------------------------------- metadata
     @property
@@ -100,13 +99,14 @@ class SnapshotTable:
         partition_by: list[str] | None,
         coalesce: int | None = None,
         stats_cols: list[str] | None = None,
-    ) -> list[dict]:
-        """Write df under data/<sid>/ and return file entries with partition
-        values, row counts and sizes (per-file lineage). ``coalesce`` is the
-        optimize-write knob: without it a 32-partition plan writing a small
-        tier emits 32 tiny files per partition value, and every downstream
-        stage pays listing+footer costs (measured as the pipeline's main
-        overhead at bench scale)."""
+    ) -> tuple[list[dict], str]:
+        """Write df under data/<sid>/ and return its file entries (partition
+        values, row counts and sizes: per-file lineage) with the file schema
+        as JSON, both for :meth:`_commit`. ``coalesce`` is the optimize-write
+        knob: without it a 32-partition plan writing a small tier emits 32
+        tiny files per partition value, and every downstream stage pays
+        listing+footer costs (measured as the pipeline's main overhead at
+        bench scale)."""
         # record the FILE schema (df minus directory-partition columns) for
         # the manifest: readers then pass it to the parquet scan explicitly
         # and skip per-read footer schema inference (one less driver-side
@@ -115,9 +115,7 @@ class SnapshotTable:
         pset = set(partition_by or [])
         from pyspark.sql.types import StructType
 
-        self._pending_schema = StructType(
-            [f for f in df.schema.fields if f.name not in pset]
-        ).json()
+        schema = StructType([f for f in df.schema.fields if f.name not in pset]).json()
         out_dir = os.path.join(self.path, "data", str(sid), uuid.uuid4().hex[:8])
         if coalesce:
             # repartition, not coalesce: coalesce would merge the upstream
@@ -198,7 +196,7 @@ class SnapshotTable:
         # footer reads are independent filesystem ops — serial driver-side
         # reading was the measured bulk of the per-commit fixed cost
         with ThreadPoolExecutor(min(32, max(1, len(found)))) as ex:
-            return list(ex.map(entry, found))
+            return list(ex.map(entry, found)), schema
 
     def _commit(
         self,
@@ -207,6 +205,7 @@ class SnapshotTable:
         operation: str,
         properties: dict | None,
         parent: int | None,
+        schema: str | None,
     ) -> int:
         # Table properties persist across commits (Iceberg semantics): a
         # commit that sets none — e.g. a retention drop_partitions — must
@@ -215,11 +214,9 @@ class SnapshotTable:
         parent_m = self.manifest(parent) if parent is not None else None
         inherited = (parent_m or {}).get("properties", {})
         # schema: from the files this commit wrote, else inherited (a
-        # metadata-only commit like drop_partitions keeps the parent's)
-        schema = getattr(self, "_pending_schema", None) or (parent_m or {}).get(
-            "schema"
-        )
-        self._pending_schema = None
+        # metadata-only commit like drop_partitions passes None and keeps
+        # the parent's)
+        schema = schema or (parent_m or {}).get("schema")
         if parent_m and parent_m.get("schema") not in (None, schema):
             parent_paths = {e["path"] for e in parent_m["files"]}
             if any(e["path"] in parent_paths for e in files):
@@ -326,7 +323,7 @@ class SnapshotTable:
         read-then-write race. ``skip_if_empty`` returns None (no commit,
         no snapshot) when the increment produced zero rows."""
         sid, parent = self._next_sid()
-        new = self._write_files(df, sid, partition_by, coalesce, stats_cols)
+        new, schema = self._write_files(df, sid, partition_by, coalesce, stats_cols)
         if skip_if_empty and sum(e["rows"] for e in new) == 0:
             return None
         self.last_commit_files = new
@@ -334,7 +331,7 @@ class SnapshotTable:
         if properties_fn is not None:
             props.update(properties_fn(new))
         prev = (self.manifest(parent) or {}).get("files", []) if parent is not None else []
-        return self._commit(sid, prev + new, "append", props, parent)
+        return self._commit(sid, prev + new, "append", props, parent, schema)
 
     def overwrite_partitions(
         self,
@@ -347,7 +344,7 @@ class SnapshotTable:
         """Replace exactly the partitions present in ``df`` (Iceberg dynamic
         partition overwrite)."""
         sid, parent = self._next_sid()
-        new = self._write_files(df, sid, partition_by, coalesce, stats_cols)
+        new, schema = self._write_files(df, sid, partition_by, coalesce, stats_cols)
         self.last_commit_files = new
         touched = {tuple(sorted(e["partition"].items())) for e in new}
         prev = (self.manifest(parent) or {}).get("files", []) if parent is not None else []
@@ -356,7 +353,7 @@ class SnapshotTable:
             for e in prev
             if tuple(sorted(e["partition"].items())) not in touched
         ]
-        return self._commit(sid, kept + new, "overwrite", properties, parent)
+        return self._commit(sid, kept + new, "overwrite", properties, parent, schema)
 
     def overwrite_all(
         self,
@@ -367,9 +364,9 @@ class SnapshotTable:
         stats_cols: list[str] | None = None,
     ) -> int:
         sid, parent = self._next_sid()
-        new = self._write_files(df, sid, partition_by, coalesce, stats_cols)
+        new, schema = self._write_files(df, sid, partition_by, coalesce, stats_cols)
         self.last_commit_files = new
-        return self._commit(sid, new, "overwrite_all", properties, parent)
+        return self._commit(sid, new, "overwrite_all", properties, parent, schema)
 
     def stage_all(
         self,
@@ -388,24 +385,16 @@ class SnapshotTable:
         :meth:`remove_orphans`) and the table at its previous snapshot —
         never a torn or early commit."""
         sid, parent = self._next_sid()
-        files = self._write_files(df, sid, partition_by, coalesce, stats_cols)
-        # carry the write-time schema in the handle: another write on this
-        # instance between stage and publish must not steal it
-        return {
-            "sid": sid,
-            "parent": parent,
-            "files": files,
-            "schema": getattr(self, "_pending_schema", None),
-        }
+        files, schema = self._write_files(df, sid, partition_by, coalesce, stats_cols)
+        return {"sid": sid, "parent": parent, "files": files, "schema": schema}
 
     def commit_staged(self, staged: dict, properties: dict | None = None) -> int:
         """Two-phase overwrite_all, phase 2: atomically publish files
         staged by :meth:`stage_all`."""
         self.last_commit_files = staged["files"]
-        self._pending_schema = staged.get("schema")
         return self._commit(
             staged["sid"], staged["files"], "overwrite_all", properties,
-            staged["parent"],
+            staged["parent"], staged["schema"],
         )
 
     def upsert(
@@ -483,7 +472,7 @@ class SnapshotTable:
         sid, parent = self._next_sid()
         prev = (self.manifest(parent) or {}).get("files", []) if parent is not None else []
         kept = [e for e in prev if not predicate(e["partition"])]
-        return self._commit(sid, kept, "delete", properties, parent)
+        return self._commit(sid, kept, "delete", properties, parent, None)
 
     # ------------------------------------------------------------ maintenance
     def vacuum(self, keep_last: int = 1) -> dict:
@@ -601,11 +590,11 @@ class SnapshotTable:
         if keys:
             df = df.repartition(max(1, min(n_parts, 64)), *keys)
         sid, parent = self._next_sid()
-        new = self._write_files(df, sid, keys or None)
+        new, schema = self._write_files(df, sid, keys or None)
         self.last_commit_files = new
         dead = {e["path"] for e in victims}
         kept = [e for e in m["files"] if e["path"] not in dead]
-        self._commit(sid, kept + new, "replace", None, parent)
+        self._commit(sid, kept + new, "replace", None, parent, schema)
         return {
             "partitions": n_parts,
             "files_before": len(victims),

@@ -251,14 +251,14 @@ def test_concurrent_commit_detected(spark, seq, tmp_path):
     t.append(df)
     # writer A plans (reads parent), writer B commits in between
     sid, parent = t._next_sid()
-    files = t._write_files(df, sid, None)
+    files, schema = t._write_files(df, sid, None)
     t.append(df)  # writer B wins, taking the same snapshot id
     # same-sid race: A must NOT clobber B's committed manifest
     with pytest.raises(ConcurrentCommitError):
-        t._commit(sid, files, "append", None, parent)
+        t._commit(sid, files, "append", None, parent, schema)
     # stale-parent race with a fresh sid
     with pytest.raises(ConcurrentCommitError):
-        t._commit(sid + 1, files, "append", None, parent)
+        t._commit(sid + 1, files, "append", None, parent, schema)
     # table still reads writer B's state: 20 rows, manifest intact
     assert t.read(spark).count() == 20
     assert t.manifest() is not None
@@ -536,7 +536,7 @@ def test_remove_orphans_deletes_failed_commit_debris(spark, tmp_path):
 
     # stage the failed commit: data files land, manifest never swaps
     sid, _parent = t._next_sid()
-    orphans = [e["path"] for e in t._write_files(df, sid, None)]
+    orphans = [e["path"] for e in t._write_files(df, sid, None)[0]]
     assert all(os.path.exists(p) for p in orphans)
 
     # a young orphan is protected (a live writer holds exactly this state)
@@ -962,3 +962,33 @@ def test_commit_refuses_dropped_or_retyped_column(spark, tmp_path):
     # full replacement: no earlier file survives, any schema is safe
     t.overwrite_all(spark.range(2).selectExpr("CAST(id AS STRING) AS k"))
     assert sorted(r.k for r in t.read(spark).collect()) == ["0", "1"]
+
+
+def test_skipped_append_leaves_schema_to_next_commit(spark, tmp_path):
+    """An append that skip_if_empty drops commits nothing, so its frame's
+    schema must not reach the table's next commit. A metadata-only commit
+    (here a retention drop) keeps the parent's schema: a wider skipped
+    frame must not add a column no file holds, and a narrower one must not
+    make the drop refuse as a column drop."""
+    from kfts_insar_spark.sources.snapshot import SnapshotTable
+
+    t = SnapshotTable(str(tmp_path / "t"))
+    base = spark.range(4).selectExpr(
+        "id AS a", "id * 10 AS b", "CAST(id % 2 AS STRING) AS p"
+    )
+    t.append(base, partition_by=["p"])
+    schema = t.manifest()["schema"]
+
+    wider = base.withColumn("c", F.lit(1)).limit(0)
+    assert t.append(wider, partition_by=["p"], skip_if_empty=True) is None
+    t.drop_partitions(lambda p: p["p"] == "1")
+    assert t.manifest()["schema"] == schema
+    assert t.read(spark).columns == ["a", "b", "p"]
+
+    narrower = base.drop("b").limit(0)
+    assert t.append(narrower, partition_by=["p"], skip_if_empty=True) is None
+    t.drop_partitions(lambda p: False)
+    assert t.manifest()["schema"] == schema
+    assert sorted(tuple(r) for r in t.read(spark).collect()) == [
+        (0, 0, "0"), (2, 20, "0")
+    ]
