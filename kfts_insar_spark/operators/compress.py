@@ -67,6 +67,7 @@ from ..functions.codec import (
 from ..schema import COMPRESSED_TIER
 
 CHUNK_SECONDS = 86400
+PACK_BUCKETS = 256  # hash buckets of (source, chunk): one codec call each
 
 # Wire-format version of the per-chunk tagged codec streams. Bumped when the
 # byte layout changes (v2 = tagged streams; v3 = a mode bit at the head of
@@ -89,7 +90,6 @@ def compress_tier(
     tier: DataFrame,
     value_col: str = "sum_tok",
     chunk_seconds: int = CHUNK_SECONDS,
-    num_buckets: int = 256,
 ) -> DataFrame:
     """tier(source, bucket_es, <value_col>, …) → COMPRESSED_TIER rows.
 
@@ -180,7 +180,7 @@ def compress_tier(
         .alias("_chunk"),
     )
     bucketed = chunked.withColumn(
-        "_b", F.pmod(F.xxhash64("source", "_chunk"), F.lit(num_buckets))
+        "_b", F.pmod(F.xxhash64("source", "_chunk"), F.lit(PACK_BUCKETS))
     )
     return bucketed.groupBy("_b").applyInPandas(pack, schema=COMPRESSED_TIER)
 

@@ -20,9 +20,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 RAMP_SCHEMA = "group_id long, a double, b double, c double, n long, rms double"
+RAMP_BUCKETS = 64  # hash buckets of group_id: one applyInPandas call each
 
 
-def fit_ramps(df: DataFrame, num_buckets: int = 64) -> DataFrame:
+def fit_ramps(df: DataFrame) -> DataFrame:
     """df(group_id, x, y, v) → per-group plane coefficients (a, b, c) +
     fit stats. Hash-bucketed applyInPandas; each call solves all groups in
     the bucket with one batched lstsq per group (groups are independent)."""
@@ -53,7 +54,7 @@ def fit_ramps(df: DataFrame, num_buckets: int = 64) -> DataFrame:
             )
         return pd.DataFrame(out, columns=["group_id", "a", "b", "c", "n", "rms"])
 
-    bucketed = df.withColumn("_b", F.pmod(F.xxhash64("group_id"), F.lit(num_buckets)))
+    bucketed = df.withColumn("_b", F.pmod(F.xxhash64("group_id"), F.lit(RAMP_BUCKETS)))
     return bucketed.groupBy("_b").applyInPandas(run, schema=RAMP_SCHEMA)
 
 

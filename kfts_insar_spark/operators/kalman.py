@@ -27,21 +27,22 @@ Semantics preserved from the reference:
   ``(k%5==0) or (k_end-1)`` condition is always truthy (SURVEY.md §4) — i.e.
   compaction runs EVERY step; we implement that actual behavior.
 
-Two kernels:
-- :func:`kalman_direct_batch` — scalar observation per (doc, step): the hot
-  path for gap-filling the rolled-up token-count series. Fully vectorized
-  across docs; a gap is a masked update (K := 0), which is *algebraically
-  identical* to the reference's skip-update branch.
-- :func:`kalman_pairs_doc` — observations are differences over an incidence
-  edge list (the interferogram case, ``create_H_R_and_D``
-  kf/KF_class.py:182-248): exact reference semantics per doc, used by the
-  reconstruction golden tests.
+One kernel, :func:`kalman_direct_batch`. Fully vectorized across docs; a
+gap is a masked update (K := 0), which is *algebraically identical* to the
+reference's skip-update branch. Its hot path is one scalar observation per
+(doc, step) on the newest phase — gap-filling the rolled-up token-count
+series. Given per-observation lags it also takes several observations per
+step, each a difference phase(k) − phase(k − lag) over an incidence edge
+(the interferogram case, ``create_H_R_and_D`` kf/KF_class.py:182-248).
+Both go through one per-slot update: a direct observation is the lag-0
+slot, and the lag terms and the innovation mean run only where a slot
+carries a lag or a step carries several observations.
 
 Spark execution: :func:`kalman_gapfill_wide` is the one adapter over the
 batch kernel (cold start, resume from state, fit flags); :func:`to_wide`
-builds its input from long (doc_id, step, value) rows and
+builds its input from long (doc_id, step, [lag,] value) rows and
 :func:`explode_kf_output` turns its arrays back into long rows.
-:func:`kalman_pairs` runs the per-doc pairs kernel.
+:func:`kalman_pairs` is that chain over an edge list.
 
 Scale notes: no shuffle beyond whatever built the doc-wide rows; state is
 O((L+t_sep)²) per doc (reference bound: kfts.py:413, t_sep ≤ 10) → ~2 KB/doc;
@@ -54,7 +55,6 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -66,7 +66,6 @@ from ..functions.basis import (
     param_schedule,
     resolve_model,
 )
-from ..schema import KF_OUTPUT
 
 
 def _arrival_steps(model: Model, t: np.ndarray, dt: float) -> np.ndarray:
@@ -130,8 +129,16 @@ def kalman_direct_batch(
     cfg: KFConfig,
     init: dict | None = None,
     p0_diag: np.ndarray | None = None,
+    lags: np.ndarray | None = None,
 ) -> dict[str, np.ndarray]:
     """Run the bounded-state KF over a (B, M) batch of series with NaN gaps.
+
+    ``lags`` (B, M, J) ints makes ``values`` a (B, M, J) block of up to J
+    observations per step (NaN = empty): lag 0 reads phase(k), lag l in
+    [1, min(t_sep, k)] reads phase(k) − phase(k − l), an interferogram
+    (``create_H_R_and_D``, kf/KF_class.py:182-248). They update one after
+    another (exact for diagonal R); innov is the mean of their pre-update
+    innovations, as in the reference. ``check_eps`` needs ``lags=None``.
 
     ``init`` resumes from a committed state snapshot (the reference's update
     mode, ``restart_from_file`` kf/KF_class.py:70-116): dict with keys
@@ -150,7 +157,11 @@ def kalman_direct_batch(
     m (B, n) final state, P (B, n, n) final covariance, idx0, k_done.
     """
     values = np.asarray(values, dtype=np.float64)
-    B, M = values.shape
+    B, M = values.shape[:2]
+    vals = values[:, :, None] if lags is None else values  # (B, M, J)
+    J = vals.shape[2]
+    if lags is not None and cfg.check_eps is not None:
+        raise ValueError("check_eps applies to direct observations only")
     L, ts = cfg.L, cfg.t_sep
     R = cfg.sig_i**2
     model = resolve_model(cfg.model, t)
@@ -218,6 +229,7 @@ def kalman_direct_batch(
     rowbuf = np.empty((B, n_max))
     scr = np.empty((B, n_max, n_max))
     X, P = Xb, Pb
+    bi = np.arange(B)  # per-doc gathers of the lagged update
 
     L_trace = np.full(M, -1, dtype=np.int32)
 
@@ -290,23 +302,48 @@ def kalman_direct_batch(
         P[:, n, n] = v_new
         n += 1
 
-        # ---- update: scalar obs y_k on the newest phase (H = e_last)
-        y = values[:, k]
-        obs = np.isfinite(y)
-        nobs = ~obs  # hoisted: used three times below
-        nu = np.where(obs, y - X[:, n - 1], np.nan)
-        S = P[:, n - 1, n - 1] + R  # (B,)
-        K = Klast[:, :n]
-        np.divide(P[:, :n, n - 1], S[:, None], out=K)
-        K[nobs] = 0.0  # gap → no update (== reference forecast-only branch)
-        last_row = rowbuf[:, :n]
-        last_row[:] = P[:, n - 1, :n]  # copy before in-place P update
-        X[:, :n] += K * np.where(obs, nu, 0.0)[:, None]
-        prod = scr[:, :n, :n]
-        np.multiply(K[:, :, None], last_row[:, None, :], out=prod)
-        P[:, :n, :n] -= prod
-        innov[:, k] = nu
-        gap[:, k] = nobs
+        # ---- update: slot j observes H = e_last − e_pos, pos = last − lag
+        # (a direct observation, lag 0, has H = e_last); a step's slots
+        # update one after another, which is exact for the diagonal R
+        if J > 1:
+            # innov is the mean of the step's pre-update innovations
+            ys = vals[:, k]
+            has = np.isfinite(ys)
+            ls = lags[:, k].astype(np.intp)
+            hx0 = X[:, n - 1, None] - np.where(ls > 0, X[bi[:, None], n - 1 - ls], 0.0)
+            cnt = has.sum(axis=1)
+            nu0 = np.where(has, ys - hx0, 0.0).sum(axis=1)
+            innov[:, k] = np.where(cnt > 0, nu0 / np.maximum(cnt, 1), np.nan)
+            gap[:, k] = cnt == 0
+        for j in range(J) if J == 1 else np.flatnonzero(has.any(axis=0)):
+            y = vals[:, k, j]
+            obs = np.isfinite(y)
+            nobs = ~obs  # hoisted: used three times below
+            K = Klast[:, :n]
+            last_row = rowbuf[:, :n]
+            last_row[:] = P[:, n - 1, :n]  # H·P, copied before the in-place update
+            hx = X[:, n - 1]
+            lag = None if lags is None else lags[:, k, j].astype(np.intp)
+            if lag is None or not lag.any():
+                S = P[:, n - 1, n - 1] + R  # (B,)
+                np.divide(P[:, :n, n - 1], S[:, None], out=K)
+            else:
+                d, p = lag > 0, n - 1 - lag
+                K[:] = P[:, :n, n - 1]  # P·Hᵀ, divided by S below
+                K -= np.where(d[:, None], P[bi, :n, p], 0.0)
+                last_row -= np.where(d[:, None], P[bi, p, :n], 0.0)
+                hx = hx - np.where(d, X[bi, p], 0.0)
+                S = K[:, n - 1] - np.where(d, K[bi, p], 0.0) + R
+                np.divide(K, S[:, None], out=K)
+            nu = np.where(obs, y - hx, np.nan)
+            K[nobs] = 0.0  # gap → no update (== reference forecast-only branch)
+            X[:, :n] += K * np.where(obs, nu, 0.0)[:, None]
+            prod = scr[:, :n, :n]
+            np.multiply(K[:, :, None], last_row[:, None, :], out=prod)
+            P[:, :n, :n] -= prod
+        if J == 1:
+            innov[:, k] = nu
+            gap[:, k] = nobs
 
         # ---- check_fit (reference kf/KF_class.py:319-333): weighted
         # POST-fit residual against the analysed state/covariance
@@ -674,86 +711,9 @@ def retire_params(
 
 
 # --------------------------------------------------------------------------
-# Pairs mode — exact reference semantics (interferogram differences).
-# Per doc; observation i at step t_plus is y_i = φ(t_plus) − φ(t_minus) + ε.
-# --------------------------------------------------------------------------
-def kalman_pairs_doc(
-    pairs: np.ndarray,  # (N, 3): t_minus, t_plus, obs_value (NaN allowed)
-    t: np.ndarray,
-    cfg: KFConfig,
-) -> dict[str, np.ndarray]:
-    """Reference-faithful filter over an incidence edge list
-    (``create_H_R_and_D`` kf/KF_class.py:182-248 with the constraint
-    t_plus − t_minus ≤ t_sep, which the generators guarantee)."""
-    M = len(t)
-    L, ts = cfg.L, cfg.t_sep
-    model = resolve_model(cfg.model, t)
-    tm = pairs[:, 0].astype(int)
-    tp = pairs[:, 1].astype(int)
-    obs = pairs[:, 2].astype(np.float64)
-    assert (tp - tm).max(initial=0) <= ts, "pair span exceeds t_sep"
-
-    phase = np.full(M, np.nan)
-    std = np.full(M, np.nan)
-    innov = np.full(M, np.nan)
-
-    m = np.zeros(L + 1)
-    P = np.diag([cfg.sig_a**2] * L + [0.0])
-    idx0 = 0
-    phase[0], std[0] = 0.0, 0.0
-
-    for k in range(1, M):
-        n = len(m)
-        A = np.vstack([np.eye(n), np.zeros(n)])
-        A[n, :L] = basis_row(model, float(t[k]))
-        Q = np.diag([cfg.m_err] * L + [cfg.phi_err] * (n + 1 - L))
-        Q[-1, -1] = cfg.add_err
-        mf = A @ m
-        Pf = A @ P @ A.T + Q
-        n += 1
-
-        # measurement selection: pairs whose later epoch is exactly k and
-        # whose value is finite (P5/P6 predicates, KF_class.py:201-206)
-        sel = np.where((tp == k) & np.isfinite(obs))[0]
-        if len(sel) > 0:
-            nobs = len(sel)
-            H = np.zeros((nobs, n))
-            state_of = lambda s: L + (s - idx0)  # noqa: E731
-            for r, i in enumerate(sel):
-                H[r, state_of(tp[i])] = 1.0
-                H[r, state_of(tm[i])] = -1.0
-            D = obs[sel]
-            Rm = np.eye(nobs) * cfg.sig_i**2
-            nu = D - H @ mf
-            S = Rm + H @ Pf @ H.T
-            K = Pf @ H.T @ np.linalg.inv(S)
-            m = mf + K @ nu
-            P = Pf - K @ H @ Pf
-            innov[k] = float(np.mean(nu))
-        else:
-            m, P = mf, Pf
-
-        if k >= ts:
-            n_drop = (len(m) - L) - ts
-            if n_drop > 0:
-                for d in range(n_drop):
-                    phase[idx0 + d] = m[L + d]
-                    std[idx0 + d] = np.sqrt(abs(P[L + d, L + d]))
-                keep = list(range(L)) + list(range(L + n_drop, len(m)))
-                m = m[keep]
-                P = P[np.ix_(keep, keep)]
-                idx0 += n_drop
-
-    for d in range(len(m) - L):
-        phase[idx0 + d] = m[L + d]
-        std[idx0 + d] = np.sqrt(abs(P[L + d, L + d]))
-    return {"phase": phase, "std": std, "innov": innov, "m": m, "P": P}
-
-
-# --------------------------------------------------------------------------
 # Spark operator: ONE mapInArrow adapter over doc-wide rows. Long-form series
 # reach it through to_wide(); explode_kf_output() turns its arrays back into
-# KF_OUTPUT rows JVM-side. No shuffle beyond whatever built the wide rows,
+# long rows JVM-side. No shuffle beyond whatever built the wide rows,
 # and no per-row Python anywhere.
 # --------------------------------------------------------------------------
 KF_WIDE_OUTPUT = (
@@ -770,23 +730,21 @@ def to_wide(long: DataFrame) -> DataFrame:
     (doc_id, steps array<int>, vals array<double>), sorted by step; NULL
     values are gaps. The adapter densifies it with an O(n) numpy scatter —
     a JVM-side dense build via per-position lookups is O(n²) per series
-    (measured as the gap-fill stage's entire cost on a 4.5k-step grid)."""
+    (measured as the gap-fill stage's entire cost on a 4.5k-step grid).
+
+    An optional ``lag`` column adds ``lags array<int>`` (sorted by step,
+    then lag): the row at ``step`` observes phase(step) − phase(step − lag);
+    a NULL lag is a direct observation."""
+    cols = {"step": ("int", "steps"), "value": ("double", "vals")}
+    if "lag" in long.columns:
+        cols = {"step": cols["step"], "lag": ("int", "lags"), "value": cols["value"]}
     ent = F.array_sort(
         F.collect_list(
-            F.struct(
-                F.col("step").cast("int").alias("step"),
-                F.col("value").cast("double").alias("value"),
-            )
+            F.struct(*(F.col(c).cast(t).alias(c) for c, (t, _) in cols.items()))
         )
     )
-    return (
-        long.groupBy("doc_id")
-        .agg(ent.alias("_e"))
-        .select(
-            "doc_id",
-            F.transform(F.col("_e"), lambda s: s["step"]).alias("steps"),
-            F.transform(F.col("_e"), lambda s: s["value"]).alias("vals"),
-        )
+    return long.groupBy("doc_id").agg(ent.alias("_e")).select(
+        "doc_id", *(F.col(f"_e.{c}").alias(name) for c, (_, name) in cols.items())
     )
 
 
@@ -802,8 +760,9 @@ def kalman_gapfill_wide(
 
     Input: ``doc_id`` plus either dense ``values array<double>`` (one
     element per grid step) or sparse ``steps array<int>, vals
-    array<double>`` (see :func:`to_wide`); NULL elements and NULL arrays
-    are gaps. Optional ``k_done, idx0, m, P`` resume a doc from a committed
+    array<double>`` and optional ``lags array<int>`` (see :func:`to_wide`);
+    NULL elements and NULL arrays are gaps, a NULL lag is a direct
+    observation. Optional ``k_done, idx0, m, P`` resume a doc from a committed
     state snapshot (reference update mode, ``restart_from_file``
     kf/KF_class.py:70-116); rows whose state is NULL cold-start from the
     grid origin. Resumed rows run one kernel batch per (k_done, idx0, state
@@ -815,8 +774,12 @@ def kalman_gapfill_wide(
     only [idx0_prev, M) (earlier steps were published by earlier runs), a
     cold doc the full grid; innov is NaN at steps without an observation.
     ``with_state`` appends the resumable ``k_done, idx0, m, P`` from the
-    same kernel run. A step outside [0, M) or a dense row whose length is
-    not M raises ``ValueError`` naming the doc.
+    same kernel run. A step outside [0, M), a lag outside [0, min(t_sep,
+    step)], a repeated step in a frame without lags, a dense row whose
+    length is not M, or ``check_eps`` on a doc with a lagged or repeated
+    step raises ``ValueError`` naming the doc. Only batches where a row
+    carries a lag or two observations share a step build the (B, M, J)
+    block, over fewer docs per kernel batch.
 
     The Arrow exchange moves one row per doc, not one per (doc, step):
     measured ~10× cheaper than the long layout, whose per-row JVM
@@ -829,6 +792,7 @@ def kalman_gapfill_wide(
     t_grid = np.asarray(t_grid, dtype=np.float64)
     M = len(t_grid)
     sparse = "steps" in series_wide.columns
+    lagged = sparse and "lags" in series_wide.columns
     has_state = "k_done" in series_wide.columns
 
     def flat(col) -> np.ndarray:
@@ -840,37 +804,88 @@ def kalman_gapfill_wide(
         offs = pa.array(np.arange(0, (B + 1) * W, W, dtype=np.int32))
         return pa.ListArray.from_arrays(offs, pa.array(mat.ravel()))
 
-    def densify(rb: "pa.RecordBatch") -> np.ndarray:
+    def densify(rb: "pa.RecordBatch"):
+        """Yields (rows, values, lags): the batch's (B, M) values with lags
+        None; or, when a row carries a lag or two observations share a
+        step, (B', M, J) blocks and their lags over slices of B' ≈
+        min_batch_docs / J rows, so a block holds about as many cells as
+        a direct batch."""
         B = rb.num_rows
-        values = np.full((B, M), np.nan)
-        if sparse:
-            steps = rb.column("steps")
-            lens = pc.list_value_length(steps).fill_null(0).to_numpy()
-            row = np.repeat(np.arange(B), lens)
-            k = flat(steps).astype(np.int64)
-            bad = np.flatnonzero((k < 0) | (k >= M))
-            if len(bad):
-                i = bad[0]
-                doc = rb.column("doc_id")[int(row[i])].as_py()
-                raise ValueError(
-                    f"doc {doc!r}: step {k[i]} lies outside the grid [0, {M})"
-                )
-            values[row, k] = flat(rb.column("vals"))
-        else:
+
+        def fail(r, msg):
+            raise ValueError(f"doc {rb.column('doc_id')[int(r)].as_py()!r}: {msg}")
+
+        if not sparse:
             col = rb.column("values")
             lens = pc.list_value_length(col).fill_null(M).to_numpy()
             bad = np.flatnonzero(lens != M)
             if len(bad):
-                doc = rb.column("doc_id")[int(bad[0])].as_py()
-                raise ValueError(
-                    f"doc {doc!r}: {lens[bad[0]]} values for a {M}-step grid"
-                )
+                fail(bad[0], f"{lens[bad[0]]} values for a {M}-step grid")
+            values = np.full((B, M), np.nan)
             valid = col.is_valid().to_numpy(zero_copy_only=False)
             values[valid] = flat(col).reshape(-1, M)
-        return values
+            yield rb, values, None
+            return
+        steps = rb.column("steps")
+        lens = pc.list_value_length(steps).fill_null(0).to_numpy()
+        row = np.repeat(np.arange(B), lens)  # ascending: entries are row-major
+        k = flat(steps).astype(np.int64)
+        bad = np.flatnonzero((k < 0) | (k >= M))
+        if len(bad):
+            fail(row[bad[0]], f"step {k[bad[0]]} lies outside the grid [0, {M})")
+        vals = flat(rb.column("vals"))
+        key = row * M + k
+        J, lag = 1, None
+        if not lagged:
+            if not (np.diff(key) > 0).all():  # unsorted or repeated steps
+                srt = np.sort(key)
+                rep = np.flatnonzero(np.diff(srt) == 0)
+                if len(rep):
+                    r, st = divmod(int(srt[rep[0]]), M)
+                    fail(r, f"step {st} repeats; several observations of "
+                         "one step need a lags column")
+        else:
+            lc = rb.column("lags")
+            given = lc.is_valid().to_numpy(zero_copy_only=False)
+            bad = np.flatnonzero(
+                given & (pc.list_value_length(lc).fill_null(0).to_numpy() != lens)
+            )
+            if len(bad):
+                fail(bad[0], "lags and steps differ in length")
+            lag = np.zeros(len(k), dtype=np.int64)  # NULL lag: direct
+            lag[np.repeat(given, lens)] = np.nan_to_num(flat(lc).astype(np.float64))
+            bad = np.flatnonzero((lag < 0) | (lag > cfg.t_sep) | (lag > k))
+            if len(bad):
+                i = bad[0]
+                fail(row[i], f"lag {lag[i]} at step {k[i]} lies outside "
+                     f"[0, min(t_sep={cfg.t_sep}, step)]")
+            # slot = rank of the observation among its (doc, step)'s
+            order = np.argsort(key, kind="stable")
+            slot = np.empty_like(order)
+            slot[order] = np.arange(len(k)) - np.searchsorted(key[order], key[order])
+            J = int(slot.max()) + 1 if len(k) else 1
+        if J == 1 and (lag is None or not lag.any()):
+            values = np.full((B, M), np.nan)
+            values[row, k] = vals
+            yield rb, values, None
+            return
+        if cfg.check_eps is not None:
+            i = np.flatnonzero((lag > 0) | (slot > 0))[0]
+            fail(row[i], f"check_eps applies to direct observations only; "
+                 f"step {k[i]} is lagged or repeated")
+        cap = max(1, min_batch_docs // J)
+        ldt = np.min_scalar_type(-cfg.t_sep)  # smallest int holding [0, t_sep]
+        for s in range(0, B, cap):
+            b = min(cap, B - s)
+            e = slice(*np.searchsorted(row, [s, s + b]))
+            block = np.full((b, M, J), np.nan)
+            lags = np.zeros((b, M, J), dtype=ldt)
+            block[row[e] - s, k[e], slot[e]] = vals[e]
+            lags[row[e] - s, k[e], slot[e]] = lag[e]
+            yield rb.slice(s, b), block, lags
 
-    def emit(docs, values: np.ndarray, init: dict | None) -> "pa.RecordBatch":
-        res = kalman_direct_batch(values, t_grid, cfg, init=init)
+    def emit(docs, values, lags, init: dict | None) -> "pa.RecordBatch":
+        res = kalman_direct_batch(values, t_grid, cfg, init=init, lags=lags)
         B = len(values)
         e0 = int(init["idx0"]) if init is not None else 0
         cols = {
@@ -890,8 +905,9 @@ def kalman_gapfill_wide(
             cols["P"] = lists(res["P"].reshape(B, -1))
         return pa.RecordBatch.from_pydict(cols)
 
-    def kernel(rb: "pa.RecordBatch"):
-        values = densify(rb)
+    def kernel(rb: "pa.RecordBatch", values, lags):
+        def part(sel):
+            return values[sel], None if lags is None else lags[sel]
         docs = rb.column("doc_id")
         resumed = (
             rb.column("k_done").is_valid().to_numpy(zero_copy_only=False)
@@ -900,7 +916,7 @@ def kalman_gapfill_wide(
         )
         cold = np.flatnonzero(~resumed)
         if len(cold):
-            yield emit(docs.take(cold), values[cold], None)
+            yield emit(docs.take(cold), *part(cold), None)
         if not resumed.any():
             return
         rows = np.flatnonzero(resumed)
@@ -920,7 +936,7 @@ def kalman_gapfill_wide(
                 "idx0": int(idx0),
                 "k_done": int(k_done),
             }
-            yield emit(docs.take(sel), values[sel], init)
+            yield emit(docs.take(sel), *part(sel), init)
 
     def run(batches):
         buf: list = []
@@ -936,7 +952,8 @@ def kalman_gapfill_wide(
             # axis, so the split is value-exact.
             rb = pa.Table.from_batches(buf).combine_chunks().to_batches()[0]
             for s in range(0, rb.num_rows, min_batch_docs):
-                yield from kernel(rb.slice(s, min_batch_docs))
+                for sub, values, lags in densify(rb.slice(s, min_batch_docs)):
+                    yield from kernel(sub, values, lags)
 
         for rb in batches:
             if rb.num_rows == 0:
@@ -958,55 +975,31 @@ def kalman_pairs(
     pairs: DataFrame,
     t_grid: np.ndarray,
     cfg: KFConfig | None = None,
-    num_buckets: int = 64,
 ) -> DataFrame:
-    """Spark execution of the pairs (interferogram) mode: the edge-list
-    observations of the reference (J1 measurement selection,
-    kf/KF_class.py:182-248), grouped per doc-hash bucket, exact per-doc
-    recursion via :func:`kalman_pairs_doc`.
-
-    pairs(doc_id, obs_id, t_minus, t_plus, obs_value) → KF_OUTPUT rows.
-    """
-    cfg = cfg or KFConfig()
-    t_grid = np.asarray(t_grid, dtype=np.float64)
-    M = len(t_grid)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        frames = []
-        for doc, g in pdf.groupby("doc_id", sort=False):
-            arr = g[["t_minus", "t_plus", "obs_value"]].to_numpy(np.float64)
-            res = kalman_pairs_doc(arr, t_grid, cfg)
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "doc_id": doc,
-                        "step": np.arange(M, dtype=np.int32),
-                        "t": t_grid,
-                        "phase": res["phase"],
-                        "std": res["std"],
-                        "innov": res["innov"],
-                        "gap_filled": ~np.isfinite(res["innov"]),
-                    }
-                )
-            )
-        return (
-            pd.concat(frames, ignore_index=True)
-            if frames
-            else pd.DataFrame(columns=[f.name for f in KF_OUTPUT.fields])
-        )
-
-    bucketed = pairs.withColumn(
-        "_b", F.pmod(F.xxhash64("doc_id"), F.lit(num_buckets))
+    """The pairs (interferogram) mode: pairs(doc_id, t_minus, t_plus,
+    obs_value) → long KF rows. Each observation is a phase difference over
+    an incidence edge (J1 measurement selection, kf/KF_class.py:182-248),
+    run through :func:`to_wide` → :func:`kalman_gapfill_wide` →
+    :func:`explode_kf_output` with lag = t_plus − t_minus. The check_fit
+    gate scores direct observations only, so ``cfg.check_eps`` must be
+    None: a pair under it raises ``ValueError`` naming the doc."""
+    long = pairs.select(
+        "doc_id",
+        F.col("t_plus").alias("step"),
+        (F.col("t_plus") - F.col("t_minus")).alias("lag"),
+        F.col("obs_value").alias("value"),
     )
-    return bucketed.groupBy("_b").applyInPandas(run, schema=KF_OUTPUT)
+    return explode_kf_output(kalman_gapfill_wide(to_wide(long), t_grid, cfg), t_grid)
 
 
 def explode_kf_output(
     wide: DataFrame, t_grid: np.ndarray, with_t: bool = True
 ) -> DataFrame:
     """Adapter output (doc_id, emit0, phase[], std[], innov[], gap[]) → long
-    KF_OUTPUT rows, entirely JVM-side; emit0 is the absolute step of each
-    row's first array element. The epoch axis joins in from a broadcast
+    rows (doc_id, step, t, phase, std, innov, gap_filled), one per (doc,
+    step) — the relational Phases.h5/Updates.h5 (kf/readinput.py:560-612) —
+    entirely JVM-side; emit0 is the absolute step of each row's first
+    array element. The epoch axis joins in from a broadcast
     (step, t) grid table — an inline array literal here costs a full array
     construction per OUTPUT row (measured: it WAS the explode stage's
     entire cost on long grids).
@@ -1027,7 +1020,7 @@ def explode_kf_output(
         (F.col("pos") + F.col("emit0")).cast("int").alias("step"),
         F.col("z.phase").alias("phase"),
         F.col("z.std").alias("std"),
-        # KF_OUTPUT carries NULL where a step had no innovation
+        # NULL where a step had no innovation
         F.nanvl(F.col("z.innov"), F.lit(None).cast("double")).alias("innov"),
         F.col("z.gap").alias("gap_filled"),
     )

@@ -5,7 +5,7 @@ training-sequence table::
 
     (doc_id: string, tokens: array<int32>, n_tok: int32, source: string)
 
-plus an ingest-time axis for the rollup tiers. The per-doc series / pairs /
+plus an ingest-time axis for the rollup tiers. The per-doc series and
 state shapes re-express the reference's dense HDF5 cube relationally
 (SURVEY.md §1.4; reference cube: /root/reference/kf/readinput.py:77-106).
 """
@@ -36,35 +36,6 @@ SERIES = T.StructType(
         T.StructField("step", T.IntegerType(), False),
         T.StructField("t", T.DoubleType(), False),  # decimal time (years)
         T.StructField("value", T.DoubleType(), True),  # NULL = gap
-    ]
-)
-
-# ------------------------------------------------------------ incidence pairs
-# Edge list of the measurement graph — the reference's Jmat/links ±1 matrix
-# reduced to (t_minus, t_plus) index pairs (kf/readinput.py:455-472).
-PAIRS = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("obs_id", T.IntegerType(), False),
-        T.StructField("t_minus", T.IntegerType(), False),
-        T.StructField("t_plus", T.IntegerType(), False),
-        T.StructField("obs_value", T.DoubleType(), True),
-    ]
-)
-
-# ----------------------------------------------------------------- KF output
-# One row per (doc, step): smoothed phase + std + innovation — the relational
-# recast of Phases.h5 rawts/rawts_std and Updates.h5 mean_innov
-# (kf/readinput.py:560-612).
-KF_OUTPUT = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("step", T.IntegerType(), False),
-        T.StructField("t", T.DoubleType(), False),
-        T.StructField("phase", T.DoubleType(), True),
-        T.StructField("std", T.DoubleType(), True),
-        T.StructField("innov", T.DoubleType(), True),
-        T.StructField("gap_filled", T.BooleanType(), False),
     ]
 )
 

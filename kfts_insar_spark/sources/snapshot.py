@@ -557,8 +557,8 @@ class SnapshotTable:
         This is the maintenance half of streaming/incremental ingest at
         scale: each micro-batch append leaves per-partition small files,
         and scan cost grows with file count (footer reads + task setup),
-        not bytes. One job rewrites all affected partitions (partition
-        values recovered from the file path, same trick as :meth:`read`).
+        not bytes. One job rewrites all affected partitions through the scan
+        :meth:`read` uses, and the new files keep the victims' column stats.
         """
         m = self.manifest()
         if m is None:
@@ -577,20 +577,15 @@ class SnapshotTable:
             return {"partitions": 0, "files_before": 0, "files_after": 0}
         n_parts = sum(1 for g in by_part.values() if len(g) >= min_files)
 
-        from pyspark.sql import functions as F
-
         keys = sorted({k for e in victims for k in e["partition"]})
-        df = spark.read.parquet(*[e["path"] for e in victims])
-        for k in keys:
-            df = df.withColumn(
-                k, F.regexp_extract(F.input_file_name(), f"{k}=([^/]+)", 1)
-            )
+        df = self._scan(spark, m, victims)
         # hash-cluster on the partition keys: each partition's rows land in
         # one task → one output file per partition dir (the bin-pack)
         if keys:
             df = df.repartition(max(1, min(n_parts, 64)), *keys)
         sid, parent = self._next_sid()
-        new, schema = self._write_files(df, sid, keys or None)
+        stats = sorted({c for e in victims for c in e.get("stats", {})})
+        new, schema = self._write_files(df, sid, keys or None, stats_cols=stats)
         self.last_commit_files = new
         dead = {e["path"] for e in victims}
         kept = [e for e in m["files"] if e["path"] not in dead]
@@ -625,21 +620,12 @@ class SnapshotTable:
         )
         if until is None:
             return None
-        new = self.manifest(until)["files"]
+        m = self.manifest(until)
+        new = m["files"]
         if after_snapshot_id is not None:
             old = {e["path"] for e in self.manifest(after_snapshot_id)["files"]}
             new = [e for e in new if e["path"] not in old]
-        if not new:
-            return None
-        from pyspark.sql import functions as F
-
-        keys = sorted({k for e in new for k in e["partition"]})
-        df = spark.read.parquet(*[e["path"] for e in new])
-        for k in keys:
-            df = df.withColumn(
-                k, F.regexp_extract(F.input_file_name(), f"{k}=([^/]+)", 1)
-            )
-        return df
+        return self._scan(spark, m, new) if new else None
 
     def read(
         self,
@@ -680,8 +666,17 @@ class SnapshotTable:
                 for e in entries
                 if "stats" not in e or stats_where(e["stats"])
             ]
-        if not entries:
-            return None
+        return self._scan(spark, m, entries, merge_schema) if entries else None
+
+    def _scan(
+        self,
+        spark: SparkSession,
+        m: dict,
+        entries: list[dict],
+        merge_schema: bool = False,
+    ) -> DataFrame:
+        """One parquet scan over ``entries`` of manifest ``m``, with the
+        partition columns recovered from each file's path."""
         from pyspark.sql import functions as F
 
         keys = sorted({k for e in entries for k in e["partition"]})
@@ -690,10 +685,10 @@ class SnapshotTable:
             reader = reader.option("mergeSchema", "true")
         elif m.get("schema"):
             # write-time schema from the manifest: the scan skips driver-side
-            # footer schema inference. Files from pre-widening commits (if
-            # any) read exactly as they would under mergeSchema: absent
-            # columns backfill NULL. A commit that would drop or retype a
-            # column older files carry is refused (_check_inherited_schema).
+            # footer schema inference, and every file reads with the
+            # manifest's columns: files from pre-widening commits backfill
+            # NULL, as under mergeSchema. A commit that would drop or retype
+            # a column older files carry is refused (_check_inherited_schema).
             from pyspark.sql.types import StructType
 
             reader = reader.schema(StructType.fromJson(json.loads(m["schema"])))

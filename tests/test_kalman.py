@@ -14,9 +14,9 @@ from kfts_insar_spark.operators.kalman import (
     kalman_direct_batch,
     kalman_direct_oracle,
     kalman_gapfill_wide,
-    kalman_pairs_doc,
     to_wide,
 )
+from tests.kalman_oracle import kalman_pairs_doc
 
 MODEL = [("POLY", 1), ("SIN", 2 * np.pi), ("COS", 2 * np.pi), ("STEP", 1.5)]
 M = 92
@@ -53,7 +53,7 @@ STATE_COLS = ["doc_id", "k_done", "idx0", "m", "P"]
 
 
 def gapfill_long(series, t, cfg=CFG):
-    """Long (doc_id, step, value) rows → long KF_OUTPUT rows, the way every
+    """Long (doc_id, step, value) rows → long KF rows, the way every
     long-form caller runs the kernel: to_wide → adapter → explode."""
     return explode_kf_output(kalman_gapfill_wide(to_wide(series), t, cfg), t)
 
@@ -381,11 +381,166 @@ def test_spark_pairs_mode_matches_local(spark):
     sdf = spark.createDataFrame(
         pd.DataFrame(rows, columns=["doc_id", "obs_id", "t_minus", "t_plus", "obs_value"])
     )
-    out = kalman_pairs(sdf, T, CFG, num_buckets=2).toPandas()
+    out = kalman_pairs(sdf, T, CFG).toPandas()
     for doc, res in locals_.items():
         got = out[out.doc_id == doc].sort_values("step")
         np.testing.assert_allclose(got.phase.to_numpy(), res["phase"], rtol=1e-9)
         np.testing.assert_allclose(got["std"].to_numpy(), res["std"], rtol=1e-9)
+
+
+def edge_list(truth_row, rng):
+    """Every pair (k − d, k) with 1 ≤ d ≤ t_sep, observed with noise."""
+    return [
+        (k - d, k, truth_row[k] - truth_row[k - d] + rng.normal(0, 0.1))
+        for k in range(1, len(truth_row))
+        for d in range(1, min(CFG.t_sep, k) + 1)
+    ]
+
+
+def pair_long(spark, edges, steps=range(M)):
+    """{doc: edge list} → long (doc_id, step, lag, value) rows at ``steps``."""
+    rows = [
+        (doc, int(tp), int(tp - tm), float(v))
+        for doc, es in edges.items()
+        for tm, tp, v in es
+        if tp in steps
+    ]
+    return spark.createDataFrame(rows, "doc_id string, step int, lag int, value double")
+
+
+def test_spark_pairs_resume_equals_oneshot(spark):
+    """Pairs mode resumed from a state snapshot == the one-shot run, bit for
+    bit: the resumed run's first pairs reach back into the phases the
+    snapshot still holds."""
+    truth, _, _, _ = make_series(4, gap_frac=0.0)
+    rng = np.random.default_rng(5)
+    edges = {f"d{b:03d}": edge_list(truth[b], rng) for b in range(4)}
+    k_split = 55
+    one = (
+        gapfill_long(pair_long(spark, edges), T)
+        .toPandas().sort_values(["doc_id", "step"]).reset_index(drop=True)
+    )
+    first = pair_long(spark, edges, range(k_split))
+    upd = resume_long(
+        pair_long(spark, edges, range(k_split, M)), state_of(first, T[:k_split]), T
+    ).toPandas()
+    r1 = gapfill_long(first, T[:k_split]).toPandas()
+    upd_keys = set(zip(upd.doc_id, upd.step))
+    stitched = pd.concat(
+        [upd, r1[~r1.apply(lambda r: (r.doc_id, r.step) in upd_keys, axis=1)]]
+    ).sort_values(["doc_id", "step"]).reset_index(drop=True)
+    assert len(stitched) == 4 * M
+    for key in ("phase", "std"):
+        np.testing.assert_allclose(
+            stitched[key].to_numpy(), one[key].to_numpy(), rtol=0, atol=0
+        )
+
+
+def test_spark_mixed_direct_and_pair_rows(spark):
+    """One frame, one kernel batch: direct rows (NULL lags) and pair rows.
+    Each doc gets its own oracle's answer."""
+    _, y, _, _ = make_series(3)
+    truth, _, _, _ = make_series(2, seed=8, gap_frac=0.0)
+    rng = np.random.default_rng(9)
+    edges = {f"p{b}": edge_list(truth[b], rng) for b in range(2)}
+    direct = spark.createDataFrame(
+        [
+            (f"d{b}", k, None, float(y[b, k]))
+            for b in range(3)
+            for k in range(M)
+            if np.isfinite(y[b, k])
+        ],
+        "doc_id string, step int, lag int, value double",
+    )
+    wide = to_wide(direct.unionByName(pair_long(spark, edges))).coalesce(1)
+    out = explode_kf_output(kalman_gapfill_wide(wide, T, CFG), T).toPandas()
+    want = {f"d{b}": kalman_direct_oracle(y[b], T, CFG) for b in range(3)}
+    want.update(
+        {d: kalman_pairs_doc(np.array(es), T, CFG) for d, es in edges.items()}
+    )
+    for doc, res in want.items():
+        got = out[out.doc_id == doc].sort_values("step")
+        for key in ("phase", "std"):
+            np.testing.assert_allclose(got[key].to_numpy(), res[key], rtol=1e-9, atol=1e-9)
+
+
+@pytest.mark.parametrize(
+    "t_minus, t_plus, lag",
+    [(6, 4, -2), (10, 10 + CFG.t_sep + 1, CFG.t_sep + 1), (-1, 2, 3)],
+    ids=["negative_lag", "lag_over_t_sep", "t_minus_before_grid"],
+)
+def test_pairs_reject_lag_outside_state(spark, t_minus, t_plus, lag):
+    """A pair the state cannot hold fails loudly, naming the doc."""
+    from pyspark.errors import PythonException
+
+    from kfts_insar_spark.operators.kalman import kalman_pairs
+
+    pairs = spark.createDataFrame(
+        [("d0", 3, 5, 1.0), ("d1", t_minus, t_plus, 1.0)],
+        "doc_id string, t_minus int, t_plus int, obs_value double",
+    )
+    with pytest.raises(
+        PythonException, match=rf"doc 'd1': lag {lag} at step {t_plus} lies outside"
+    ):
+        kalman_pairs(pairs, T, CFG).collect()
+
+
+def test_adapter_rejects_repeated_step_without_lags(spark):
+    """Without a lags column a step takes one observation: a repeat fails
+    loudly, naming the doc, instead of the scatter keeping the last value
+    (with a lags column both observations update the step)."""
+    from pyspark.errors import PythonException
+
+    wide = spark.createDataFrame(
+        [("d0", [0, 1, 2], [0.0, 1.0, 2.0]), ("d1", [0, 3, 1, 3], [0.0, 1.0, 2.0, 3.0])],
+        "doc_id string, steps array<int>, vals array<double>",
+    )
+    with pytest.raises(PythonException, match=r"doc 'd1': step 3 repeats"):
+        kalman_gapfill_wide(wide, T, CFG).collect()
+
+
+def test_check_fit_rejects_lagged_docs(spark):
+    """The check_fit gate scores direct observations only: a lagged doc
+    under check_eps fails naming the doc, in a long frame with a lag
+    column and in pairs mode."""
+    from dataclasses import replace
+
+    from pyspark.errors import PythonException
+
+    from kfts_insar_spark.operators.kalman import kalman_pairs
+
+    cfg = replace(CFG, check_eps=1.0)
+    long = spark.createDataFrame(
+        [("d0", 1, None, 1.0), ("d1", 2, None, 1.0), ("d1", 3, 2, 1.0)],
+        "doc_id string, step int, lag int, value double",
+    )
+    with pytest.raises(PythonException, match=r"doc 'd1': check_eps .* step 3"):
+        kalman_gapfill_wide(to_wide(long), T, cfg).collect()
+    pairs = spark.createDataFrame(
+        [("d0", 3, 5, 1.0)], "doc_id string, t_minus int, t_plus int, obs_value double"
+    )
+    with pytest.raises(PythonException, match=r"doc 'd0': check_eps .* step 5"):
+        kalman_pairs(pairs, T, cfg).collect()
+
+
+def test_lagged_batch_slicing_is_value_invariant(spark):
+    """Lagged batches run over min_batch_docs / J docs at a time, so the
+    (B, M, J) block stays near a direct batch's size; docs are independent
+    along the batch axis, so the slicing leaves every value unchanged."""
+    truth, _, _, _ = make_series(5, gap_frac=0.0)
+    rng = np.random.default_rng(7)
+    edges = {f"d{b}": edge_list(truth[b], rng) for b in range(5)}
+    wide = to_wide(pair_long(spark, edges)).coalesce(1)
+
+    def rows(mbd):
+        out = kalman_gapfill_wide(wide, T, CFG, min_batch_docs=mbd).toPandas()
+        out = out.sort_values("doc_id")
+        return {c: np.stack(out[c].to_numpy()) for c in ("phase", "std", "innov")}
+
+    # J = t_sep pairs per step: 5 docs per batch vs one doc per block
+    got, want = rows(CFG.t_sep), rows(1000)
+    for c in want:
+        np.testing.assert_array_equal(got[c], want[c])  # NaN == NaN here
 
 
 def test_resume_mixed_strata_and_cold_start(spark):

@@ -992,3 +992,31 @@ def test_skipped_append_leaves_schema_to_next_commit(spark, tmp_path):
     assert sorted(tuple(r) for r in t.read(spark).collect()) == [
         (0, 0, "0"), (2, 20, "0")
     ]
+
+
+def test_compact_keeps_added_column_and_stats(spark, tmp_path):
+    """compact() scans its victims with the manifest schema: a column added
+    by a later append to the same partition survives the rewrite with its
+    values, the manifest keeps it, and the rewritten file keeps the column
+    stats its victims carried. read_incremental uses the same scan."""
+    from kfts_insar_spark.sources.snapshot import SnapshotTable
+
+    t = SnapshotTable(str(tmp_path / "t"))
+    base = spark.range(3).selectExpr("id AS k", "id * 10 AS v", "'d0' AS pday")
+    s0 = t.append(base, partition_by=["pday"], coalesce=1, stats_cols=["k"])
+    wider = spark.range(3, 5).selectExpr(
+        "id AS k", "id * 10 AS v", "7 AS extra", "'d0' AS pday"
+    )
+    t.append(wider, partition_by=["pday"], coalesce=1, stats_cols=["k"])
+    want = sorted(tuple(r) for r in t.read(spark).select("k", "v", "extra").collect())
+    assert want == [(0, 0, None), (1, 10, None), (2, 20, None), (3, 30, 7), (4, 40, 7)]
+
+    res = t.compact(spark, min_files=2)
+    assert (res["files_before"], res["files_after"]) == (2, 1)
+    assert "extra" in t.manifest()["schema"]
+    got = t.read(spark).select("k", "v", "extra").collect()
+    assert sorted(tuple(r) for r in got) == want
+    [entry] = t.manifest()["files"]
+    assert entry["stats"] == {"k": [0, 4]}
+    inc = t.read_incremental(spark, after_snapshot_id=s0)
+    assert sorted(tuple(r) for r in inc.select("k", "v", "extra").collect()) == want
