@@ -17,7 +17,7 @@ Layout
 - functions/     gorilla/delta-of-delta codec, basis-function DSL, hashes
 - sources/       snapshot table (Iceberg-semantics over Parquet), readers
 - plans/         relational query builders mirroring SURVEY.md §2 operators
-- streaming/     structured-streaming ingest + stateful gap-fill
+- streaming/     exactly-once micro-batch landing for TierPipeline.run
 - zipcache.py    cheap per-task import-cache invalidation in Python workers
 """
 

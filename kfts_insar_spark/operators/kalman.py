@@ -765,9 +765,9 @@ def kalman_gapfill_wide(
     observation. Optional ``k_done, idx0, m, P`` resume a doc from a committed
     state snapshot (reference update mode, ``restart_from_file``
     kf/KF_class.py:70-116); rows whose state is NULL cold-start from the
-    grid origin. Resumed rows run one kernel batch per (k_done, idx0, state
-    width) stratum: streaming micro-batches leave per-doc progress, and the
-    batch kernel needs uniform shapes.
+    grid origin. A resumed doc's idx0 and state width follow from the grid
+    alone, so all resumed rows share one (k_done, idx0, width); resumed
+    rows that disagree on it raise ``ValueError`` naming a doc.
 
     Output: ``doc_id, emit0, phase[], std[], innov[], gap[], fit_flag,
     fit_max`` — the arrays cover steps [emit0, M): a resumed doc re-emits
@@ -799,6 +799,9 @@ def kalman_gapfill_wide(
         # list elements → one numpy buffer (NULL → NaN); NULL lists skipped
         return col.flatten().to_numpy(zero_copy_only=False)
 
+    def fail(rb: "pa.RecordBatch", r, msg):
+        raise ValueError(f"doc {rb.column('doc_id')[int(r)].as_py()!r}: {msg}")
+
     def lists(mat: np.ndarray) -> "pa.ListArray":
         B, W = mat.shape
         offs = pa.array(np.arange(0, (B + 1) * W, W, dtype=np.int32))
@@ -811,16 +814,12 @@ def kalman_gapfill_wide(
         min_batch_docs / J rows, so a block holds about as many cells as
         a direct batch."""
         B = rb.num_rows
-
-        def fail(r, msg):
-            raise ValueError(f"doc {rb.column('doc_id')[int(r)].as_py()!r}: {msg}")
-
         if not sparse:
             col = rb.column("values")
             lens = pc.list_value_length(col).fill_null(M).to_numpy()
             bad = np.flatnonzero(lens != M)
             if len(bad):
-                fail(bad[0], f"{lens[bad[0]]} values for a {M}-step grid")
+                fail(rb, bad[0], f"{lens[bad[0]]} values for a {M}-step grid")
             values = np.full((B, M), np.nan)
             valid = col.is_valid().to_numpy(zero_copy_only=False)
             values[valid] = flat(col).reshape(-1, M)
@@ -832,7 +831,7 @@ def kalman_gapfill_wide(
         k = flat(steps).astype(np.int64)
         bad = np.flatnonzero((k < 0) | (k >= M))
         if len(bad):
-            fail(row[bad[0]], f"step {k[bad[0]]} lies outside the grid [0, {M})")
+            fail(rb, row[bad[0]], f"step {k[bad[0]]} lies outside the grid [0, {M})")
         vals = flat(rb.column("vals"))
         key = row * M + k
         J, lag = 1, None
@@ -842,7 +841,7 @@ def kalman_gapfill_wide(
                 rep = np.flatnonzero(np.diff(srt) == 0)
                 if len(rep):
                     r, st = divmod(int(srt[rep[0]]), M)
-                    fail(r, f"step {st} repeats; several observations of "
+                    fail(rb, r, f"step {st} repeats; several observations of "
                          "one step need a lags column")
         else:
             lc = rb.column("lags")
@@ -851,13 +850,13 @@ def kalman_gapfill_wide(
                 given & (pc.list_value_length(lc).fill_null(0).to_numpy() != lens)
             )
             if len(bad):
-                fail(bad[0], "lags and steps differ in length")
+                fail(rb, bad[0], "lags and steps differ in length")
             lag = np.zeros(len(k), dtype=np.int64)  # NULL lag: direct
             lag[np.repeat(given, lens)] = np.nan_to_num(flat(lc).astype(np.float64))
             bad = np.flatnonzero((lag < 0) | (lag > cfg.t_sep) | (lag > k))
             if len(bad):
                 i = bad[0]
-                fail(row[i], f"lag {lag[i]} at step {k[i]} lies outside "
+                fail(rb, row[i], f"lag {lag[i]} at step {k[i]} lies outside "
                      f"[0, min(t_sep={cfg.t_sep}, step)]")
             # slot = rank of the observation among its (doc, step)'s
             order = np.argsort(key, kind="stable")
@@ -871,7 +870,7 @@ def kalman_gapfill_wide(
             return
         if cfg.check_eps is not None:
             i = np.flatnonzero((lag > 0) | (slot > 0))[0]
-            fail(row[i], f"check_eps applies to direct observations only; "
+            fail(rb, row[i], f"check_eps applies to direct observations only; "
                  f"step {k[i]} is lagged or repeated")
         cap = max(1, min_batch_docs // J)
         ldt = np.min_scalar_type(-cfg.t_sep)  # smallest int holding [0, t_sep]
@@ -919,24 +918,21 @@ def kalman_gapfill_wide(
             yield emit(docs.take(cold), *part(cold), None)
         if not resumed.any():
             return
-        rows = np.flatnonzero(resumed)
+        sel = np.flatnonzero(resumed)
+        m = rb.column("m").take(sel)
         keys = np.column_stack(
-            [
-                rb.column("k_done").to_numpy(zero_copy_only=False)[rows],
-                rb.column("idx0").to_numpy(zero_copy_only=False)[rows],
-                pc.list_value_length(rb.column("m")).to_numpy(zero_copy_only=False)[rows],
-            ]
+            [rb.column(c).take(sel).to_numpy(zero_copy_only=False) for c in ("k_done", "idx0")]
+            + [pc.list_value_length(m).to_numpy(zero_copy_only=False)]
         ).astype(np.int64)
-        strata, inv = np.unique(keys, axis=0, return_inverse=True)
-        for j, (k_done, idx0, n) in enumerate(strata):
-            sel = rows[inv.ravel() == j]
-            init = {
-                "X": flat(rb.column("m").take(sel)).reshape(len(sel), n),
-                "P": flat(rb.column("P").take(sel)).reshape(len(sel), n, n),
-                "idx0": int(idx0),
-                "k_done": int(k_done),
-            }
-            yield emit(docs.take(sel), *part(sel), init)
+        bad = np.flatnonzero((keys != keys[0]).any(axis=1))
+        if len(bad):
+            fail(rb, sel[bad[0]], f"resumes from (k_done, idx0, width) = "
+                 f"{tuple(keys[bad[0]].tolist())}, another doc of its batch "
+                 f"from {tuple(keys[0].tolist())}")
+        k_done, idx0, n = keys[0].tolist()
+        P = flat(rb.column("P").take(sel)).reshape(-1, n, n)
+        init = {"X": flat(m).reshape(-1, n), "P": P, "idx0": idx0, "k_done": k_done}
+        yield emit(docs.take(sel), *part(sel), init)
 
     def run(batches):
         buf: list = []

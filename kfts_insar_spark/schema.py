@@ -52,20 +52,6 @@ KF_STATE = T.StructType(
 )
 
 # ------------------------------------------------------------- rollup tiers
-def tier_schema(with_doc: bool = False) -> T.StructType:
-    fields = [T.StructField("source", T.StringType(), False)]
-    if with_doc:
-        fields.insert(0, T.StructField("doc_id", T.StringType(), False))
-    fields += [
-        T.StructField("bucket_es", T.LongType(), False),
-        T.StructField("n_docs", T.LongType(), False),
-        T.StructField("sum_tok", T.LongType(), False),
-        T.StructField("min_tok", T.IntegerType(), False),
-        T.StructField("max_tok", T.IntegerType(), False),
-    ]
-    return T.StructType(fields)
-
-
 # Gorilla-compressed tier buckets: one row per (source, coarse bucket)
 COMPRESSED_TIER = T.StructType(
     [

@@ -286,8 +286,10 @@ def test_adapter_rejects_step_outside_grid(spark):
 
 
 def test_adapter_rejects_dense_row_of_wrong_length(spark):
-    """A dense values row shorter than the grid fails loudly, naming the
-    doc, instead of being padded with gaps."""
+    """A dense row that does not fit its batch fails loudly, naming the
+    doc: values shorter than the grid (instead of being padded with gaps),
+    or a state from other progress than the batch's other resumed rows
+    (one kernel batch resumes from one (k_done, idx0, width))."""
     from pyspark.errors import PythonException
 
     wide = spark.createDataFrame(
@@ -296,6 +298,15 @@ def test_adapter_rejects_dense_row_of_wrong_length(spark):
     )
     with pytest.raises(PythonException, match=rf"doc 'd1': {M - 1} values for a {M}-step grid"):
         kalman_gapfill_wide(wide, T, CFG).collect()
+    _, y, _, _ = make_series(3)
+    ra = kalman_direct_batch(y[:, :50], T[:50], CFG)
+    rb = kalman_direct_batch(y[:, :60], T[:60], CFG)
+    mixed = wide_frame(spark, y, [ra, None, rb], layout="dense").coalesce(1)
+    with pytest.raises(
+        PythonException,
+        match=r"doc 'd002': resumes from \(k_done, idx0, width\) = \(60, ",
+    ):
+        kalman_gapfill_wide(mixed, T, CFG).collect()
 
 
 def test_resume_equals_oneshot_local():
@@ -544,14 +555,13 @@ def test_lagged_batch_slicing_is_value_invariant(spark):
 
 
 def test_resume_mixed_strata_and_cold_start(spark):
-    """Regression: streaming micro-batches leave per-doc k_done/idx0 in the
-    state snapshot (heterogeneous strata), and brand-new docs have no state
-    row at all — resume must handle both, matching the one-shot run exactly
-    and cold-starting left-only docs instead of dropping them."""
+    """Regression: brand-new docs have no state row at all — a resume
+    that mixes docs resumed from one state snapshot with such docs must
+    match the one-shot run exactly and cold-start the left-only docs
+    instead of dropping them."""
     _, y, _, _ = make_series(7)
-    ka, kb = 50, 60
-    docs_a = [f"d{b:03d}" for b in range(3)]
-    docs_b = [f"d{b:03d}" for b in range(3, 6)]
+    ka = 55
+    docs_a = [f"d{b:03d}" for b in range(6)]
     cold = "d006"
 
     def to_sdf(doc_ids, steps):
@@ -574,13 +584,8 @@ def test_resume_mixed_strata_and_cold_start(spark):
         .sort_index()
     )
     st_a = state_of(to_sdf(docs_a, range(ka)), T[:ka])
-    st_b = state_of(to_sdf(docs_b, range(kb)), T[:kb])
-    new = (
-        to_sdf(docs_a, range(ka, M))
-        .unionByName(to_sdf(docs_b, range(kb, M)))
-        .unionByName(to_sdf([cold], range(M)))
-    )
-    upd = resume_long(new, st_a.unionByName(st_b), T).toPandas()
+    new = to_sdf(docs_a, range(ka, M)).unionByName(to_sdf([cold], range(M)))
+    upd = resume_long(new, st_a, T).toPandas()
 
     # the cold doc gets its FULL series (cold start), not dropped
     assert (upd.doc_id == cold).sum() == M
@@ -876,9 +881,9 @@ def test_liseg_three_segment_handoff_non_chained():
 
 def test_wide_kernel_batch_slicing_is_value_invariant(spark):
     """The adapter slices its buffered input to min_batch_docs (cache
-    sizing) and each slice into state strata; docs are independent along
-    the batch axis, so any slicing must yield identical results — for cold
-    rows and for rows resuming from mixed (k_done, idx0) strata."""
+    sizing) and each slice into cold and resumed rows; docs are independent
+    along the batch axis, so any slicing must yield identical results — for
+    cold rows and for rows resuming from a state snapshot next to them."""
     from kfts_insar_spark.synth import series_wide
 
     t = np.arange(30) * 12.0 / 365.25
@@ -900,13 +905,11 @@ def test_wide_kernel_batch_slicing_is_value_invariant(spark):
 
     assert rows(7) == rows(1000)
 
-    # resumed rows from two snapshots (k_done 50 and 60) next to cold rows
+    # resumed rows from one snapshot (k_done 50) next to cold rows
     _, y, _, _ = make_series(12)
     ra = kalman_direct_batch(y[:, :50], T[:50], CFG)
-    rb = kalman_direct_batch(y[:, :60], T[:60], CFG)
-    y[:4, :50] = np.nan
-    y[4:8, :60] = np.nan
-    resumed = wide_frame(spark, y, [ra] * 4 + [rb] * 4 + [None] * 4).coalesce(1)
+    y[:8, :50] = np.nan
+    resumed = wide_frame(spark, y, [ra] * 8 + [None] * 4).coalesce(1)
 
     def state_rows(mbd):
         out = kalman_gapfill_wide(
@@ -919,5 +922,5 @@ def test_wide_kernel_batch_slicing_is_value_invariant(spark):
         )
 
     got = state_rows(3)
-    assert {r[1] for r in got} == {0, int(ra["idx0"]), int(rb["idx0"])}
+    assert {r[1] for r in got} == {0, int(ra["idx0"])}
     assert got == state_rows(1000)

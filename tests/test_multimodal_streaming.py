@@ -1,5 +1,4 @@
-"""Multimodal binary codecs (REAL PPM/WAV, pure numpy) + structured-
-streaming rollup tests."""
+"""Multimodal binary codecs (REAL PPM/WAV, pure numpy)."""
 
 import numpy as np
 import pytest
@@ -18,8 +17,6 @@ from kfts_insar_spark.operators.multimodal import (
     synth_media,
     synth_video,
 )
-from kfts_insar_spark.operators.rollup import rollup_raw
-from kfts_insar_spark.synth import sequences
 
 DOCS = "/root/testdata/sf0.001/documents.parquet"
 
@@ -89,47 +86,6 @@ def test_resize_emits_valid_ppm(spark, media):
     for p in out["payload"]:
         small, _ = decode_ppm(bytes(p))
         assert small.shape == (8, 8, 3)
-
-
-def test_streaming_rollup_equals_batch(spark, tmp_path):
-    """Windowed streaming aggregation == batch raw rollup on the same rows
-    (the continuous-aggregate contract, SURVEY.md §2.9 T5)."""
-    from kfts_insar_spark.streaming.ingest import run_file_stream_once
-
-    seq = sequences(spark, 1500).select(
-        "doc_id", "n_tok", "source", "ingest_ts", "ingest_es"
-    )
-    inp = str(tmp_path / "in")
-    data = seq.drop("ingest_es")
-    data.coalesce(1).write.parquet(inp + "/b0")
-    import time
-
-    time.sleep(1.1)  # distinct mtimes → deterministic file order
-    # sentinel row far in the future: pushes the watermark past every real
-    # window so append mode finalizes them (standard stream-closing trick)
-    hi = seq.agg(F.max("ingest_es")).first()[0]
-    sentinel_es = (hi // 86400 + 30) * 86400
-    spark.createDataFrame(
-        [("___sentinel", 1, "___s", None)], data.schema
-    ).withColumn(
-        "ingest_ts", F.timestamp_seconds(F.lit(sentinel_es))
-    ).write.parquet(inp + "/b1")
-    streamed = run_file_stream_once(
-        spark,
-        inp + "/*",
-        str(tmp_path / "ckpt"),
-        schema=data.schema,
-    )
-    got = sorted(
-        tuple(r) for r in streamed.filter(F.col("source") != "___s").collect()
-    )
-    want = sorted(
-        tuple(r)
-        for r in rollup_raw(sequences(spark, 1500))
-        .select("source", "bucket_es", "n_docs", "sum_tok", "min_tok", "max_tok")
-        .collect()
-    )
-    assert got == want
 
 
 def test_decode_features_matches_rowwise_reference(spark, media):

@@ -835,17 +835,23 @@ def _state_rows(spark, pipe):
 
 
 def test_new_subseries_in_resume_equals_oneshot(spark, tmp_path):
-    """A source that first appears after the split cold-starts inside a
-    resumed run: its sub-series emit the whole grid (back to days the
-    resumed sub-series do not touch) while the others resume from state.
-    Every tier and the state rows must equal the one-shot run."""
+    """Sub-series at different rates in one resumed run. A source that
+    first appears after the split cold-starts: its sub-series emit the
+    whole grid (back to days the resumed sub-series do not touch). A
+    source that gets no rows after the split resumes from state only,
+    through the full outer join's rows with NULL steps. The others resume
+    from state with new rows. Every tier and the state rows must equal the
+    one-shot run."""
     seq2 = sequences(spark, N, docs_per_batch=8)  # ≥ 2 UTC days of buckets
     split = int(seq2.approxQuantile("ingest_es", [0.75], 0)[0])
     first = seq2.agg(F.min("ingest_es")).first()[0]
     # the resume window starts a UTC day after the data does, so the cold
     # sub-series rewrite a day partition the resumed ones leave alone
     assert split // 86400 > first // 86400
-    late = seq2.filter(~((F.col("source") == "wiki") & (F.col("ingest_es") <= split)))
+    src, ies = F.col("source"), F.col("ingest_es")
+    late = seq2.filter(
+        ~((src == "wiki") & (ies <= split)) & ~((src == "books") & (ies > split))
+    )
 
     one = TierPipeline(str(tmp_path / "one"), kf_shards=4)
     assert one.run(spark, late)["status"] == "ok"
@@ -853,12 +859,42 @@ def test_new_subseries_in_resume_equals_oneshot(spark, tmp_path):
     two = TierPipeline(str(tmp_path / "two"), kf_shards=4)
     two.run(spark, late.filter(F.col("ingest_es") <= split))
     assert not any(d.startswith("wiki/") for d, *_ in _state_rows(spark, two))
+    assert any(d.startswith("books/") for d, *_ in _state_rows(spark, two))
     assert two.run(spark, late)["status"] == "ok"
-    assert any(d.startswith("wiki/") for d, *_ in _state_rows(spark, two))
+    st = _state_rows(spark, two)
+    assert any(d.startswith("wiki/") for d, *_ in st)
+    # every sub-series, the quiet ones included, advanced to one k_done
+    assert len({k for _, k, *_ in st}) == 1
 
     for tier in ("raw", "1h", "1d", "series", "gapfilled"):
         assert _tier_rows(spark, one, tier) == _tier_rows(spark, two, tier), tier
     assert _state_rows(spark, one) == _state_rows(spark, two)
+
+
+def test_late_rows_count_in_no_tier(spark, seq, tmp_path):
+    """Late data (reference update mode drops epochs older than the state
+    start, kfts.py:272-276): rows that land with ingest_es at or below the
+    committed raw watermark are counted in no tier. A run that sees only
+    them returns noop, and the next increment still equals the one-shot
+    run over the on-time rows."""
+    split = seq.approxQuantile("ingest_es", [0.5], 0)[0]
+    on_time = seq.filter(F.col("ingest_es") <= split)
+    pipe = TierPipeline(str(tmp_path / "split"), kf_shards=4)
+    wm = pipe.run(spark, on_time)["watermark_es"]
+    # copies of committed rows under new doc ids, down to ingest_es == wm
+    late = on_time.withColumn("doc_id", F.concat(F.lit("late-"), "doc_id"))
+    assert late.agg(F.max("ingest_es")).first()[0] == wm
+    assert pipe.run(spark, on_time.unionByName(late)) == {
+        "status": "noop",
+        "watermark_es": wm,
+    }
+    assert pipe.run(spark, seq.unionByName(late))["status"] == "ok"
+
+    one = TierPipeline(str(tmp_path / "one"), kf_shards=4)
+    one.run(spark, seq)
+    for tier in ("raw", "1h", "1d", "compressed", "series", "gapfilled"):
+        assert _tier_rows(spark, one, tier) == _tier_rows(spark, pipe, tier), tier
+    assert _state_rows(spark, one) == _state_rows(spark, pipe)
 
 
 def _table_files(pipe):
