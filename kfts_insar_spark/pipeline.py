@@ -27,11 +27,16 @@ A scheduled run costs in proportion to what changed:
 2. probe: one emptiness check on the ingest rows past the watermark — a run
    with no new data returns ``noop`` here, before any plan, checkpoint or
    write is built;
-3. raw commit: one scan of the increment, aggregated and written in one job;
+3. raw commit: one scan of the increment, aggregated and written in one job.
+   With gap-fill on, the increment's shard partials are the run's one
+   checkpoint: raw, the series commit and a resumed kernel all read them;
 4. concurrent chains: the derived tiers (1h, 1d and compressed side by side
-   from the same affected raw days), the series commit, and the KF gap-fill.
-   A resume feeds the kernel from the in-memory increment, so it does not
-   wait for the series commit; a cold run reads the committed series tier.
+   from the committed raw files of the affected days), the series commit,
+   and the KF gap-fill. A resume feeds the kernel from the checkpointed
+   partials, so it does not wait for the series commit; a cold run reads
+   the committed series tier. The gap commit rewrites only the gap files
+   the resume window overlaps (footer ``bucket_es`` max at or past the
+   window's start) and adds the new rows beside the rest.
 
 The commit order stays raw → series → gap-filled → KF state (the gap commit
 waits for the series commit, the state publish for the gap commit), so a
@@ -222,7 +227,7 @@ class TierPipeline:
         # tiers and the KF resume from ONE base scan: raw = shard merge (a
         # two-stage aggregation over the doc-hash shard, equal to
         # rollup_raw), series = the partials themselves.
-        partial = raw_inc = None
+        partial = None
         try:
             if self.run_gapfill:
                 # localCheckpoint (not persist): the series commit and
@@ -242,15 +247,8 @@ class TierPipeline:
                 merged = merge_shard_partials(partial, with_max_ingest=True)
             else:
                 merged = rollup_raw(fresh, with_max_ingest=True)
-            # checkpoint the merged increment: the raw write materializes
-            # it and the derived tiers then read THESE blocks instead of
-            # re-scanning the parquet files the commit just wrote (the
-            # prior-snapshot read in _derive_tiers covers boundary
-            # days). Same lost-partition contract as `partial`.
-            prior_sid = self.raw.current_snapshot_id()
-            raw_inc = merged.withColumn("pday", _pday()).localCheckpoint(eager=False)
             sid = self.raw.append(
-                raw_inc,
+                merged.withColumn("pday", _pday()),
                 partition_by=["pday"],
                 coalesce=_write_tasks(spark),  # optimize-write
                 stats_cols=["max_ies"],
@@ -278,8 +276,8 @@ class TierPipeline:
             # ---- after the raw commit, the remaining chains run as
             # concurrent Spark jobs, so their per-stage fixed costs (plan
             # compile + commit) and their compute overlap:
-            # (a) the derived tiers (1h/1d/compressed) from the checkpointed
-            #     raw increment + the prior raw snapshot;
+            # (a) the derived tiers (1h/1d/compressed) from the committed
+            #     raw files of the affected days;
             # (b) the series commit from the checkpointed shard partials;
             # (c) the KF gap-fill (north_star core; reference update mode).
             #     With committed state at this increment's lower bound, the
@@ -287,10 +285,7 @@ class TierPipeline:
             #     its gap commit waits for (b). A cold start reads the
             #     committed series tier, so it waits for (b) first.
             with ThreadPoolExecutor(3) as ex:
-                f_tiers = ex.submit(
-                    self._derive_tiers, spark, days, new_wm,
-                    inc=raw_inc, prior_sid=prior_sid,
-                )
+                f_tiers = ex.submit(self._derive_tiers, spark, days, new_wm)
                 if self.run_gapfill:
                     resume = self.kf_state.property("grid_lo") is not None and (
                         int(self.kf_state.property("watermark_es", -1)) == wm
@@ -314,9 +309,8 @@ class TierPipeline:
             result["snapshots"].update(dsids)
             return result
         finally:
-            for df in (partial, raw_inc):
-                if df is not None:
-                    _release(df)
+            if partial is not None:
+                _release(partial)
 
     def _ingest_series(
         self,
@@ -367,44 +361,20 @@ class TierPipeline:
         )
 
     def _derive_tiers(
-        self,
-        spark: SparkSession,
-        days: list,
-        wm: int,
-        inc: DataFrame | None = None,
-        prior_sid: int | None = None,
+        self, spark: SparkSession, days: list, wm: int
     ) -> tuple[dict, dict]:
         """Recompute the 1h/1d/compressed tiers for the affected ``days``
-        and overwrite those partitions.
-
-        ``inc`` (the checkpointed raw increment the commit just wrote, with
-        ``prior_sid`` = the raw snapshot BEFORE that commit) serves the
-        affected days from memory: increment rows come from the checkpoint
-        blocks and only BOUNDARY days — affected days that already had rows
-        before this commit — read parquet, through the prior snapshot's
-        manifest pruned to those days (append-mostly ingest prunes this to
-        zero files, metadata-only). Without ``inc`` (heal / restatement
-        paths, gapfill-off… any caller that cannot vouch the increment
-        frame equals the committed files) the committed raw tier is read.
-        Affected-day reads use manifest-level FILE pruning (``where=``) —
-        no full-tier scan, no per-day plan nodes."""
+        and overwrite those partitions, from the committed raw files of
+        those days (manifest-level FILE pruning with ``where=``: no
+        full-tier scan, no per-day plan nodes). The same read serves a
+        run, a heal and a restatement."""
         dayset = set(days)
-        in_days = lambda p: p.get("pday") in dayset  # noqa: E731
         # one frame of the affected raw days, shared by all three tiers
-        if inc is not None:
-            raw_days = inc.filter(F.col("pday").isin(days)).select(*TIER_COLS)
-            prior = (
-                self.raw.read(spark, snapshot_id=prior_sid, where=in_days)
-                if prior_sid is not None
-                else None
-            )
-            if prior is not None:
-                raw_days = raw_days.unionByName(prior.select(*TIER_COLS))
-            raw_days = raw_days.persist()
-        else:
-            raw_days = (
-                self.raw.read(spark, where=in_days).select(*TIER_COLS).persist()
-            )
+        raw_days = (
+            self.raw.read(spark, where=lambda p: p.get("pday") in dayset)
+            .select(*TIER_COLS)
+            .persist()
+        )
 
         def write(tbl, frame, props=None):
             sid = tbl.overwrite_partitions(
@@ -527,6 +497,21 @@ class TierPipeline:
         ``series_commit`` is the future of this run's series commit: the
         tier read and the gap commit wait for it, so commits land raw →
         series → gap → state.
+
+        The gap commit is a file-level replace. The kernel re-emits every
+        step at or after ``cover_min`` (the state's ``idx0``), so the prior
+        files it changes are exactly those that hold such a step: the files
+        whose footer ``bucket_es`` max is at or past ``cover_min``, plus any
+        file without stats. One scan of that rewrite set gives the rows they
+        keep (before ``cover_min``) and the historical innovation/gap flags
+        of the re-emitted steps. The commit drops the rewrite set and adds
+        the new files; every other file stays. A sub-series that cold-starts
+        in a resumed run emits its whole history, so its early rows land as
+        new files beside the untouched ones.
+
+        When the gap tier already holds ``wm`` (a crash between the gap
+        commit and the state publish), the kernel re-runs and only the state
+        publishes.
         """
         import numpy as np
 
@@ -608,58 +593,46 @@ class TierPipeline:
             # _heal would see kf_state caught up and skip the gap re-run,
             # and the early return above (m <= k_done_prev) would refuse to
             # re-emit — the increment's gap-filled rows would be permanently
-            # lost. With output-first, a crash leaves stale state and the
-            # next run re-executes the same window idempotently (overwrite
-            # replaces, never adds).
+            # lost. With output-first, a crash leaves the gap tier at wm and
+            # the state behind it. The next run's heal re-runs the kernel
+            # from that state and publishes ONLY the state: the window's gap
+            # rows are committed already, and a second gap write would add
+            # a second copy of the early rows of any sub-series born in the
+            # window (they sit outside the rewrite set).
             #
-            # The state WRITE (the expensive half: Spark job + footer
-            # stats over the persisted `combined`) still overlaps the
-            # output explode/stitch/write — only its manifest swap waits
-            # for the gap commit. A crash in between leaves unreferenced
-            # state files (remove_orphans reclaims them) and stale state.
+            # The state WRITE (a Spark job + footer stats over the persisted
+            # `combined`) overlaps the gap write; only its manifest swap
+            # waits for the gap commit. A crash in between leaves
+            # unreferenced state files (remove_orphans reclaims them) and
+            # stale state.
             f_state = state_pool.submit(
                 self.kf_state.stage_all,
                 combined.select("doc_id", "k_done", "idx0", "m", "P"),
                 None,  # partition_by
                 2,  # coalesce: tiny table — one file beats 32 footer reads
             )
-            rows = _gap_rows(combined, t_grid, lo)
-
-            # stitch: the resume re-emits the overlap window; affected day
-            # partitions get (old rows before the window) ∪ (re-emitted
-            # rows). Incremental-cost discipline: the prior tier is read
-            # ONLY through manifest-level pday pruning — the full-history
-            # scans + duplicated explode subtree of the naive stitch were
-            # the resume run's dominant cost (measured 2.6 s of a 4.2 s
-            # stage).
-            n_gap_parts = None
-            if self.gap.manifest() is not None:
-                # touched days from metadata-scale facts: each kernel row's
-                # arrays are dense over [emit0, m), so the rows cover every
-                # step from the smallest emit0 (0 when a sub-series
-                # cold-starts) to the grid end — one min over the
-                # ≤ sources × kf_shards persisted kernel rows, no explode
-                e0 = combined.agg(F.min("emit0")).first()[0]
-                touched = set()
-                if e0 is not None:
-                    first = lo + int(e0) * RAW_SECONDS
-                    touched = {
-                        _day(d * DAY_SECONDS)
-                        for d in range(first // DAY_SECONDS, hi // DAY_SECONDS + 1)
-                    }
-                n_gap_parts = len(touched)
-                out_cols = rows.columns
-                cover_day = _day(cover_min)
-                # re-emitted overlap steps carry refined phase/std but not
-                # their historical innovation/gap flags (those belong to the
-                # step's original update) — stitch back from the prior tier.
-                # Overlap steps all sit at/after cover_day, and cold-start
-                # docs have no prior rows at all → pruning is lossless.
-                hist = self.gap.read(
-                    spark, where=lambda p: p.get("pday", "") >= cover_day
+            sid, n_rows = self.gap.current_snapshot_id(), 0
+            if int(self.gap.property("watermark_es", -1)) < wm:
+                rows = _gap_rows(combined, t_grid, lo)
+                m_gap = self.gap.manifest()
+                overlaps = lambda st: (  # noqa: E731
+                    "bucket_es" not in st or int(st["bucket_es"][1]) >= cover_min
                 )
-                if hist is not None:
-                    hist = hist.select(
+                redo = [
+                    e
+                    for e in (m_gap or {}).get("files", [])
+                    if "stats" not in e or overlaps(e["stats"])
+                ]
+                if redo:
+                    out_cols = rows.columns
+                    old = self.gap.read(
+                        spark, snapshot_id=m_gap["snapshot_id"], stats_where=overlaps
+                    ).select(*out_cols)
+                    past = F.col("bucket_es") >= F.lit(cover_min)
+                    # re-emitted overlap steps carry refined phase/std but
+                    # not their historical innovation/gap flags (those
+                    # belong to the step's original update) — stitch back
+                    hist = old.filter(past).select(
                         "source",
                         "shard",
                         "bucket_es",
@@ -669,36 +642,23 @@ class TierPipeline:
                     rows = (
                         rows.join(hist, ["source", "shard", "bucket_es"], "left")
                         .withColumn("innov", F.coalesce("innov", "_innov_old"))
-                        .withColumn(
-                            "gap_filled", F.coalesce("_gap_old", "gap_filled")
-                        )
+                        .withColumn("gap_filled", F.coalesce("_gap_old", "gap_filled"))
                         .select(*out_cols)
                     )
-                # keep prior rows below the overlap window, but only in day
-                # partitions this commit rewrites (cold-started sub-series
-                # emit their full history, touching older days too)
-                keep_src = self.gap.read(
-                    spark,
-                    where=lambda p: p.get("pday", "") in touched,
-                    # only files that can hold rows below the overlap window
-                    stats_where=lambda s: "bucket_es" not in s
-                    or int(s["bucket_es"][0]) < cover_min,
+                    rows = old.filter(~past).unionByName(rows)
+                if series_commit is not None:
+                    series_commit.result()  # series commit lands before gap commit
+                sid = self.gap.append(
+                    rows,
+                    partition_by=["pday"],
+                    properties={"watermark_es": wm},
+                    # the resume window's day span; a sub-series born in a
+                    # resume writes older days too, in fewer tasks
+                    coalesce=_write_tasks(spark, (hi - cover_min) // DAY_SECONDS + 2),
+                    stats_cols=["bucket_es"],
+                    replace=redo,
                 )
-                if keep_src is not None:
-                    keep_old = keep_src.filter(
-                        F.col("bucket_es") < F.lit(cover_min)
-                    ).select(*out_cols)
-                    rows = keep_old.unionByName(rows)
-            if series_commit is not None:
-                series_commit.result()  # series commit lands before gap commit
-            sid = self.gap.overwrite_partitions(
-                rows,
-                ["pday"],
-                properties={"watermark_es": wm},
-                coalesce=_write_tasks(spark, n_gap_parts),
-                stats_cols=["bucket_es"],
-            )
-            n_rows = self.gap.last_commit_rows()
+                n_rows = self.gap.last_commit_rows()
             # the state's idx0 is uniform across docs (grid-determined): L
             # kept params + last t_sep phases → idx0 = m − t_sep.
             # Gap commit has landed — NOW publish the staged state.
@@ -794,6 +754,18 @@ class TierPipeline:
         rebuild runs only |affected pairs| ≤ sources × kf_shards
         sub-series over the committed grid — never the whole tier.
         """
+        wm_gap = int(self.gap.property("watermark_es", -1))
+        wm_state = int(self.kf_state.property("watermark_es", -1))
+        if self.run_gapfill and wm_state < wm_gap:
+            # the rebuild re-emits up to the state's k_done and replaces the
+            # rebuilt sub-series' rows, so their rows in (k_done, wm_gap]
+            # would be lost: the heal that follows publishes the state only
+            raise ValueError(
+                f"kf_state watermark_es={wm_state} lags the gap-filled tier's "
+                f"watermark_es={wm_gap} (a run stopped between the gap commit "
+                "and the state publish); run the pipeline first to publish "
+                "the state, then restate"
+            )
         docs = docs.persist()
         try:
             partial = rollup_series_partial(

@@ -312,6 +312,7 @@ class SnapshotTable:
         stats_cols: list[str] | None = None,
         properties_fn=None,
         skip_if_empty: bool = False,
+        replace: list[dict] | None = None,
     ) -> int | None:
         """Append ``df`` as a new snapshot.
 
@@ -321,7 +322,15 @@ class SnapshotTable:
         a max-ingest stat: the property then describes exactly the data
         this commit published, with no second scan of the source and no
         read-then-write race. ``skip_if_empty`` returns None (no commit,
-        no snapshot) when the increment produced zero rows."""
+        no snapshot) when the increment produced zero rows.
+
+        ``replace`` (file entries of the current manifest) makes the commit
+        a file-level replace (Iceberg ``OverwriteFiles``): the snapshot
+        drops exactly those entries and adds the new files, so a caller
+        that rewrites some files of a partition leaves the others in place.
+        An entry that is no longer in the parent manifest (a concurrent
+        writer replaced or dropped it) raises :class:`ConcurrentCommitError`.
+        """
         sid, parent = self._next_sid()
         new, schema = self._write_files(df, sid, partition_by, coalesce, stats_cols)
         if skip_if_empty and sum(e["rows"] for e in new) == 0:
@@ -331,7 +340,15 @@ class SnapshotTable:
         if properties_fn is not None:
             props.update(properties_fn(new))
         prev = (self.manifest(parent) or {}).get("files", []) if parent is not None else []
-        return self._commit(sid, prev + new, "append", props, parent, schema)
+        dead = {e["path"] for e in replace or ()}
+        if dead and not dead <= {e["path"] for e in prev}:
+            raise ConcurrentCommitError(
+                f"{self.path}: a file to replace is not in snapshot {parent}; "
+                "re-plan against the current snapshot"
+            )
+        kept = [e for e in prev if e["path"] not in dead]
+        op = "replace" if dead else "append"
+        return self._commit(sid, kept + new, op, props, parent, schema)
 
     def overwrite_partitions(
         self,
@@ -583,17 +600,12 @@ class SnapshotTable:
         # one task → one output file per partition dir (the bin-pack)
         if keys:
             df = df.repartition(max(1, min(n_parts, 64)), *keys)
-        sid, parent = self._next_sid()
         stats = sorted({c for e in victims for c in e.get("stats", {})})
-        new, schema = self._write_files(df, sid, keys or None, stats_cols=stats)
-        self.last_commit_files = new
-        dead = {e["path"] for e in victims}
-        kept = [e for e in m["files"] if e["path"] not in dead]
-        self._commit(sid, kept + new, "replace", None, parent, schema)
+        self.append(df, keys or None, stats_cols=stats, replace=victims)
         return {
             "partitions": n_parts,
             "files_before": len(victims),
-            "files_after": len(new),
+            "files_after": len(self.last_commit_files),
         }
 
     # ------------------------------------------------------------- reads

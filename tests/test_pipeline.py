@@ -297,6 +297,66 @@ def test_append_stats_properties_and_empty_skip(spark, tmp_path):
     assert t.read(spark).count() == 100
 
 
+def test_append_replace_swaps_listed_files(spark, tmp_path):
+    """File-level replace (Iceberg OverwriteFiles): append(..., replace=)
+    drops exactly the listed entries and adds the new files in one
+    snapshot, and files of the same partition that are not listed stay. A
+    listed entry that the parent manifest no longer holds raises
+    ConcurrentCommitError and leaves the table as it was."""
+    from kfts_insar_spark.sources.snapshot import (
+        ConcurrentCommitError,
+        SnapshotTable,
+    )
+
+    t = SnapshotTable(str(tmp_path / "t"))
+    mk = lambda lo, hi: spark.range(lo, hi).selectExpr(  # noqa: E731
+        "id", "'d0' AS pday"
+    )
+    for lo in (0, 3, 6):
+        t.append(mk(lo, lo + 3), partition_by=["pday"], coalesce=1)
+    files = t.manifest()["files"]
+    assert len(files) == 3
+    victim = files[1]  # ids 3..5
+    sid = t.append(
+        mk(30, 32),
+        partition_by=["pday"],
+        properties={"watermark_es": 7},
+        coalesce=1,
+        replace=[victim],
+    )
+    m = t.manifest()
+    assert m["operation"] == "replace"
+    assert m["properties"] == {"watermark_es": 7}
+    assert [e["path"] for e in m["files"]] == [
+        files[0]["path"], files[2]["path"]
+    ] + [e["path"] for e in t.last_commit_files]
+    want = [0, 1, 2, 6, 7, 8, 30, 31]
+    assert sorted(r.id for r in t.read(spark).collect()) == want
+
+    with pytest.raises(ConcurrentCommitError):
+        t.append(mk(40, 41), partition_by=["pday"], replace=[victim])
+    assert t.current_snapshot_id() == sid
+    assert sorted(r.id for r in t.read(spark).collect()) == want
+
+
+def test_resumed_runs_in_one_day_keep_one_gap_file(spark, seq, tmp_path_factory):
+    """Three resumed runs whose windows sit inside one UTC day rewrite that
+    day's gap-filled file instead of adding one file per run: every file
+    the resume window overlaps is in the gap commit's rewrite set. The
+    gap-filled tier still equals the one-shot run."""
+    pipe = TierPipeline(str(tmp_path_factory.mktemp("resumed")), kf_shards=4)
+    for cut in seq.approxQuantile("ingest_es", [0.25, 0.5, 0.75], 0):
+        assert pipe.run(spark, seq.filter(F.col("ingest_es") <= cut))["status"] == "ok"
+    assert pipe.run(spark, seq)["status"] == "ok"
+    assert [e["partition"]["pday"] for e in pipe.gap.manifest()["files"]] == [
+        "2026-01-01"
+    ]
+
+    one = TierPipeline(str(tmp_path_factory.mktemp("one")), kf_shards=4)
+    one.run(spark, seq)
+    assert _tier_rows(spark, one, "gapfilled") == _tier_rows(spark, pipe, "gapfilled")
+
+
 def test_read_incremental_between_snapshots(spark, tmp_path):
     """Iceberg incremental-scan analog: each commit's delta is readable
     without rescanning the table; overwritten partitions count as added."""
@@ -619,17 +679,12 @@ def test_correct_docs_multi_bucket_multi_source(spark, seq, tmp_path):
     assert pipe.run(spark, seq.withColumn("n_tok", bump))["status"] == "noop"
 
 
-def test_crash_between_gap_commit_and_state_publish_heals(spark, seq, tmp_path):
-    """The round-2 review's crash window, exercised end-to-end: the gap
-    tier commits, then the process dies before the staged state manifest
-    publishes. The next run must heal (stale state → idempotent re-run of
-    the same window), converge to the cold one-shot result, and the
-    staged state files must be GC-able orphans."""
+def _crash_before_state_publish(spark, pipe, seq_all) -> list:
+    """Run ``seq_all`` on ``pipe`` and stop it after the gap commit, before
+    the staged state publishes. Checks the window the crash leaves (gap
+    tier AT the new watermark, state BEHIND it) and returns the staged
+    state files, which are on disk but in no manifest."""
     import os
-
-    pipe = TierPipeline(str(tmp_path / "p"), kf_shards=4)
-    split_es = seq.approxQuantile("ingest_es", [0.5], 0)[0]
-    pipe.run(spark, seq.filter(F.col("ingest_es") <= split_es))
 
     staged_box = {}
     orig = pipe.kf_state.commit_staged
@@ -640,17 +695,31 @@ def test_crash_between_gap_commit_and_state_publish_heals(spark, seq, tmp_path):
 
     pipe.kf_state.commit_staged = boom
     with pytest.raises(RuntimeError, match="injected crash"):
-        pipe.run(spark, seq)
+        pipe.run(spark, seq_all)
     pipe.kf_state.commit_staged = orig
 
-    # the crash left: gap tier AT the new watermark, state BEHIND it,
-    # staged state files on disk but in no manifest
     wm_raw = int(pipe.raw.property("watermark_es"))
     assert int(pipe.gap.property("watermark_es")) == wm_raw
     assert int(pipe.kf_state.property("watermark_es", -1)) < wm_raw
     assert staged_box["files"] and all(
         os.path.exists(p) for p in staged_box["files"]
     )
+    return staged_box["files"]
+
+
+def test_crash_between_gap_commit_and_state_publish_heals(spark, seq, tmp_path):
+    """The round-2 review's crash window, exercised end-to-end: the gap
+    tier commits, then the process dies before the staged state manifest
+    publishes. The next run must heal (stale state → re-run the kernel
+    and publish the state), converge to the cold one-shot result, and the
+    staged state files must be GC-able orphans."""
+    import os
+
+    pipe = TierPipeline(str(tmp_path / "p"), kf_shards=4)
+    split_es = seq.approxQuantile("ingest_es", [0.5], 0)[0]
+    pipe.run(spark, seq.filter(F.col("ingest_es") <= split_es))
+    staged = _crash_before_state_publish(spark, pipe, seq)
+    wm_raw = int(pipe.raw.property("watermark_es"))
 
     # restart (fresh pipeline object): heal re-runs the gapfill window
     restarted = TierPipeline(str(tmp_path / "p"), kf_shards=4)
@@ -676,8 +745,71 @@ def test_crash_between_gap_commit_and_state_publish_heals(spark, seq, tmp_path):
     # the crashed attempt's staged files are orphans: no manifest lists
     # them, and GC removes them without touching the live table
     restarted.kf_state.remove_orphans(older_than_seconds=-1)
-    assert not any(os.path.exists(p) for p in staged_box["files"])
+    assert not any(os.path.exists(p) for p in staged)
     assert restarted.read_tier(spark, "state").count() == len(st_a)
+
+
+def test_crash_heal_with_subseries_born_in_crashed_increment(spark, tmp_path):
+    """The crash above, where the crashed increment brings a (source,
+    shard) sub-series the first half lacks. It cold-starts and emits its
+    whole history, so the crashed gap commit wrote its early rows as new
+    files of older days, outside any later rewrite set. The heal publishes
+    only the state (a second gap write would add a second copy of those
+    rows): raw, gap-filled and state equal the cold run."""
+    from kfts_insar_spark.operators.rollup import RAW_SECONDS
+
+    seq2 = sequences(spark, N, docs_per_batch=8)  # ≥ 2 UTC days of buckets
+    split = int(seq2.approxQuantile("ingest_es", [0.75], 0)[0])
+    assert split // 86400 > seq2.agg(F.min("ingest_es")).first()[0] // 86400
+    late = seq2.filter(~((F.col("source") == "wiki") & (F.col("ingest_es") <= split)))
+
+    pipe = TierPipeline(str(tmp_path / "p"), kf_shards=4)
+    pipe.run(spark, late.filter(F.col("ingest_es") <= split))
+    assert not any(d.startswith("wiki/") for d, *_ in _state_rows(spark, pipe))
+    _crash_before_state_publish(spark, pipe, late)
+    cover_min = int(pipe.kf_state.property("grid_lo")) + RAW_SECONDS * int(
+        pipe.kf_state.property("idx0")
+    )
+    assert any(
+        int(e["stats"]["bucket_es"][1]) < cover_min
+        for e in pipe.gap.last_commit_files
+    ), "the born sub-series wrote no file before the resume window"
+
+    restarted = TierPipeline(str(tmp_path / "p"), kf_shards=4)
+    assert restarted.run(spark, late)["status"] == "noop"
+    cold = TierPipeline(str(tmp_path / "cold"), kf_shards=4)
+    cold.run(spark, late)
+    for tier in ("raw", "gapfilled"):
+        assert _tier_rows(spark, restarted, tier) == _tier_rows(spark, cold, tier), tier
+    assert _state_rows(spark, restarted) == _state_rows(spark, cold)
+
+
+def test_correct_docs_refuses_gap_state_crash_window(spark, seq, tmp_path):
+    """In the gap-vs-state crash window a restatement would drop the
+    rebuilt sub-series' gap rows past the state's k_done, and the heal
+    (state publish only) would not refill them: correct_docs refuses
+    before it writes anything, naming both watermarks. After the heal it
+    goes through."""
+    pipe = TierPipeline(str(tmp_path / "p"), kf_shards=4)
+    split_es = seq.approxQuantile("ingest_es", [0.5], 0)[0]
+    pipe.run(spark, seq.filter(F.col("ingest_es") <= split_es))
+    _crash_before_state_publish(spark, pipe, seq)
+    wm_gap = int(pipe.gap.property("watermark_es"))
+    wm_state = int(pipe.kf_state.property("watermark_es"))
+    tables = (pipe.raw, pipe.h1, pipe.d1, pipe.comp, pipe.series, pipe.gap,
+              pipe.kf_state)
+    sids = [t.current_snapshot_id() for t in tables]
+
+    docs = seq.orderBy("doc_id").limit(1)
+    with pytest.raises(
+        ValueError,
+        match=rf"watermark_es={wm_state} .*watermark_es={wm_gap} .*run the pipeline first",
+    ):
+        pipe.correct_docs(spark, docs)
+    assert [t.current_snapshot_id() for t in tables] == sids
+
+    assert pipe.run(spark, seq)["status"] == "noop"
+    assert pipe.correct_docs(spark, docs)["status"] == "restated"
 
 
 def test_quality_and_rebuild_survive_crash_window(
