@@ -102,7 +102,6 @@ class DedupIndex:
                 merged,
                 key_cols=["fp"],
                 partition_by=["pb"],
-                coalesce=4,
                 properties=props,
             )
             return {

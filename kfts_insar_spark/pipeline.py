@@ -134,29 +134,6 @@ def _gap_rows(kf_out: DataFrame, t_grid, lo: int) -> DataFrame:
     )
 
 
-def _write_tasks(spark: SparkSession, n_parts: int | None = None) -> int:
-    """Scale-adaptive optimize-write parallelism for tier commits.
-
-    The snapshot writer hash-clusters on the partition column, so the file
-    count per pday is one regardless of task count — but parquet encode and
-    per-file commit parallelize across tasks. The previous constant 4
-    serialized multi-million-row tier writes onto 4 cores (measured as the
-    single largest cost of the bulk ingest and the gap-fill output commit).
-    Derived from the session's parallelism, not the local core count, so the
-    same code sizes itself on a cluster (set ``spark.default.parallelism``
-    to size it explicitly).
-
-    ``n_parts`` (the number of partition values this write touches, when the
-    caller knows it from commit metadata) clamps the task count: tasks
-    beyond one-per-day are guaranteed empty, and a small resume increment
-    paying ~30 no-op task launches per commit measurably regressed the
-    incremental path (sf0.1 A/B 1.127 before this clamp)."""
-    wt = max(4, min(256, spark.sparkContext.defaultParallelism))
-    if n_parts is not None:
-        wt = max(1, min(wt, int(n_parts)))
-    return wt
-
-
 # per-source token-count series are O(10^5..10^6) magnitude — noise scales
 # accordingly (the reference's config-scalar role, kfts.py [KALMAN] section)
 DEFAULT_KF_CFG = KFConfig(
@@ -250,7 +227,6 @@ class TierPipeline:
             sid = self.raw.append(
                 merged.withColumn("pday", _pday()),
                 partition_by=["pday"],
-                coalesce=_write_tasks(spark),  # optimize-write
                 stats_cols=["max_ies"],
                 properties_fn=lambda entries: {
                     "watermark_es": max(int(e["stats"]["max_ies"][1]) for e in entries)
@@ -291,7 +267,7 @@ class TierPipeline:
                         int(self.kf_state.property("watermark_es", -1)) == wm
                     )
                     f_series = ex.submit(
-                        self._ingest_series, spark, seq, new_wm,
+                        self._ingest_series, seq, new_wm,
                         partial=partial, wm_partial=wm,
                     )
                     f_gap = ex.submit(
@@ -314,7 +290,6 @@ class TierPipeline:
 
     def _ingest_series(
         self,
-        spark: SparkSession,
         seq: DataFrame,
         upto: int,
         partial: DataFrame | None = None,
@@ -347,9 +322,6 @@ class TierPipeline:
             inc,
             partition_by=["pday"],
             properties={"watermark_es": upto},
-            # the increment's buckets sit in (wm_s, upto] — day span bounds
-            # the partition count this write can touch
-            coalesce=_write_tasks(spark, (upto - max(wm_s, 0)) // 86400 + 2),
             stats_cols=["bucket_es"],
         )
         self.log.record(
@@ -381,7 +353,6 @@ class TierPipeline:
                 frame.withColumn("pday", _pday()),
                 ["pday"],
                 properties={"watermark_es": wm, **(props or {})},
-                coalesce=_write_tasks(spark, len(days)),
             )
             return sid, tbl.last_commit_rows(), tbl.manifest()["files"]
 
@@ -435,21 +406,6 @@ class TierPipeline:
             {"1h": sid_h, "1d": sid_d, "compressed": sid_c},
         )
 
-    def _raw_days_since(self, wm_tier: int) -> list:
-        """pday partitions whose raw files were added by commits with a
-        watermark newer than ``wm_tier`` — metadata-only (manifest diff)."""
-        days: set = set()
-        prev_paths: set = set()
-        for s in self.raw.snapshots():
-            new = [e for e in s["files"] if e["path"] not in prev_paths]
-            prev_paths = {e["path"] for e in s["files"]}
-            s_wm = int(s.get("properties", {}).get("watermark_es", -1))
-            if s_wm > wm_tier:
-                days.update(
-                    e["partition"]["pday"] for e in new if "pday" in e["partition"]
-                )
-        return sorted(days)
-
     def _heal(self, spark: SparkSession, seq: DataFrame, wm_raw: int) -> None:
         """Bring downstream tiers up to raw's committed watermark before
         processing new data (crash-resume for a failure between the raw
@@ -462,13 +418,22 @@ class TierPipeline:
             if int(t.property("watermark_es", -1)) < wm_raw
         ]
         if lagging:
-            days = self._raw_days_since(
-                min(int(t.property("watermark_es", -1)) for t in lagging)
-            )
+            # the days of every current raw file that holds an ingest slot
+            # past the most lagging watermark (footer max_ies; a file
+            # without stats counts): metadata only, and a vacuum or compact
+            # of raw cannot widen or lose the set
+            wm_lag = min(int(t.property("watermark_es", -1)) for t in lagging)
+            days = sorted({
+                e["partition"]["pday"]
+                for e in self.raw.manifest()["files"]
+                if "pday" in e["partition"]
+                and ("max_ies" not in e.get("stats", {})
+                     or int(e["stats"]["max_ies"][1]) > wm_lag)
+            })
             if days:
                 self._derive_tiers(spark, days, wm_raw)
         if self.run_gapfill:
-            self._ingest_series(spark, seq, wm_raw)
+            self._ingest_series(seq, wm_raw)
             if int(self.kf_state.property("watermark_es", -1)) < wm_raw:
                 self._run_gapfill(spark, wm_raw)
 
@@ -608,8 +573,6 @@ class TierPipeline:
             f_state = state_pool.submit(
                 self.kf_state.stage_all,
                 combined.select("doc_id", "k_done", "idx0", "m", "P"),
-                None,  # partition_by
-                2,  # coalesce: tiny table — one file beats 32 footer reads
             )
             sid, n_rows = self.gap.current_snapshot_id(), 0
             if int(self.gap.property("watermark_es", -1)) < wm:
@@ -652,9 +615,6 @@ class TierPipeline:
                     rows,
                     partition_by=["pday"],
                     properties={"watermark_es": wm},
-                    # the resume window's day span; a sub-series born in a
-                    # resume writes older days too, in fewer tasks
-                    coalesce=_write_tasks(spark, (hi - cover_min) // DAY_SECONDS + 2),
                     stats_cols=["bucket_es"],
                     replace=redo,
                 )
@@ -700,7 +660,29 @@ class TierPipeline:
         document-level restatement — when the pipeline runs with
         gap-fill; it derives BOTH tiers' corrections from the corrected
         documents and cold-rebuilds exactly the affected sub-series.
+
+        Refused, before anything is written, while a derived tier lags raw
+        (a run stopped after the raw commit): the restated days' tiers
+        would carry raw's watermark, and the heal would then never derive
+        the stopped increment's other days. With gap-fill on the same holds
+        for the series tier, whose heal re-ingests the lagging window from
+        the source on top of a restated bucket.
         """
+        wm = int(self.raw.property("watermark_es", -1))
+        derived = (self.h1, self.d1, self.comp) + (
+            (self.series,) if self.run_gapfill else ()
+        )
+        lagging = [
+            f"{os.path.basename(t.path)} watermark_es={w}"
+            for t in derived
+            if (w := int(t.property("watermark_es", -1))) < wm
+        ]
+        if lagging:
+            raise ValueError(
+                f"{', '.join(lagging)} behind the raw tier's watermark_es={wm} "
+                "(a run stopped between the raw commit and the derived "
+                "commits); run the pipeline first to heal them, then restate"
+            )
         cor = corrections
         if "max_ies" not in cor.columns:
             # raw files carry a max_ies stats column; corrected buckets
@@ -712,10 +694,8 @@ class TierPipeline:
             cor,
             key_cols=["source", "bucket_es"],
             partition_by=["pday"],
-            coalesce=_write_tasks(spark),
             stats_cols=["max_ies"],
         )
-        wm = int(self.raw.property("watermark_es", -1))
         days = self.raw.last_commit_partitions("pday")
         self.log.record(
             "tier_raw_restate", sid, wm, self.raw.manifest()["files"],
@@ -806,7 +786,6 @@ class TierPipeline:
                 ser_cor,
                 key_cols=["source", "bucket_es"],
                 partition_by=["pday"],
-                coalesce=_write_tasks(spark),
                 stats_cols=["bucket_es"],
             )
             self.log.record(
@@ -870,7 +849,6 @@ class TierPipeline:
                 rows,
                 key_cols=["source", "shard"],
                 partition_by=["pday"],
-                coalesce=_write_tasks(spark),
                 stats_cols=["bucket_es"],
             )
             n_rows = self.gap.last_commit_rows()
@@ -880,7 +858,7 @@ class TierPipeline:
                 new_state = st.filter(~F.col("doc_id").isin(keys)).unionByName(
                     new_state
                 )
-            self.kf_state.overwrite_all(new_state, coalesce=2)
+            self.kf_state.overwrite_all(new_state)
         finally:
             combined.unpersist()
         self.log.record(

@@ -97,16 +97,11 @@ class SnapshotTable:
         df: DataFrame,
         sid: int,
         partition_by: list[str] | None,
-        coalesce: int | None = None,
         stats_cols: list[str] | None = None,
     ) -> tuple[list[dict], str]:
         """Write df under data/<sid>/ and return its file entries (partition
         values, row counts and sizes: per-file lineage) with the file schema
-        as JSON, both for :meth:`_commit`. ``coalesce`` is the optimize-write
-        knob: without it a 32-partition plan writing a small tier emits 32
-        tiny files per partition value, and every downstream stage pays
-        listing+footer costs (measured as the pipeline's main overhead at
-        bench scale)."""
+        as JSON, both for :meth:`_commit`."""
         # record the FILE schema (df minus directory-partition columns) for
         # the manifest: readers then pass it to the parquet scan explicitly
         # and skip per-read footer schema inference (one less driver-side
@@ -117,21 +112,13 @@ class SnapshotTable:
 
         schema = StructType([f for f in df.schema.fields if f.name not in pset]).json()
         out_dir = os.path.join(self.path, "data", str(sid), uuid.uuid4().hex[:8])
-        if coalesce:
-            # repartition, not coalesce: coalesce would merge the upstream
-            # (post-shuffle) stage down to `coalesce` tasks, serializing the
-            # aggregation that produces the tier; a round-robin exchange of
-            # the tiny aggregate keeps the producer parallel.
-            # Hash on the partition columns when present: round-robin makes
-            # every task write every partition value (tasks × days files);
-            # clustering by partition value writes ONE file per value —
-            # 4× fewer files to commit, list, and footer-read downstream.
-            # (This knob is for small incremental tiers; a bulk load that
-            # needs many files per partition value passes coalesce=None.)
-            if partition_by:
-                df = df.repartition(coalesce, *partition_by)
-            else:
-                df = df.repartition(coalesce)
+        # One file per partition value per commit (downstream stages pay
+        # listing and footer costs per file). REBALANCE, Iceberg's hash write
+        # distribution, clusters each value's rows into one task without
+        # merging the producer stage; AQE sizes it from the bytes it measured,
+        # merging a small increment into one task and splitting only a value
+        # above the advisory size. With AQE off it is a plain hash exchange.
+        df = df.hint("rebalance", *(partition_by or []))
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
@@ -308,7 +295,6 @@ class SnapshotTable:
         df: DataFrame,
         partition_by: list[str] | None = None,
         properties: dict | None = None,
-        coalesce: int | None = None,
         stats_cols: list[str] | None = None,
         properties_fn=None,
         skip_if_empty: bool = False,
@@ -332,7 +318,7 @@ class SnapshotTable:
         writer replaced or dropped it) raises :class:`ConcurrentCommitError`.
         """
         sid, parent = self._next_sid()
-        new, schema = self._write_files(df, sid, partition_by, coalesce, stats_cols)
+        new, schema = self._write_files(df, sid, partition_by, stats_cols)
         if skip_if_empty and sum(e["rows"] for e in new) == 0:
             return None
         self.last_commit_files = new
@@ -355,13 +341,12 @@ class SnapshotTable:
         df: DataFrame,
         partition_by: list[str],
         properties: dict | None = None,
-        coalesce: int | None = None,
         stats_cols: list[str] | None = None,
     ) -> int:
         """Replace exactly the partitions present in ``df`` (Iceberg dynamic
         partition overwrite)."""
         sid, parent = self._next_sid()
-        new, schema = self._write_files(df, sid, partition_by, coalesce, stats_cols)
+        new, schema = self._write_files(df, sid, partition_by, stats_cols)
         self.last_commit_files = new
         touched = {tuple(sorted(e["partition"].items())) for e in new}
         prev = (self.manifest(parent) or {}).get("files", []) if parent is not None else []
@@ -377,11 +362,10 @@ class SnapshotTable:
         df: DataFrame,
         partition_by: list[str] | None = None,
         properties: dict | None = None,
-        coalesce: int | None = None,
         stats_cols: list[str] | None = None,
     ) -> int:
         sid, parent = self._next_sid()
-        new, schema = self._write_files(df, sid, partition_by, coalesce, stats_cols)
+        new, schema = self._write_files(df, sid, partition_by, stats_cols)
         self.last_commit_files = new
         return self._commit(sid, new, "overwrite_all", properties, parent, schema)
 
@@ -389,7 +373,6 @@ class SnapshotTable:
         self,
         df: DataFrame,
         partition_by: list[str] | None = None,
-        coalesce: int | None = None,
         stats_cols: list[str] | None = None,
     ) -> dict:
         """Two-phase overwrite_all, phase 1: write the data files (the
@@ -402,7 +385,7 @@ class SnapshotTable:
         :meth:`remove_orphans`) and the table at its previous snapshot —
         never a torn or early commit."""
         sid, parent = self._next_sid()
-        files, schema = self._write_files(df, sid, partition_by, coalesce, stats_cols)
+        files, schema = self._write_files(df, sid, partition_by, stats_cols)
         return {"sid": sid, "parent": parent, "files": files, "schema": schema}
 
     def commit_staged(self, staged: dict, properties: dict | None = None) -> int:
@@ -421,7 +404,6 @@ class SnapshotTable:
         key_cols: list[str],
         partition_by: list[str],
         properties: dict | None = None,
-        coalesce: int | None = None,
         stats_cols: list[str] | None = None,
     ) -> int:
         """MERGE INTO with copy-on-write at partition granularity (the
@@ -475,7 +457,6 @@ class SnapshotTable:
                 merged,
                 partition_by,
                 properties=properties,
-                coalesce=coalesce,
                 stats_cols=stats_cols,
             )
         finally:
@@ -595,13 +576,12 @@ class SnapshotTable:
         n_parts = sum(1 for g in by_part.values() if len(g) >= min_files)
 
         keys = sorted({k for e in victims for k in e["partition"]})
-        df = self._scan(spark, m, victims)
-        # hash-cluster on the partition keys: each partition's rows land in
-        # one task → one output file per partition dir (the bin-pack)
-        if keys:
-            df = df.repartition(max(1, min(n_parts, 64)), *keys)
         stats = sorted({c for e in victims for c in e.get("stats", {})})
-        self.append(df, keys or None, stats_cols=stats, replace=victims)
+        # the write's rebalance packs each partition's victims into one file
+        self.append(
+            self._scan(spark, m, victims), keys or None, stats_cols=stats,
+            replace=victims,
+        )
         return {
             "partitions": n_parts,
             "files_before": len(victims),

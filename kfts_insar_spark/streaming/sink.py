@@ -23,24 +23,11 @@ from ..sources.snapshot import SnapshotTable
 
 
 class SnapshotBatchSink:
-    """``df.writeStream.foreachBatch(SnapshotBatchSink(table, ...))``.
+    """``df.writeStream.foreachBatch(SnapshotBatchSink(table))``: each new
+    micro-batch appends as one unpartitioned snapshot of ``table``."""
 
-    Parameters mirror SnapshotTable.append; ``transform`` (optional) maps
-    the micro-batch DataFrame before the append (e.g. adding the ``pday``
-    partition column).
-    """
-
-    def __init__(
-        self,
-        table: SnapshotTable,
-        partition_by: list[str] | None = None,
-        coalesce: int | None = None,
-        transform=None,
-    ):
+    def __init__(self, table: SnapshotTable):
         self.table = table
-        self.partition_by = partition_by
-        self.coalesce = coalesce
-        self.transform = transform
 
     def committed_batch_id(self) -> int:
         return int(self.table.property("stream_batch_id", -1))
@@ -48,11 +35,4 @@ class SnapshotBatchSink:
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_id <= self.committed_batch_id():
             return  # re-delivered batch after a sink/checkpoint race: no-op
-        if self.transform is not None:
-            batch_df = self.transform(batch_df)
-        self.table.append(
-            batch_df,
-            partition_by=self.partition_by,
-            properties={"stream_batch_id": int(batch_id)},
-            coalesce=self.coalesce,
-        )
+        self.table.append(batch_df, properties={"stream_batch_id": int(batch_id)})

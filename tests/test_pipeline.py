@@ -152,32 +152,39 @@ def test_retention_keeps_watermark_no_reingest(spark, seq, tmp_path):
 
 def test_heal_after_crash_between_commits(spark, seq, tmp_path_factory):
     """Regression: a crash after the raw commit but before the downstream
-    commits must be healed on the next run, even if no new data arrives."""
+    commits must be healed on the next run, even if no new data arrives.
+    The heal takes its days from the current raw manifest, so a maintenance
+    pass (compact + vacuum down to one snapshot) in between changes
+    nothing."""
     from kfts_insar_spark.operators.rollup import rollup_raw
 
     one = TierPipeline(str(tmp_path_factory.mktemp("heal_one")))
     one.run(spark, seq)
 
     split_es = seq.approxQuantile("ingest_es", [0.5], 0)[0]
-    pipe = TierPipeline(str(tmp_path_factory.mktemp("heal_two")))
-    pipe.run(spark, seq.filter(F.col("ingest_es") <= split_es))
+    for maintain in (False, True):
+        pipe = TierPipeline(str(tmp_path_factory.mktemp("heal_two")))
+        pipe.run(spark, seq.filter(F.col("ingest_es") <= split_es))
 
-    # simulate the crash: commit ONLY the raw increment of batch 2
-    wm = int(pipe.raw.property("watermark_es"))
-    fresh = seq.filter(F.col("ingest_es") > wm)
-    hi = int(fresh.agg(F.max("ingest_es")).first()[0])
-    inc = rollup_raw(fresh, with_max_ingest=True).withColumn(
-        "pday",
-        F.date_format(F.timestamp_seconds(F.col("bucket_es")), "yyyy-MM-dd"),
-    )
-    pipe.raw.append(
-        inc, partition_by=["pday"], properties={"watermark_es": hi}, coalesce=4
-    )
+        # simulate the crash: commit ONLY the raw increment of batch 2
+        wm = int(pipe.raw.property("watermark_es"))
+        fresh = seq.filter(F.col("ingest_es") > wm)
+        hi = int(fresh.agg(F.max("ingest_es")).first()[0])
+        inc = rollup_raw(fresh, with_max_ingest=True).withColumn(
+            "pday",
+            F.date_format(F.timestamp_seconds(F.col("bucket_es")), "yyyy-MM-dd"),
+        )
+        pipe.raw.append(inc, partition_by=["pday"], properties={"watermark_es": hi})
+        if maintain:
+            pipe.maintain(spark, keep_snapshots=1)
+            assert len(pipe.raw.snapshots()) == 1
 
-    res = pipe.run(spark, seq)  # no new data — but the run must heal
-    assert res["status"] == "noop"
-    for tier in ("raw", "1h", "1d", "gapfilled"):
-        assert _tier_rows(spark, one, tier) == _tier_rows(spark, pipe, tier), tier
+        res = pipe.run(spark, seq)  # no new data — but the run must heal
+        assert res["status"] == "noop"
+        for tier in ("raw", "1h", "1d", "gapfilled"):
+            assert _tier_rows(spark, one, tier) == _tier_rows(spark, pipe, tier), (
+                tier, maintain,
+            )
 
 
 def test_gapfill_parallelism_shape(spark, seq, tmp_path):
@@ -313,7 +320,7 @@ def test_append_replace_swaps_listed_files(spark, tmp_path):
         "id", "'d0' AS pday"
     )
     for lo in (0, 3, 6):
-        t.append(mk(lo, lo + 3), partition_by=["pday"], coalesce=1)
+        t.append(mk(lo, lo + 3), partition_by=["pday"])
     files = t.manifest()["files"]
     assert len(files) == 3
     victim = files[1]  # ids 3..5
@@ -321,7 +328,6 @@ def test_append_replace_swaps_listed_files(spark, tmp_path):
         mk(30, 32),
         partition_by=["pday"],
         properties={"watermark_es": 7},
-        coalesce=1,
         replace=[victim],
     )
     m = t.manifest()
@@ -337,6 +343,42 @@ def test_append_replace_swaps_listed_files(spark, tmp_path):
         t.append(mk(40, 41), partition_by=["pday"], replace=[victim])
     assert t.current_snapshot_id() == sid
     assert sorted(r.id for r in t.read(spark).collect()) == want
+
+
+def test_writes_keep_one_file_per_partition_value(spark, tmp_path):
+    """The table decides its own write layout: every write method leaves
+    one file per partition value it touches, however many tasks produced
+    the frame, and one file for a small unpartitioned frame."""
+    from kfts_insar_spark.sources.snapshot import SnapshotTable
+
+    t = SnapshotTable(str(tmp_path / "t"))
+    df = spark.range(0, 3000, 1, 8).selectExpr(
+        "id", "id % 7 AS v", "concat('d', CAST(id % 3 AS STRING)) AS pday"
+    )
+    t.append(df, partition_by=["pday"])
+    assert sorted(e["partition"]["pday"] for e in t.last_commit_files) == [
+        "d0", "d1", "d2"
+    ]
+
+    small = spark.range(0, 100, 1, 8).selectExpr("id", "id % 7 AS v")
+    s = SnapshotTable(str(tmp_path / "s"))
+    s.commit_staged(s.stage_all(small))
+    assert len(s.manifest()["files"]) == 1
+    s.overwrite_all(small)
+    assert len(s.manifest()["files"]) == 1
+
+    before = {e["path"] for e in t.manifest()["files"]}
+    t.upsert(
+        spark,
+        spark.range(0, 60, 1, 8).filter("id % 3 < 2").selectExpr(
+            "id", "-1L AS v", "concat('d', CAST(id % 3 AS STRING)) AS pday"
+        ),
+        key_cols=["id"],
+        partition_by=["pday"],
+    )
+    added = [e for e in t.manifest()["files"] if e["path"] not in before]
+    assert sorted(e["partition"]["pday"] for e in added) == ["d0", "d1"]
+    assert t.read(spark).count() == 3000
 
 
 def test_resumed_runs_in_one_day_keep_one_gap_file(spark, seq, tmp_path_factory):
@@ -475,6 +517,64 @@ def test_correct_raw_restates_tiers(spark, seq, tmp_path):
         for r in pipe.read_tier(spark, "1h").select(*TIER_COLS).collect()
     )
     assert have == want
+
+
+def test_correct_raw_refuses_raw_vs_derived_crash_window(spark, tmp_path):
+    """In the raw-vs-derived crash window a restatement would stamp raw's
+    watermark on the restated days' tiers, and the heal would then never
+    derive the stopped increment's other days: correct_raw refuses before
+    it writes anything, naming each lagging table and both watermarks.
+    After the heal the same restatement equals a cold run with it."""
+    from kfts_insar_spark.operators.rollup import rollup_raw
+
+    seq3 = sequences(spark, N, docs_per_batch=5)  # spans four UTC days
+    split_es = seq3.approxQuantile("ingest_es", [0.5], 0)[0]
+    cold = TierPipeline(str(tmp_path / "cold"), kf_shards=4)
+    cold.run(spark, seq3)
+    pipe = TierPipeline(str(tmp_path / "p"), kf_shards=4)
+    pipe.run(spark, seq3.filter(F.col("ingest_es") <= split_es))
+    wm = int(pipe.raw.property("watermark_es"))
+    # simulate the crash: commit ONLY the raw increment of the second half
+    fresh = seq3.filter(F.col("ingest_es") > wm)
+    hi = int(fresh.agg(F.max("ingest_es")).first()[0])
+    pipe.raw.append(
+        rollup_raw(fresh, with_max_ingest=True).withColumn(
+            "pday",
+            F.date_format(F.timestamp_seconds(F.col("bucket_es")), "yyyy-MM-dd"),
+        ),
+        partition_by=["pday"],
+        properties={"watermark_es": hi},
+        stats_cols=["max_ies"],
+    )
+    tables = (pipe.raw, pipe.h1, pipe.d1, pipe.comp, pipe.series, pipe.gap,
+              pipe.kf_state)
+    sids = [t.current_snapshot_id() for t in tables]
+
+    raw = cold.read_tier(spark, "raw")
+    victim = raw.orderBy("bucket_es", "source").first()  # the oldest bucket
+    cor = raw.filter(
+        (F.col("source") == victim.source)
+        & (F.col("bucket_es") == victim.bucket_es)
+    ).select(
+        "source", "bucket_es", "n_docs",
+        (F.col("sum_tok") + 1000).alias("sum_tok"),
+        "min_tok", "max_tok",
+    )
+    lag = "".join(
+        f"{name} watermark_es={wm}.*"
+        for name in ("tier_1h", "tier_1d", "tier_compressed", "tier_series")
+    )
+    with pytest.raises(
+        ValueError, match=rf"{lag}watermark_es={hi} .*run the pipeline first"
+    ):
+        pipe.correct_raw(spark, cor)
+    assert [t.current_snapshot_id() for t in tables] == sids
+
+    assert pipe.run(spark, seq3)["status"] == "noop"
+    assert pipe.correct_raw(spark, cor)["status"] == "restated"
+    cold.correct_raw(spark, cor)
+    for tier in ("raw", "1h", "1d"):
+        assert _tier_rows(spark, cold, tier) == _tier_rows(spark, pipe, tier), tier
 
 
 def test_schema_evolution_read(spark, tmp_path):
@@ -1171,11 +1271,11 @@ def test_compact_keeps_added_column_and_stats(spark, tmp_path):
 
     t = SnapshotTable(str(tmp_path / "t"))
     base = spark.range(3).selectExpr("id AS k", "id * 10 AS v", "'d0' AS pday")
-    s0 = t.append(base, partition_by=["pday"], coalesce=1, stats_cols=["k"])
+    s0 = t.append(base, partition_by=["pday"], stats_cols=["k"])
     wider = spark.range(3, 5).selectExpr(
         "id AS k", "id * 10 AS v", "7 AS extra", "'d0' AS pday"
     )
-    t.append(wider, partition_by=["pday"], coalesce=1, stats_cols=["k"])
+    t.append(wider, partition_by=["pday"], stats_cols=["k"])
     want = sorted(tuple(r) for r in t.read(spark).select("k", "v", "extra").collect())
     assert want == [(0, 0, None), (1, 10, None), (2, 20, None), (3, 30, 7), (4, 40, 7)]
 
