@@ -30,13 +30,10 @@ class CheckpointLog:
         os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
 
     def record(
-        self,
-        stage: str,
-        snapshot_id: int,
-        watermark_es: int,
-        files: list[dict],
-        n_rows: int,
+        self, stage: str, snapshot_id: int, watermark_es: int, files: list[dict]
     ) -> None:
+        """Log one commit: ``files`` are the entries that commit wrote (not
+        the table's), so the record stays commit-sized as history grows."""
         by_part: dict[str, dict] = {}
         for e in files:
             key = json.dumps(e["partition"], sort_keys=True)
@@ -47,7 +44,7 @@ class CheckpointLog:
             "stage": stage,
             "snapshot_id": snapshot_id,
             "watermark_es": watermark_es,
-            "n_rows": n_rows,
+            "n_rows": sum(e["rows"] for e in files),
             "total_bytes": sum(e["bytes"] for e in files),
             "partitions": [
                 {"partition": json.loads(k), **v} for k, v in sorted(by_part.items())

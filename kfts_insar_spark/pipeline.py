@@ -22,25 +22,27 @@ Run structure
 -------------
 A scheduled run costs in proportion to what changed:
 
-1. heal: bring tiers that a crashed run left behind raw's watermark up to it
-   (metadata reads only when nothing lags);
+1. catch-up: bring every table that a crashed run left behind raw's
+   watermark up to it (metadata reads only when nothing lags);
 2. probe: one emptiness check on the ingest rows past the watermark — a run
    with no new data returns ``noop`` here, before any plan, checkpoint or
    write is built;
 3. raw commit: one scan of the increment, aggregated and written in one job.
    With gap-fill on, the increment's shard partials are the run's one
    checkpoint: raw, the series commit and a resumed kernel all read them;
-4. concurrent chains: the derived tiers (1h, 1d and compressed side by side
-   from the committed raw files of the affected days), the series commit,
-   and the KF gap-fill. A resume feeds the kernel from the checkpointed
-   partials, so it does not wait for the series commit; a cold run reads
-   the committed series tier. The gap commit rewrites only the gap files
-   the resume window overlaps (footer ``bucket_es`` max at or past the
-   window's start) and adds the new rows beside the rest.
+4. catch-up again, now to the new watermark, through the same code as
+   step 1: the derived tiers (1h, 1d and compressed side by side from the
+   committed raw files of the days past their watermark), the series
+   commit and the KF gap-fill run as concurrent chains. A kernel whose
+   state sits at the partials' lower bound reads them, so it does not wait
+   for the series commit; otherwise it reads the committed series tier.
+   The gap commit rewrites only the gap files the resume window overlaps
+   (footer ``bucket_es`` max at or past the window's start) and adds the
+   new rows beside the rest.
 
 The commit order stays raw → series → gap-filled → KF state (the gap commit
 waits for the series commit, the state publish for the gap commit), so a
-crash at any point leaves a prefix that the next run's heal completes.
+crash at any point leaves a prefix that the next run's catch-up completes.
 
 The pipeline keeps no timers and has no probe mode: a run executes the same
 way whether or not it is measured. For the per-stage split, trace a run
@@ -169,18 +171,15 @@ class TierPipeline:
     def run(self, spark: SparkSession, seq: DataFrame) -> dict:
         """Process all ingest batches newer than the committed watermark.
 
-        Heal, then one emptiness probe (a run without new data returns
-        ``noop`` and writes nothing), then the raw commit, then the derived
-        tiers, the series commit and the KF gap-fill as concurrent chains;
-        the commit order stays raw → series → gap-filled → state (module
-        docstring, "Run structure")."""
+        Catch-up, then one emptiness probe (a run without new data returns
+        ``noop`` and writes nothing), then the raw commit, then the same
+        catch-up to the new watermark; the commit order stays raw → series
+        → gap-filled → state (module docstring, "Run structure")."""
         wm = int(self.raw.property("watermark_es", -1))
-        # Heal first: a crash between the raw commit and the downstream
-        # commits leaves 1h/1d/compressed/gapfilled lagging raw's watermark;
-        # without this the next run would treat the increment as already
-        # processed (raw watermark advanced) and those tiers would stay
-        # permanently short of it.
-        self._heal(spark, seq, wm)
+        # a crash between the raw commit and the downstream commits leaves
+        # those tables behind raw's watermark; the increment below would
+        # never bring them up, since raw already counts it as processed
+        self._catch_up(spark, seq, wm)
         fresh = seq.filter(F.col("ingest_es") > F.lit(wm))
         # No-op exit on one emptiness probe, before any plan, checkpoint or
         # write is built. Not a bounds read: rows that land after the probe
@@ -216,7 +215,7 @@ class TierPipeline:
                 # checkpoint truncates lineage: partitions either serve
                 # the materialization the raw commit saw, or the job
                 # FAILS (lost partitions are not recomputable) and the
-                # next run heals through the bounded fallback scan in
+                # next run's catch-up takes the bounded fallback scan in
                 # _ingest_series.
                 partial = rollup_series_partial(
                     fresh, self.kf_shards, with_max_ingest=True
@@ -239,54 +238,86 @@ class TierPipeline:
                 return {"status": "noop", "watermark_es": wm}
             new_wm = int(self.raw.property("watermark_es", wm))
             n_raw = self.raw.last_commit_rows()
-            days = self.raw.last_commit_partitions("pday")
-            self.log.record(
-                "tier_raw", sid, new_wm, self.raw.manifest()["files"], n_raw
-            )
-            result = {
+            self.log.record("tier_raw", sid, new_wm, self.raw.last_commit_files)
+            rows, sids = self._catch_up(spark, seq, new_wm, partial, wm)
+            return {
                 "status": "ok",
                 "watermark_es": new_wm,
-                "rows": {"raw": n_raw},
-                "snapshots": {"raw": sid},
+                "rows": {"raw": n_raw, **rows},
+                "snapshots": {"raw": sid, **sids},
             }
-            # ---- after the raw commit, the remaining chains run as
-            # concurrent Spark jobs, so their per-stage fixed costs (plan
-            # compile + commit) and their compute overlap:
-            # (a) the derived tiers (1h/1d/compressed) from the committed
-            #     raw files of the affected days;
-            # (b) the series commit from the checkpointed shard partials;
-            # (c) the KF gap-fill (north_star core; reference update mode).
-            #     With committed state at this increment's lower bound, the
-            #     kernel reads the same partials and starts at once — only
-            #     its gap commit waits for (b). A cold start reads the
-            #     committed series tier, so it waits for (b) first.
-            with ThreadPoolExecutor(3) as ex:
-                f_tiers = ex.submit(self._derive_tiers, spark, days, new_wm)
-                if self.run_gapfill:
-                    resume = self.kf_state.property("grid_lo") is not None and (
-                        int(self.kf_state.property("watermark_es", -1)) == wm
-                    )
-                    f_series = ex.submit(
-                        self._ingest_series, seq, new_wm,
-                        partial=partial, wm_partial=wm,
-                    )
-                    f_gap = ex.submit(
-                        self._run_gapfill, spark, new_wm,
-                        obs=partial if resume else None, series_commit=f_series,
-                    )
-                    gres = f_gap.result()
-                    # a gap chain that returned early never read the series
-                    # commit's outcome: raise its failure here
-                    f_series.result()
-                    result["rows"]["gapfilled"] = gres["n_rows"]
-                    result["snapshots"]["gapfilled"] = gres["snapshot_id"]
-                drows, dsids = f_tiers.result()
-            result["rows"].update(drows)
-            result["snapshots"].update(dsids)
-            return result
         finally:
             if partial is not None:
                 _release(partial)
+
+    def _catch_up(
+        self,
+        spark: SparkSession,
+        seq: DataFrame,
+        wm: int,
+        partial: DataFrame | None = None,
+        wm_partial: int | None = None,
+    ) -> tuple[dict, dict]:
+        """Bring 1h/1d/compressed, the series tier and the KF gap-fill up to
+        raw's committed watermark ``wm``; a table that already holds ``wm``
+        is skipped. Returns the row counts and snapshot ids of the chains
+        that ran, keyed as in :meth:`run`'s result.
+
+        ``partial`` (with ``wm_partial``, the lower bound it was filtered
+        at) is the run's checkpointed increment; the series commit and the
+        kernel read it when their table sits at that bound.
+
+        The derived tiers take the days of every current raw file that
+        holds an ingest slot past the lowest of their watermarks (footer
+        ``max_ies``; a file without stats counts): metadata only, so a
+        vacuum or compact of raw cannot widen or lose the set, and right
+        after a raw commit it is exactly the days that commit wrote. The
+        chains run as concurrent Spark jobs, so their per-stage fixed costs
+        (plan compile + commit) and their compute overlap."""
+        if wm < 0:
+            return {}, {}
+        wm_tiers = min(
+            int(t.property("watermark_es", -1)) for t in (self.h1, self.d1, self.comp)
+        )
+        days = []
+        if wm_tiers < wm:
+            days = sorted({
+                e["partition"]["pday"]
+                for e in self.raw.manifest()["files"]
+                if "pday" in e["partition"]
+                and ("max_ies" not in e.get("stats", {})
+                     or int(e["stats"]["max_ies"][1]) > wm_tiers)
+            })
+        series_lags = self.run_gapfill and (
+            int(self.series.property("watermark_es", -1)) < wm
+        )
+        gap_lags = self.run_gapfill and (
+            int(self.kf_state.property("watermark_es", -1)) < wm
+        )
+        rows, sids = {}, {}
+        if not (days or series_lags or gap_lags):
+            return rows, sids
+        with ThreadPoolExecutor(3) as ex:
+            f_tiers = ex.submit(self._derive_tiers, spark, days, wm) if days else None
+            f_series = (
+                ex.submit(self._ingest_series, seq, wm, partial, wm_partial)
+                if series_lags else None
+            )
+            if gap_lags:
+                gres = ex.submit(
+                    self._run_gapfill, spark, wm, partial, wm_partial, f_series
+                ).result()
+                rows["gapfilled"] = gres["n_rows"]
+                sids["gapfilled"] = gres["snapshot_id"]
+            if f_series:
+                # a gap chain that returned early never read the series
+                # commit's outcome: raise its failure here
+                f_series.result()
+            if f_tiers:
+                drows, dsids = f_tiers.result()
+                rows.update(drows)
+                sids.update(dsids)
+        return rows, sids
 
     def _ingest_series(
         self,
@@ -299,10 +330,11 @@ class TierPipeline:
         ingest slots in (series watermark, upto] — idempotent per slot.
 
         ``partial`` (with ``wm_partial``, the lower bound it was filtered
-        at) reuses the persisted shard partials from the raw ingest when the
-        series watermark sits exactly at that bound — the normal path after
-        healing; no second base scan. Any other alignment (crash heal with a
-        lagging series tier) falls back to a bounded scan of ``seq``."""
+        at) reuses the raw ingest's checkpointed shard partials (a
+        ``localCheckpoint``) when the series watermark sits exactly at that
+        bound — the normal path after a run's raw commit; no second base
+        scan. Any other alignment (a series tier that a crashed run left
+        behind) falls back to a bounded scan of ``seq``."""
         wm_s = int(self.series.property("watermark_es", -1))
         if wm_s >= upto:
             return
@@ -324,13 +356,7 @@ class TierPipeline:
             properties={"watermark_es": upto},
             stats_cols=["bucket_es"],
         )
-        self.log.record(
-            "tier_series",
-            sid,
-            upto,
-            self.series.manifest()["files"],
-            self.series.last_commit_rows(),
-        )
+        self.log.record("tier_series", sid, upto, self.series.last_commit_files)
 
     def _derive_tiers(
         self, spark: SparkSession, days: list, wm: int
@@ -338,8 +364,8 @@ class TierPipeline:
         """Recompute the 1h/1d/compressed tiers for the affected ``days``
         and overwrite those partitions, from the committed raw files of
         those days (manifest-level FILE pruning with ``where=``: no
-        full-tier scan, no per-day plan nodes). The same read serves a
-        run, a heal and a restatement."""
+        full-tier scan, no per-day plan nodes). The same read serves
+        the catch-up and a restatement."""
         dayset = set(days)
         # one frame of the affected raw days, shared by all three tiers
         raw_days = (
@@ -354,7 +380,7 @@ class TierPipeline:
                 ["pday"],
                 properties={"watermark_es": wm, **(props or {})},
             )
-            return sid, tbl.last_commit_rows(), tbl.manifest()["files"]
+            return sid, tbl.last_commit_rows(), tbl.last_commit_files
 
         def write_compressed():
             # ---- compressed raw chunks for affected days (Gorilla).
@@ -398,50 +424,20 @@ class TierPipeline:
                 sid_c, n_c, files_c = f_c.result()
         finally:
             raw_days.unpersist()
-        self.log.record("tier_1h", sid_h, wm, files_h, n_h)
-        self.log.record("tier_1d", sid_d, wm, files_d, n_d)
-        self.log.record("tier_compressed", sid_c, wm, files_c, n_c)
+        self.log.record("tier_1h", sid_h, wm, files_h)
+        self.log.record("tier_1d", sid_d, wm, files_d)
+        self.log.record("tier_compressed", sid_c, wm, files_c)
         return (
             {"1h": n_h, "1d": n_d, "compressed": n_c},
             {"1h": sid_h, "1d": sid_d, "compressed": sid_c},
         )
 
-    def _heal(self, spark: SparkSession, seq: DataFrame, wm_raw: int) -> None:
-        """Bring downstream tiers up to raw's committed watermark before
-        processing new data (crash-resume for a failure between the raw
-        commit and any downstream commit)."""
-        if wm_raw < 0:
-            return
-        lagging = [
-            t
-            for t in (self.h1, self.d1, self.comp)
-            if int(t.property("watermark_es", -1)) < wm_raw
-        ]
-        if lagging:
-            # the days of every current raw file that holds an ingest slot
-            # past the most lagging watermark (footer max_ies; a file
-            # without stats counts): metadata only, and a vacuum or compact
-            # of raw cannot widen or lose the set
-            wm_lag = min(int(t.property("watermark_es", -1)) for t in lagging)
-            days = sorted({
-                e["partition"]["pday"]
-                for e in self.raw.manifest()["files"]
-                if "pday" in e["partition"]
-                and ("max_ies" not in e.get("stats", {})
-                     or int(e["stats"]["max_ies"][1]) > wm_lag)
-            })
-            if days:
-                self._derive_tiers(spark, days, wm_raw)
-        if self.run_gapfill:
-            self._ingest_series(seq, wm_raw)
-            if int(self.kf_state.property("watermark_es", -1)) < wm_raw:
-                self._run_gapfill(spark, wm_raw)
-
     def _run_gapfill(
         self,
         spark: SparkSession,
         wm: int,
-        obs: DataFrame | None = None,
+        partial: DataFrame | None = None,
+        wm_partial: int | None = None,
         series_commit=None,
     ) -> dict:
         """Gap-fill the (source, shard) sub-series with the Kalman kernel.
@@ -452,13 +448,15 @@ class TierPipeline:
         it), grid bounds from committed metadata, parallelism 5 × kf_shards
         instead of 5.
 
-        ``obs`` holds the run's new series rows (the in-memory shard
-        partials) when the committed state sits at the increment's lower
-        bound. The kernel needs nothing else: a resumed doc's loop consumes
-        only steps at or after its ``k_done``, whose buckets lie past the
+        ``partial`` (with ``wm_partial``, the lower bound it was filtered
+        at) holds the run's new series rows, the checkpointed shard
+        partials. When the committed state sits at that bound the kernel
+        reads them and nothing else: a resumed doc's loop consumes only
+        steps at or after its ``k_done``, whose buckets lie past the
         committed watermark (so all their rows are in this increment), and a
-        sub-series first seen in the increment has no earlier rows. Without
-        ``obs`` (cold start, heal) the committed series tier is read.
+        sub-series first seen in the increment has no earlier rows.
+        Otherwise (cold start, a state that a crashed run left behind) the
+        kernel reads the committed series tier from ``cover_min`` on.
         ``series_commit`` is the future of this run's series commit: the
         tier read and the gap commit wait for it, so commits land raw →
         series → gap → state.
@@ -481,63 +479,63 @@ class TierPipeline:
         import numpy as np
 
         lo = self.kf_state.property("grid_lo")
-        series_now = None
-        if obs is None:
+        resume = (
+            partial is not None
+            and lo is not None
+            and int(self.kf_state.property("watermark_es", -1)) == wm_partial
+        )
+        if not resume:
             if series_commit is not None:
                 series_commit.result()
-            # existence from the manifest alone — building the full-table
-            # scan DataFrame costs a driver-side file-listing/py4j round trip
-            # that the resumed path (which reads only the pruned window
-            # below) never uses
+            # existence from the manifest alone: building the scan DataFrame
+            # costs a driver-side file-listing/py4j round trip
             m_series = self.series.manifest()
             if m_series is None or not m_series["files"]:
                 return {"n_rows": 0, "snapshot_id": self.gap.current_snapshot_id()}
             # lo is the committed grid origin; only the very first run (no
             # state yet) derives it — from the manifest's footer stats when
-            # every file carries them (zero Spark jobs), else by a scan
+            # every file carries them (zero Spark jobs), else from the scan
             if lo is None:
                 stats = [
                     e.get("stats", {}).get("bucket_es") for e in m_series["files"]
                 ]
                 if all(s is not None for s in stats):
                     lo = min(int(s[0]) for s in stats)
-                else:
-                    series_now = self.series.read(spark)
-                    lo = series_now.agg(F.min("bucket_es")).first()[0]
+        prev = self.kf_state.read(spark)
+        idx0 = int(self.kf_state.property("idx0", 0)) if prev is not None else 0
+        if resume:
+            scan = partial
+        else:
+            # One tier scan, pruned at cover_min: the kernel re-emits
+            # [idx0, k_done) from state and consumes >= k_done, so scanning
+            # the WHOLE series history every run would make the per-run cost
+            # grow with total history. Two metadata pruning levels before the
+            # scan: partition (pday) and footer bucket_es max — a file whose
+            # newest bucket is older than the window never opens. A cold
+            # start has cover_min = lo and keeps every file; without lo yet
+            # (a file without stats) the scan keeps every file and gives lo.
+            cover_min = None if lo is None else int(lo) + idx0 * RAW_SECONDS
+            cut_day = "" if cover_min is None else _day(cover_min)
+            scan = self.series.read(
+                spark,
+                where=lambda p: p.get("pday", "") >= cut_day,
+                stats_where=lambda s: cover_min is None
+                or "bucket_es" not in s
+                or int(s["bucket_es"][1]) >= cover_min,
+            )
+            if lo is None:
+                lo = scan.agg(F.min("bucket_es")).first()[0]
+            else:
+                scan = scan.filter(F.col("bucket_es") >= F.lit(cover_min))
         lo = int(lo)
+        cover_min = lo + idx0 * RAW_SECONDS
         # hi is implied by the run watermark (bucket_es = bucket(ingest_es)
         # and wm is the max ingest_es committed this run) — no history scan
         hi = (int(wm) // RAW_SECONDS) * RAW_SECONDS
         m = int((hi - lo) // RAW_SECONDS) + 1
-        prev = self.kf_state.read(spark)
-        k_done_prev = int(self.kf_state.property("k_done", 0))
-        if prev is not None and m <= k_done_prev:
+        if prev is not None and m <= int(self.kf_state.property("k_done", 0)):
             return {"n_rows": 0, "snapshot_id": self.gap.current_snapshot_id()}
         t_grid = np.arange(m) * (RAW_SECONDS / DAY_SECONDS)
-        cover_min_step = (
-            int(self.kf_state.property("idx0", 0)) if prev is not None else 0
-        )
-        cover_min = lo + cover_min_step * RAW_SECONDS
-
-        if obs is not None:
-            scan = obs
-        elif cover_min_step > 0:
-            # Incremental tier scan: with committed state, only steps inside
-            # the resume window matter (the kernel re-emits [idx0, k_done)
-            # from state and consumes >= k_done) — scanning the WHOLE series
-            # history every run would make the per-run cost grow with total
-            # history. Two metadata pruning levels before the scan: partition
-            # (pday) and footer bucket_es max — a file whose newest bucket is
-            # older than the resume window never opens.
-            cut_day = _day(cover_min)
-            scan = self.series.read(
-                spark,
-                where=lambda p: p.get("pday", "") >= cut_day,
-                stats_where=lambda s: "bucket_es" not in s
-                or int(s["bucket_es"][1]) >= cover_min,
-            ).filter(F.col("bucket_es") >= F.lit(cover_min))
-        else:
-            scan = series_now if series_now is not None else self.series.read(spark)
 
         wide = _subseries_wide(scan, lo)
         if prev is not None:
@@ -555,11 +553,11 @@ class TierPipeline:
             # COMMIT ORDER IS LOAD-BEARING: output tier FIRST, state SECOND.
             # If the state commit (watermark_es/k_done advanced) landed
             # before the output commit and the process crashed in between,
-            # _heal would see kf_state caught up and skip the gap re-run,
-            # and the early return above (m <= k_done_prev) would refuse to
-            # re-emit — the increment's gap-filled rows would be permanently
+            # the catch-up would see kf_state caught up and skip the gap
+            # re-run, and the early return above (m <= k_done) would refuse
+            # to re-emit — the increment's gap-filled rows would be permanently
             # lost. With output-first, a crash leaves the gap tier at wm and
-            # the state behind it. The next run's heal re-runs the kernel
+            # the state behind it. The next run's catch-up re-runs the kernel
             # from that state and publishes ONLY the state: the window's gap
             # rows are committed already, and a second gap write would add
             # a second copy of the early rows of any sub-series born in the
@@ -574,7 +572,7 @@ class TierPipeline:
                 self.kf_state.stage_all,
                 combined.select("doc_id", "k_done", "idx0", "m", "P"),
             )
-            sid, n_rows = self.gap.current_snapshot_id(), 0
+            sid, files = self.gap.current_snapshot_id(), []
             if int(self.gap.property("watermark_es", -1)) < wm:
                 rows = _gap_rows(combined, t_grid, lo)
                 m_gap = self.gap.manifest()
@@ -618,7 +616,7 @@ class TierPipeline:
                     stats_cols=["bucket_es"],
                     replace=redo,
                 )
-                n_rows = self.gap.last_commit_rows()
+                files = self.gap.last_commit_files
             # the state's idx0 is uniform across docs (grid-determined): L
             # kept params + last t_sep phases → idx0 = m − t_sep.
             # Gap commit has landed — NOW publish the staged state.
@@ -634,8 +632,8 @@ class TierPipeline:
         finally:
             state_pool.shutdown(wait=True)
             combined.unpersist()
-        self.log.record("tier_gapfilled", sid, wm, self.gap.manifest()["files"], n_rows)
-        return {"n_rows": n_rows, "snapshot_id": sid}
+        self.log.record("tier_gapfilled", sid, wm, files)
+        return {"n_rows": sum(e["rows"] for e in files), "snapshot_id": sid}
 
     # ---------------------------------------------------------- restatement
     def correct_raw(self, spark: SparkSession, corrections: DataFrame) -> dict:
@@ -697,10 +695,7 @@ class TierPipeline:
             stats_cols=["max_ies"],
         )
         days = self.raw.last_commit_partitions("pday")
-        self.log.record(
-            "tier_raw_restate", sid, wm, self.raw.manifest()["files"],
-            self.raw.last_commit_rows(),
-        )
+        self.log.record("tier_raw_restate", sid, wm, self.raw.last_commit_files)
         drows, dsids = self._derive_tiers(spark, days, wm)
         return {
             "status": "restated",
@@ -792,8 +787,7 @@ class TierPipeline:
                 "tier_series_restate",
                 sid_s,
                 int(self.series.property("watermark_es", -1)),
-                self.series.manifest()["files"],
-                self.series.last_commit_rows(),
+                self.series.last_commit_files,
             )
             n_reb = self._rebuild_gapfill(spark, pairs)
             res["rebuilt_subseries"] = len(pairs)
@@ -865,8 +859,7 @@ class TierPipeline:
             "tier_gapfilled_rebuild",
             sid,
             int(self.gap.property("watermark_es", -1)),
-            self.gap.manifest()["files"],
-            n_rows,
+            self.gap.last_commit_files,
         )
         return n_rows
 

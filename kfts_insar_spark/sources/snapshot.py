@@ -542,15 +542,12 @@ class SnapshotTable:
         self,
         spark: SparkSession,
         target_bytes: int = 128 * 1024 * 1024,
-        min_files: int = 2,
-        where=None,
     ) -> dict:
         """Bin-pack small data files (Iceberg ``rewrite_data_files``): in
-        every partition holding ≥ ``min_files`` files under ``target_bytes``,
+        every partition holding two or more files under ``target_bytes``,
         rewrite those files into ~target-sized ones and commit a ``replace``
         snapshot. Logical content is unchanged; prior snapshots still see
-        the old files until :meth:`vacuum`. ``where`` restricts compaction
-        to matching partitions (e.g. only closed days).
+        the old files until :meth:`vacuum`.
 
         This is the maintenance half of streaming/incremental ingest at
         scale: each micro-batch append leaves per-partition small files,
@@ -563,17 +560,13 @@ class SnapshotTable:
             return {"partitions": 0, "files_before": 0, "files_after": 0}
         by_part: dict[tuple, list[dict]] = {}
         for e in m["files"]:
-            if where is not None and not where(e["partition"]):
-                continue
             if e.get("bytes", target_bytes) >= target_bytes:
                 continue
             by_part.setdefault(tuple(sorted(e["partition"].items())), []).append(e)
-        victims = [
-            e for group in by_part.values() if len(group) >= min_files for e in group
-        ]
+        groups = [g for g in by_part.values() if len(g) >= 2]
+        victims = [e for g in groups for e in g]
         if not victims:
             return {"partitions": 0, "files_before": 0, "files_after": 0}
-        n_parts = sum(1 for g in by_part.values() if len(g) >= min_files)
 
         keys = sorted({k for e in victims for k in e["partition"]})
         stats = sorted({c for e in victims for c in e.get("stats", {})})
@@ -583,7 +576,7 @@ class SnapshotTable:
             replace=victims,
         )
         return {
-            "partitions": n_parts,
+            "partitions": len(groups),
             "files_before": len(victims),
             "files_after": len(self.last_commit_files),
         }
@@ -625,7 +618,6 @@ class SnapshotTable:
         snapshot_id: int | None = None,
         where=None,
         stats_where=None,
-        merge_schema: bool = False,
     ) -> DataFrame | None:
         """Read a snapshot as ONE parquet scan. ``where`` (a callable on
         the per-file partition dict) prunes FILES from the manifest before
@@ -634,13 +626,6 @@ class SnapshotTable:
         ``{col: [min, max]}``) additionally prunes on the footer statistics
         recorded at write time (Iceberg manifest min/max pruning); files
         written without stats are conservatively kept.
-
-        ``merge_schema=True`` is the schema-evolution read (Iceberg
-        add-column semantics): commits may add columns over time, and the
-        scan resolves the union schema with NULL backfill for files
-        written before a column existed. Off by default — schema merging
-        reads every footer up front, which the steady-state tier reads
-        (stable schema) should not pay.
 
         Partition columns live in directory names; they are recovered from
         the file path with ``input_file_name()`` inside the single scan —
@@ -658,29 +643,22 @@ class SnapshotTable:
                 for e in entries
                 if "stats" not in e or stats_where(e["stats"])
             ]
-        return self._scan(spark, m, entries, merge_schema) if entries else None
+        return self._scan(spark, m, entries) if entries else None
 
-    def _scan(
-        self,
-        spark: SparkSession,
-        m: dict,
-        entries: list[dict],
-        merge_schema: bool = False,
-    ) -> DataFrame:
+    def _scan(self, spark: SparkSession, m: dict, entries: list[dict]) -> DataFrame:
         """One parquet scan over ``entries`` of manifest ``m``, with the
         partition columns recovered from each file's path."""
         from pyspark.sql import functions as F
 
         keys = sorted({k for e in entries for k in e["partition"]})
         reader = spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        elif m.get("schema"):
+        if m.get("schema"):
             # write-time schema from the manifest: the scan skips driver-side
             # footer schema inference, and every file reads with the
-            # manifest's columns: files from pre-widening commits backfill
-            # NULL, as under mergeSchema. A commit that would drop or retype
-            # a column older files carry is refused (_check_inherited_schema).
+            # manifest's columns, so files from pre-widening commits backfill
+            # NULL (Iceberg add-column semantics). A commit that would drop or
+            # retype a column older files carry is refused
+            # (_check_inherited_schema).
             from pyspark.sql.types import StructType
 
             reader = reader.schema(StructType.fromJson(json.loads(m["schema"])))

@@ -90,22 +90,51 @@ def test_retention_and_time_travel(spark, tmp_path):
     }
 
 
-def test_checkpoint_lineage_records_all_stages(spark, seq, tmp_path):
-    pipe = TierPipeline(str(tmp_path))
-    pipe.run(spark, seq)
+def test_checkpoint_lineage_records_all_stages(spark, tmp_path):
+    """Each record describes the commit it logs: its partitions, files,
+    bytes and rows are those of the files that commit wrote, not of the
+    whole table. A resumed run's raw record lists only its increment's
+    days, so a day the first run holds and the second does not touch is
+    absent from it."""
+    seq2 = sequences(spark, N, docs_per_batch=8)  # ≥ 2 UTC days of buckets
+    split = int(seq2.approxQuantile("ingest_es", [0.75], 0)[0])
+    pipe = TierPipeline(str(tmp_path), kf_shards=4)
+    pipe.run(spark, seq2.filter(F.col("ingest_es") <= split))
+    n_first = len(pipe.log.entries())
+    pipe.run(spark, seq2)
     entries = pipe.log.entries()
-    stages = {e["stage"] for e in entries}
-    assert stages == {
-        "tier_raw",
-        "tier_series",
-        "tier_1h",
-        "tier_1d",
-        "tier_compressed",
-        "tier_gapfilled",
+    tables = {
+        "tier_raw": pipe.raw,
+        "tier_series": pipe.series,
+        "tier_1h": pipe.h1,
+        "tier_1d": pipe.d1,
+        "tier_compressed": pipe.comp,
+        "tier_gapfilled": pipe.gap,
     }
+    for run_entries in (entries[:n_first], entries[n_first:]):
+        assert sorted(e["stage"] for e in run_entries) == sorted(tables)
     for e in entries:
         assert e["n_rows"] > 0 and e["total_bytes"] > 0
         assert all("bytes" in p and "n_files" in p for p in e["partitions"])
+        tbl = tables[e["stage"]]
+        m = tbl.manifest(e["snapshot_id"])
+        parent = tbl.manifest(m["parent_id"]) if m["parent_id"] is not None else None
+        old = {f["path"] for f in (parent or {}).get("files", [])}
+        written = [f for f in m["files"] if f["path"] not in old]
+        assert sum(p["n_files"] for p in e["partitions"]) == len(written), e["stage"]
+        assert e["total_bytes"] == sum(f["bytes"] for f in written), e["stage"]
+        assert e["n_rows"] == sum(f["rows"] for f in written), e["stage"]
+
+    [raw1, raw2] = [e for e in entries if e["stage"] == "tier_raw"]
+    days1 = {p["partition"]["pday"] for p in raw1["partitions"]}
+    days2 = {p["partition"]["pday"] for p in raw2["partitions"]}
+    inc_days = {
+        r.pday
+        for r in pipe.raw.read_incremental(spark, raw1["snapshot_id"])
+        .select("pday").distinct().collect()
+    }
+    assert days2 == inc_days
+    assert days1 - days2, "the second run touches every day of the first"
 
 
 def test_vacuum_drops_only_expired(spark, seq, tmp_path):
@@ -155,26 +184,30 @@ def test_heal_after_crash_between_commits(spark, seq, tmp_path_factory):
     commits must be healed on the next run, even if no new data arrives.
     The heal takes its days from the current raw manifest, so a maintenance
     pass (compact + vacuum down to one snapshot) in between changes
-    nothing."""
+    nothing. A run that heals and then ingests new data in one go ends
+    where the one-shot run does, at every table."""
     from kfts_insar_spark.operators.rollup import rollup_raw
 
-    one = TierPipeline(str(tmp_path_factory.mktemp("heal_one")))
-    one.run(spark, seq)
-
-    split_es = seq.approxQuantile("ingest_es", [0.5], 0)[0]
-    for maintain in (False, True):
-        pipe = TierPipeline(str(tmp_path_factory.mktemp("heal_two")))
-        pipe.run(spark, seq.filter(F.col("ingest_es") <= split_es))
-
-        # simulate the crash: commit ONLY the raw increment of batch 2
+    def commit_raw_only(pipe, upto):
+        # simulate the crash: commit ONLY the raw increment up to ``upto``
         wm = int(pipe.raw.property("watermark_es"))
-        fresh = seq.filter(F.col("ingest_es") > wm)
+        fresh = seq.filter((F.col("ingest_es") > wm) & (F.col("ingest_es") <= upto))
         hi = int(fresh.agg(F.max("ingest_es")).first()[0])
         inc = rollup_raw(fresh, with_max_ingest=True).withColumn(
             "pday",
             F.date_format(F.timestamp_seconds(F.col("bucket_es")), "yyyy-MM-dd"),
         )
         pipe.raw.append(inc, partition_by=["pday"], properties={"watermark_es": hi})
+
+    one = TierPipeline(str(tmp_path_factory.mktemp("heal_one")))
+    one.run(spark, seq)
+    end_es = int(seq.agg(F.max("ingest_es")).first()[0])
+
+    split_es = seq.approxQuantile("ingest_es", [0.5], 0)[0]
+    for maintain in (False, True):
+        pipe = TierPipeline(str(tmp_path_factory.mktemp("heal_two")))
+        pipe.run(spark, seq.filter(F.col("ingest_es") <= split_es))
+        commit_raw_only(pipe, end_es)
         if maintain:
             pipe.maintain(spark, keep_snapshots=1)
             assert len(pipe.raw.snapshots()) == 1
@@ -185,6 +218,18 @@ def test_heal_after_crash_between_commits(spark, seq, tmp_path_factory):
             assert _tier_rows(spark, one, tier) == _tier_rows(spark, pipe, tier), (
                 tier, maintain,
             )
+
+    # heal and increment in one run: the first third runs, raw alone commits
+    # the second third, then a run over the whole source heals the second
+    # third and ingests the last
+    cuts = seq.approxQuantile("ingest_es", [1 / 3, 2 / 3], 0)
+    pipe = TierPipeline(str(tmp_path_factory.mktemp("heal_inc")))
+    pipe.run(spark, seq.filter(F.col("ingest_es") <= cuts[0]))
+    commit_raw_only(pipe, cuts[1])
+    assert pipe.run(spark, seq)["status"] == "ok"
+    for tier in ("raw", "1h", "1d", "compressed", "series", "gapfilled"):
+        assert _tier_rows(spark, one, tier) == _tier_rows(spark, pipe, tier), tier
+    assert _state_rows(spark, pipe) == _state_rows(spark, one)
 
 
 def test_gapfill_parallelism_shape(spark, seq, tmp_path):
@@ -220,7 +265,7 @@ def test_compact_binpacks_small_files(spark, seq, tmp_path):
         per_day.setdefault(e["partition"].get("pday"), []).append(e)
     assert any(len(v) >= 2 for v in per_day.values()), "fixture has no small files"
 
-    res = raw.compact(spark, target_bytes=128 * 1024 * 1024, min_files=2)
+    res = raw.compact(spark, target_bytes=128 * 1024 * 1024)
     assert res["partitions"] >= 1
     assert res["files_after"] < res["files_before"]
     assert len(raw.manifest()["files"]) < files_before
@@ -579,7 +624,7 @@ def test_correct_raw_refuses_raw_vs_derived_crash_window(spark, tmp_path):
 
 def test_schema_evolution_read(spark, tmp_path):
     """Iceberg add-column semantics: later commits may add columns; a
-    merge_schema read resolves the union schema with NULL backfill for
+    read resolves the manifest's schema with NULL backfill for
     pre-evolution files, and time travel still sees the old schema."""
     import pandas as pd
 
@@ -600,12 +645,12 @@ def test_schema_evolution_read(spark, tmp_path):
         ),
         partition_by=["pday"],
     )
-    evo = t.read(spark, merge_schema=True)
+    evo = t.read(spark)
     assert "quality" in evo.columns
     rows = {r.k: r.quality for r in evo.select("k", "quality").collect()}
     assert rows[3] == pytest.approx(0.9)
     assert rows[1] is None and rows[2] is None  # NULL backfill
-    old = t.read(spark, snapshot_id=sid0, merge_schema=True)
+    old = t.read(spark, snapshot_id=sid0)
     assert "quality" not in old.columns  # time travel: pre-evolution schema
 
 
@@ -1279,7 +1324,7 @@ def test_compact_keeps_added_column_and_stats(spark, tmp_path):
     want = sorted(tuple(r) for r in t.read(spark).select("k", "v", "extra").collect())
     assert want == [(0, 0, None), (1, 10, None), (2, 20, None), (3, 30, 7), (4, 40, 7)]
 
-    res = t.compact(spark, min_files=2)
+    res = t.compact(spark)
     assert (res["files_before"], res["files_after"]) == (2, 1)
     assert "extra" in t.manifest()["schema"]
     got = t.read(spark).select("k", "v", "extra").collect()
